@@ -159,7 +159,8 @@ object Bench {
     * combined capture (sbt re-tags stderr as `[error]` stdout lines).
     * Everything that can still write a line — the artifact note AND
     * spark.stop()'s shutdown logging — now runs BEFORE the JSON print.
-    * BenchEmitSpec pins the ordering.
+    * A failing stop() is reported on stderr and cannot suppress the JSON
+    * line. BenchEmitSpec pins the ordering.
     */
   private[graft] def emitResult(line: String, out: java.nio.file.Path,
                                 stop: () => Unit,
@@ -167,7 +168,10 @@ object Bench {
                                 stderr: String => Unit): Unit = {
     java.nio.file.Files.write(out, (line + "\n").getBytes("UTF-8"))
     stderr(s"[bench] wrote $out")
-    stop()
+    try stop()
+    catch {
+      case scala.util.control.NonFatal(e) => stderr(s"[bench] stop failed: $e")
+    }
     stdout(line)
   }
 }

@@ -87,7 +87,7 @@ object MoreLikeThis {
     * (Indexer.buildBucketedIndex tables) for one probe document — the
     * online serving shape behind the CLI's `similar` command. Returns
     * (rank, doc_id, title, cosine); the title attaches to the k winners
-    * only, mirroring Search.search's display join. The weight derivation
+    * only, mirroring Search.batchSearch's display join. The weight derivation
     * reads the stored postings/term_df/doc_info — no re-tokenization; at
     * scale the probe-vector extraction is the one full-postings pass a
     * doc-keyed projection of the index would also eliminate.

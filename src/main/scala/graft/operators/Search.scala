@@ -1,25 +1,32 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The flagship ranking query — the reference's entire `query.py` driver loop
   * (app/query.py:149-197) re-expressed as ONE lazy DataFrame plan:
   *
-  *   terms ⋈ term_df ⋈ postings ⋈ doc_info
-  *     → withColumn(score) → groupBy(doc_id).sum → orderBy desc → limit k
+  *   postings ⋈ term_df (both pruned to the query terms)
+  *     → groupBy(doc_id) collect (df, tf)
+  *     ⋈ doc_info (doc_id, length, title) → score → top k → re-sort k rows
   *
-  * Catalyst/AQE picks the physical strategy. The query-terms side is a tiny
-  * literal relation, so both term joins become broadcast hash joins with the
-  * terms side broadcast — postings are filtered to the query terms *at the
-  * probe*, never materialized in full. The final top-k plans as
-  * TakeOrderedAndProject (bounded per-partition heap + driver merge), the
-  * distributed equivalent of the reference's `takeOrdered(10)`.
+  * The pruned term_df holds one row per query term and broadcasts into the
+  * postings probe, so postings are filtered to the query terms at the scan
+  * and never materialized in full. Each candidate document is scored once,
+  * after the one doc_id exchange: its ≤ |query terms| (df, tf) pairs fold
+  * through the BM25 formula in a higher-order `aggregate`, and doc_info is
+  * read once, for length and title together. The top-k cut is one
+  * TakeOrderedAndProject (the distributed `takeOrdered(10)` of the
+  * reference); the k winners are re-sorted on the display grid inside their
+  * single partition, with no exchange.
   *
-  * Scale: with postings bucketed by term, the only remaining shuffle is the
-  * per-doc score sum over the (small) candidate set. No collect() anywhere
-  * until the final k rows.
+  * Collection stats (n_docs, avg_len) enter the chain as a parameter: an
+  * in-plan singleton aggregate for DataFrame inputs, and a driver-side memo
+  * for persisted indexes, keyed by the doc_info table's file set (the
+  * reference reads them once per session, app/query.py:52-61). A point
+  * search over a persisted index runs 4 Spark jobs on a memo hit, and 6 on
+  * a miss (the first search of a driver, or the first after an index write).
   */
 object Search {
 
@@ -49,78 +56,140 @@ object Search {
 
   /** Per-(term, doc) BM25 components for a query — the plan up to but
     * excluding the final per-doc sum (reference J1+J2+J3+F9+F10).
-    * Columns: (term, doc_id, tf, df, length, n_docs, avg_len, idf, score).
+    * Columns: (doc_id, term, df, tf, length, n_docs, avg_len, idf, score).
     */
   def termComponents(spark: SparkSession, query: String,
                      postings: DataFrame, termDf: DataFrame,
                      docInfo: DataFrame): DataFrame =
-    componentsOver(queryTerms(spark, query), postings, termDf, docInfo)
-
-  /** The scoring chain over an arbitrary (small) terms relation — shared
-    * by the literal-query path and the fuzzy-expanded path.
-    */
-  private def componentsOver(terms: DataFrame,
-                             postings: DataFrame, termDf: DataFrame,
-                             docInfo: DataFrame): DataFrame = {
-    // Collection stats (A4/A5) join in as a broadcast singleton — no driver
-    // action during plan construction, so the whole search stays ONE lazy
-    // DAG (the reference caches stats per session, app/query.py:52-61; the
-    // deferred-plan form subsumes that).
-    val stats = docInfo.agg(
-      count(lit(1)).cast("double").as("n_docs"),
-      avg(col("length")).as("avg_len"))
-
-    // J1 + P6: inner join drops df==0 terms (terms absent from the index
-    // simply have no match). Broadcast the tiny terms relation.
-    // J2: postings fetch; J3: doc length attach; J4: stats broadcast.
-    broadcast(terms)
-      .join(termDf, "term")
-      .join(postings.select("term", "doc_id", "tf"), "term")
-      .join(docInfo.select("doc_id", "length"), "doc_id")
-      .crossJoin(broadcast(stats))
+    planStats(docInfo)(broadcast(queryTerms(spark, query))
+        .join(termDf, "term")
+        .join(postings.select("term", "doc_id", "tf"), "term")
+        .join(docInfo.select("doc_id", "length"), "doc_id"))
       .withColumn("idf", BM25.idf(col("n_docs"), col("df")))
       .withColumn("score",
         BM25.termScore(col("tf"), col("idf"), col("length"), col("avg_len")))
+
+  /** Attaches the collection stats (n_docs, avg_len) to a frame as two
+    * columns — how the BM25 chains receive them.
+    */
+  private type Stats = DataFrame => DataFrame
+
+  /** (n_docs, avg_len) as a singleton aggregate over doc_info (A4/A5). */
+  private def statsAgg(docInfo: DataFrame): DataFrame =
+    docInfo.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg(col("length")).as("avg_len"))
+
+  /** Stats computed inside the plan: the singleton aggregate joins in as a
+    * broadcast, so plan construction runs no driver action.
+    */
+  private def planStats(docInfo: DataFrame): Stats = {
+    val stats = statsAgg(docInfo)
+    _.crossJoin(broadcast(stats))
   }
 
-  /** Per-doc top-k + display-metadata attach shared by every search shape. */
-  private def topAndTitle(components: DataFrame, docInfo: DataFrame,
-                          k: Int): DataFrame = {
-    val top = components
+  /** Stats of a persisted doc_info table, memoized on the driver with one
+    * entry per table location (the directory holding its files). An entry
+    * is valid while the table's file set is the one it was computed from.
+    * Every index write (append, delete, ingest, compaction, rollback) lands
+    * new, uniquely named files, so a changed table misses and recomputes on
+    * next use.
+    *
+    * The memo pays off only for repeated searches over an unchanged index
+    * in one driver (a serving session); a miss runs the in-plan form's
+    * aggregate eagerly at plan construction, as two jobs. It keeps the
+    * `MaxEntries` most recently searched locations, so a driver that
+    * searches many prefixes does not grow it without bound.
+    */
+  private object StatsMemo {
+    private val MaxEntries = 16
+    private val entries =
+      new java.util.LinkedHashMap[String, (Set[String], Row)](MaxEntries, 0.75f, true) {
+        override def removeEldestEntry(
+            e: java.util.Map.Entry[String, (Set[String], Row)]): Boolean =
+          size > MaxEntries
+      }
+
+    def apply(docInfo: DataFrame): Stats = {
+      val files = docInfo.inputFiles.toSet
+      val location = files.map(f => new org.apache.hadoop.fs.Path(f).getParent.toString)
+        .toSeq.sorted.mkString(",")
+      val stats = synchronized(Option(entries.get(location))).collect {
+        case (`files`, row) => row
+      }.getOrElse {
+        val row = statsAgg(docInfo).head()
+        synchronized(entries.put(location, (files, row)))
+        row
+      }
+      // avg_len is null for an empty table
+      _.withColumns(Map("n_docs" -> lit(stats.get(0)),
+        "avg_len" -> lit(stats.get(1)).cast("double")))
+    }
+  }
+
+  /** The BM25 ranking chain behind `search`, `searchPrebuilt`, both fuzzy
+    * searches and the hybrid text arm. (`rm3Search` and `snippets` still
+    * cut their own top k from [[termComponents]].)
+    *
+    * `termDf` arrives pruned to the query's terms (≤ one row per term) and
+    * broadcasts into the postings probe, so postings are filtered at the
+    * probe (J1 + P6: terms absent from the index have no df row and drop).
+    * Each candidate document is scored once, after the doc_id exchange,
+    * from its ≤ |terms| (df, tf) pairs; doc_info joins once, for length and
+    * title together, so titles never ride the postings-side exchange. That
+    * join carries every doc_info row's title: in the broadcast while
+    * doc_info is under spark.sql.autoBroadcastJoinThreshold, in its shuffle
+    * above it. Attaching titles to the k winners instead costs a second
+    * doc_info scan and two more jobs per search. The
+    * top-k cut is on the raw (score DESC, doc_id ASC) order; the displayed
+    * score is pinned to the 1e-6 grid (Money.micros) — the raw score chains
+    * through libm ln, whose last ulp is engine-specific — and the ≤k
+    * winners are re-sorted on it inside their single partition.
+    */
+  private def rank(postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
+                   stats: Stats, k: Int): DataFrame = {
+    val hits = postings.select("term", "doc_id", "tf")
+      .join(broadcast(termDf.select("term", "df")), "term")
       .groupBy("doc_id")
-      .agg(sum(col("score")).as("score"))
+      .agg(collect_list(struct(col("df"), col("tf"))).as("hits"))
+    stats(hits.join(docInfo.select("doc_id", "length", "title"), "doc_id"))
+      .select(col("doc_id"), col("title"),
+        aggregate(col("hits"), lit(0.0), (acc, h) => acc + BM25.termScore(
+          h("tf"), BM25.idf(col("n_docs"), h("df")), col("length"),
+          col("avg_len"))).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
       .limit(k)
-    docInfo.select(col("doc_id"), col("title"))
-      .join(broadcast(top), "doc_id")
-      // display score pinned to the 1e-6 grid (Money.micros): the raw
-      // score chains through libm ln, whose last ulp is engine-specific;
-      // ordering and the top-k cut stay on the raw value
       .select(col("doc_id"), col("title"), graft.Money.micros(col("score")).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
   }
 
+  /** Vocabulary terms within `maxDist` edits of any query token: the
+    * (vocabulary-sized) term table joins the broadcast query tokens behind
+    * a length-band prefilter — |len(term) - len(qterm)| <= maxDist is
+    * necessary for edit distance <= maxDist, so the cheap codegen'd guard
+    * rejects almost all of the vocabulary before the O(len^2) levenshtein
+    * runs. Returns the DISTINCT matching rows of `vocab`.
+    */
+  private def expand(spark: SparkSession, query: String, vocab: DataFrame,
+                     maxDist: Int): DataFrame = {
+    val qt = queryTerms(spark, query).select(col("term").as("qterm"))
+    vocab.join(broadcast(qt),
+        abs(length(col("term")) - length(col("qterm"))) <= maxDist &&
+          levenshtein(col("term"), col("qterm")) <= maxDist)
+      .drop("qterm").distinct()
+  }
+
   /** Typo-tolerant search: each query token expands to every vocabulary
-    * term within `maxDist` edits, and the DISTINCT expanded set feeds the
-    * standard BM25 chain. The expansion joins the (vocabulary-sized)
-    * term_df table against the broadcast query tokens with a length-band
-    * prefilter — |len(term) - len(qterm)| <= maxDist is necessary for
-    * edit distance <= maxDist, so the cheap codegen'd guard rejects
-    * almost all of the vocabulary before the O(len^2) levenshtein runs.
+    * term within `maxDist` edits ([[expand]]), and the expanded term_df
+    * rows feed the standard BM25 chain — one lazy plan.
     * Cost at 100 TB: one scan of the vocab table per query batch (the
     * vocab grows with distinct terms, not corpus rows), then the normal
     * term-pruned search.
     */
   def fuzzySearch(spark: SparkSession, query: String,
                   postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
-                  k: Int = 10, maxDist: Int = 1): DataFrame = {
-    val qt = queryTerms(spark, query).select(col("term").as("qterm"))
-    val expanded = termDf.select("term").join(broadcast(qt),
-        abs(length(col("term")) - length(col("qterm"))) <= maxDist &&
-          levenshtein(col("term"), col("qterm")) <= maxDist)
-      .select("term").distinct()
-    topAndTitle(componentsOver(expanded, postings, termDf, docInfo), docInfo, k)
-  }
+                  k: Int = 10, maxDist: Int = 1): DataFrame =
+    rank(postings, expand(spark, query, termDf.select("term", "df"), maxDist),
+      docInfo, planStats(docInfo), k)
 
   /** Full search over pre-built index DataFrames. Returns
     * (doc_id, title, score) — the reference's result display shape
@@ -131,34 +200,36 @@ object Search {
     */
   def search(spark: SparkSession, query: String,
              postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
-             k: Int = 10): DataFrame =
-    // A6 + T1: per-doc sum (partial agg map-side), then top-k with a
-    // deterministic (score DESC, doc_id ASC) tiebreak (SURVEY.md §7.6).
-    // Display metadata attaches to the k winners ONLY: the scoring plan
-    // never carries title through its shuffles, and that join broadcasts
-    // the k-row side (inner + BuildRight), probing docInfo — cost ∝ k.
-    topAndTitle(termComponents(spark, query, postings, termDf, docInfo),
-      docInfo, k)
+             k: Int = 10): DataFrame = {
+    val inTerms = col("term").isin(queryTokens(query): _*)
+    rank(postings.filter(inTerms), termDf.filter(inTerms), docInfo,
+      planStats(docInfo), k)
+  }
+
+  /** The BM25 chain over a persisted index, pruned to literal `terms`. */
+  private def rankPrebuilt(spark: SparkSession, terms: Seq[String],
+                           prefix: String, k: Int): DataFrame = {
+    val inTerms = col("term").isin(terms: _*)
+    val docInfo = spark.table(s"${prefix}_doc_info")
+    rank(spark.table(s"${prefix}_postings").filter(inTerms),
+      spark.table(s"${prefix}_term_df").filter(inTerms), docInfo,
+      StatsMemo(docInfo), k)
+  }
 
   /** Search over the persisted term-bucketed index tables built by
     * Indexer.buildBucketedIndex — the reference's actual architecture
     * (app/index.sh persists once; app/query.py:97-139 reads per query),
     * minus Cassandra. Literal IN-list `term` filters prune buckets
-    * (SelectedBucketsCount) and parquet row groups at the scan; the
-    * postings ⋈ term_df term join is co-located by the shared bucketing,
-    * so no exchange lands on either index scan. At 100 TB each query
-    * touches |terms| buckets of the postings table, not the corpus.
+    * (SelectedBucketsCount) and parquet row groups at the scan; the pruned
+    * term_df (one row per query term) broadcasts into the postings probe,
+    * so no exchange lands on either index scan. Collection stats come from
+    * a driver-side memo, so doc_info is read once per query, for the winners'
+    * length and title. At 100 TB each query touches |terms| buckets of the
+    * postings table, not the corpus.
     */
   def searchPrebuilt(spark: SparkSession, query: String, prefix: String,
-                     k: Int = 10): DataFrame = {
-    val toks = queryTokens(query)
-    val postings = spark.table(s"${prefix}_postings")
-      .filter(col("term").isin(toks: _*))
-    val termDf = spark.table(s"${prefix}_term_df")
-      .filter(col("term").isin(toks: _*))
-    val docInfo = spark.table(s"${prefix}_doc_info")
-    search(spark, query, postings, termDf, docInfo, k)
-  }
+                     k: Int = 10): DataFrame =
+    rankPrebuilt(spark, queryTokens(query), prefix, k)
 
   /** Hybrid retrieval served ENTIRELY from persisted stores: the lexical
     * arm from the term-bucketed BM25 index (searchPrebuilt — IN-list
@@ -380,21 +451,10 @@ object Search {
     */
   def fuzzySearchPrebuilt(spark: SparkSession, query: String, prefix: String,
                           k: Int = 10, maxDist: Int = 1): DataFrame = {
-    val qt = queryTerms(spark, query).select(col("term").as("qterm"))
-    val expanded = spark.table(s"${prefix}_term_df").select("term")
-      .join(broadcast(qt),
-        abs(length(col("term")) - length(col("qterm"))) <= maxDist &&
-          levenshtein(col("term"), col("qterm")) <= maxDist)
-      .select("term").distinct()
+    val expanded = expand(spark, query,
+        spark.table(s"${prefix}_term_df").select("term"), maxDist)
       .collect().map(_.getString(0)).toSeq
-    val postings = spark.table(s"${prefix}_postings")
-      .filter(col("term").isin(expanded: _*))
-    val termDf = spark.table(s"${prefix}_term_df")
-      .filter(col("term").isin(expanded: _*))
-    val docInfo = spark.table(s"${prefix}_doc_info")
-    import spark.implicits._
-    topAndTitle(componentsOver(expanded.toDF("term"), postings, termDf, docInfo),
-      docInfo, k)
+    rankPrebuilt(spark, expanded, prefix, k)
   }
 
   /** Batch search: score a whole TABLE of queries in one lazy plan — the
@@ -432,8 +492,7 @@ object Search {
                               postings: DataFrame, termDf: DataFrame,
                               docInfo: DataFrame, k: Int,
                               broadcastRequests: Boolean): DataFrame = {
-    val stats = docInfo.agg(
-      count(lit(1)).cast("double").as("n_docs"), avg(col("length")).as("avg_len"))
+    val stats = statsAgg(docInfo)
     val qTerms0 = queries.select(col("query_id"),
         explode(array_distinct(
           graft.functions.Tokenizer.tokenize(col("query_text")))).as("term"))
@@ -553,8 +612,7 @@ object Search {
                 k: Int = 10, fbDocs: Int = 10, fbTerms: Int = 5,
                 expWeight: Double = 0.5): DataFrame = {
     val origTerms = queryTokens(query)
-    val stats = docInfo.agg(
-      count(lit(1)).cast("double").as("n_docs"), avg(col("length")).as("avg_len"))
+    val stats = statsAgg(docInfo)
     val top = termComponents(spark, query, postings, termDf, docInfo)
       .groupBy("doc_id").agg(sum(col("score")).as("s"))
       .orderBy(col("s").desc, col("doc_id").asc).limit(fbDocs)

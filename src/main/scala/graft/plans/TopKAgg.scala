@@ -78,10 +78,19 @@ case class TopKByScore(
   override def update(buffer: TopKBuffer, input: InternalRow): TopKBuffer = {
     val s = score.eval(input)
     val i = id.eval(input)
-    // null score/id rows cannot be ranked; the window form would sort them
+    // Null score/id rows cannot be ranked; the window form would sort them
     // last (nulls-last ordering) and they never beat a real row — skip.
-    if (s != null && i != null)
-      buffer.insert(s.asInstanceOf[Double], i.asInstanceOf[Long])
+    // NaN scores are skipped too: every comparison with NaN is false, so
+    // the buffer could not place one. (The window form would sort NaN
+    // first, as Spark orders NaN above every double.) The bulk BM25 plan
+    // never feeds either: its inner joins drop rows without a df or
+    // length, and each summed term score is finite and >= 0 — idf is
+    // ln(max(1, N / max(1, df))) with N >= 1, and the denominator
+    // tf + k1 * (1 - b + b * dl / avgdl) is >= tf >= 1 with avgdl > 0.
+    if (s != null && i != null) {
+      val d = s.asInstanceOf[Double]
+      if (!d.isNaN) buffer.insert(d, i.asInstanceOf[Long])
+    }
     buffer
   }
 

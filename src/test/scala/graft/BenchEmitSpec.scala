@@ -31,4 +31,19 @@ class BenchEmitSpec extends AnyFunSuite {
       assert(content == line + "\n")
     } finally java.nio.file.Files.deleteIfExists(out): Unit
   }
+
+  test("a failing stop() goes to stderr and the JSON line still prints LAST") {
+    val events = scala.collection.mutable.ArrayBuffer[(String, String)]()
+    val line = """{"metric":"total","value":2.0}"""
+    val out = java.nio.file.Files.createTempFile("graft_bench_emit", ".json")
+    try {
+      Bench.emitResult(line, out,
+        stop = () => throw new IllegalStateException("shutdown hook failed"),
+        stdout = s => events += (("out", s)),
+        stderr = s => events += (("err", s)))
+      assert(events.map(_._1).toSeq == Seq("err", "err", "out"))
+      assert(events(1)._2.contains("shutdown hook failed"))
+      assert(events.last == (("out", line)))
+    } finally java.nio.file.Files.deleteIfExists(out): Unit
+  }
 }

@@ -240,6 +240,38 @@ class IndexerSpec extends SparkSpec {
       .collect().nonEmpty)
   }
 
+  test("memoized collection stats follow appends and deletes") {
+    // searchPrebuilt reads (n_docs, avg_len) from a memo keyed by the
+    // doc_info file set; every write must invalidate it, so after each
+    // step the grown index must search like a fresh build of its docs
+    // (built under a new prefix per step, which the memo has never seen)
+    val prefix = "graft_idx_memo_spec"
+    val d = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    val query = "spark filter join stream data"
+    def searchesLikeFreshBuild(step: String,
+                               docs: org.apache.spark.sql.Column): Unit = {
+      val ref = s"${prefix}_ref_$step"
+      Indexer.buildBucketedIndex(spark, d.filter(docs), ref)
+      val got = Search.searchPrebuilt(spark, query, prefix).collect().toSeq
+      val want = Search.searchPrebuilt(spark, query, ref).collect().toSeq
+      assert(want.nonEmpty && got.map(_.get(0)) == want.map(_.get(0)) &&
+        got.map(_.get(1)) == want.map(_.get(1)),
+        s"after $step: $got != $want")
+      got.zip(want).foreach { case (g, w) =>
+        assert(math.abs(g.getAs[Double]("score") - w.getAs[Double]("score")) <= 1e-6,
+          s"after $step: stale stats? $g != $w")
+      }
+    }
+    Indexer.buildBucketedIndex(spark, d.filter(col("doc_id") % 2 === 0), prefix)
+    searchesLikeFreshBuild("build", col("doc_id") % 2 === 0)
+    Indexer.appendBucketedIndex(spark, d.filter(col("doc_id") % 2 === 1), prefix)
+    searchesLikeFreshBuild("append", lit(true))
+    Indexer.deleteFromBucketedIndex(spark, prefix,
+      d.filter(col("doc_id") % 5 === 0).select(col("doc_id")))
+    searchesLikeFreshBuild("delete", col("doc_id") % 5 =!= 0)
+  }
+
   test("snapshot + rollback restores the pre-append index exactly") {
     val prefix = "graft_idx_rb_spec"
     val d = Tables.documents(spark, "/root/testdata/sf0.001")

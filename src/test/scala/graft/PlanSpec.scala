@@ -43,6 +43,31 @@ class PlanSpec extends SparkSpec {
     assert(p.contains("In(term"), s"term filter not pushed to the scan:\n$p")
     assert(!p.contains("Exchange hashpartitioning(term"),
       s"term join shuffled a bucketed index scan:\n$p")
+    // doc_info is read once, for length and title together: collection
+    // stats come from the memo, not a per-query aggregate over doc_info
+    val docInfoScans = "FileScan parquet \\S+_doc_info\\[".r.findAllIn(p).size
+    assert(docInfoScans == 1, s"$docInfoScans doc_info scans, want 1:\n$p")
+    // the k winners are re-sorted inside their single partition
+    assert(!p.contains("rangepartitioning"),
+      s"the top-k re-sort planned a range exchange:\n$p")
+    // a warm point search (memo filled) runs at most 4 Spark jobs
+    val query = Queries.all("bm25_search_prebuilt")
+    query(spark, dir).collect()
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      query(spark, dir).collect()
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get > 0 && jobs.get <= 4,
+      s"a point search over a persisted index ran ${jobs.get} jobs, want <= 4")
   }
 
   test("appended bucketed index keeps bucket pruning and shuffle-free term joins") {

@@ -92,4 +92,23 @@ class TopKAggSpec extends SparkSpec {
     assert(m.scores.take(4).toSeq == Seq(4.0, 4.0, 3.0, 2.0))
     assert(m.ids.take(4).toSeq == Seq(0L, 1L, 3L, 8L))
   }
+
+  test("null and NaN rows are skipped; real rows keep their ranks") {
+    import spark.implicits._
+    val df = Seq[(Long, java.lang.Long, java.lang.Double)](
+        (1L, 10L, 0.5), (1L, 11L, Double.NaN), (1L, 12L, null),
+        (1L, 13L, 0.9), (1L, null, 2.0), (1L, 14L, 0.5),
+        (2L, 20L, Double.NaN), (2L, 21L, null))
+      .toDF("query_id", "doc_id", "score")
+    val out = df.groupBy(col("query_id"))
+      .agg(TopKAgg.topK(col("score"), col("doc_id"), 10).as("top"))
+      .select(col("query_id"), posexplode(col("top")).as(Seq("pos", "e")))
+      .select(col("query_id"), col("e.doc_id"), col("e.score"),
+        (col("pos") + 1).as("rank"))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2), r.getInt(3)))
+      .toSeq.sortBy(r => (r._1, r._4))
+    // query 1 keeps only its three real rows (tie broken by doc_id);
+    // query 2, with no real row, yields an empty top-k
+    assert(out == Seq((1L, 13L, 0.9, 1), (1L, 10L, 0.5, 2), (1L, 14L, 0.5, 3)))
+  }
 }
