@@ -1,6 +1,8 @@
 #!/bin/bash
 # Run a graft tool main directly on the compiled classes (no sbt lock).
-# Usage: scripts/run-main.sh [-Xmx..] graft.ScaleProbe [args...]
+# Usage: scripts/run-main.sh [-Dspark.key=value ...] [-Xmx..] graft.Probe [args...]
+# JVM options go before the main class; a -Dspark.* option sets that conf
+# on the session graft.GraftSession builds (how a conf is A/B-compared).
 set -euo pipefail
 OPENS="java.base/java.lang java.base/java.lang.invoke java.base/java.lang.reflect \
 java.base/java.io java.base/java.net java.base/java.nio java.base/java.util \

@@ -50,27 +50,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // AQE partition coalescing by TARGET SIZE, not session parallelism
-    // (optimization round r16, guide §2.2/§9 and VERDICT r15 #6): the
-    // default parallelismFirst=true re-spreads every small exchange across
-    // the session's partition count — near-empty reduce tasks whose launch
-    // cost dominates the sweep's many sub-second rows (the r15 scaling
-    // block measured ~10 rows FASTER at 8 cores than 32 for exactly this
-    // reason). Sizing is load-bound per partition, so the setting is
-    // scale-neutral by construction; the advisory size is env-tunable
-    // (SPARK_GRAFT_ADVISORY_PART) with a 16m local default — a production
-    // cluster would run the guide's 64-256m with the same flag.
-    val advisory = sys.env.getOrElse("SPARK_GRAFT_ADVISORY_PART", "16m")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", advisory)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val all = SparkEntry.queries
     def once(name: String,
              fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {

@@ -1,14 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
 /** Dev tool: dump formatted physical plans for plan-quality review. */
 object Explain {
   def main(args: Array[String]): Unit = {
     val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val names = if (args.nonEmpty) args.toSeq else Seq("scan_filter", "q3_shipping", "q5_star_join", "bm25_search")
     names.foreach { n =>
       println(s"========== $n ==========")

@@ -1,0 +1,124 @@
+package graft
+
+import java.util.concurrent.atomic.AtomicLong
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, SparkListenerTaskEnd}
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.streaming.StreamingQueryListener
+
+/** Dev tool: where a registry query's time goes, one line per run.
+  *
+  * Each query gets one warm-up run and three measured runs through the
+  * `noop` sink, as in [[Bench]]. A run splits into
+  *   construct — building the DataFrame (plan assembly; a `stream_*`
+  *               row runs its stream to the sink here)
+  *   analyze   — analysis, optimization and physical planning
+  *               (forcing `queryExecution.executedPlan`)
+  *   execute   — the noop write (scheduling, tasks, AQE re-planning)
+  * and reports the run's Spark jobs, stages and tasks, shuffle-write and
+  * spill bytes, and each micro-batch's `durationMs` map.
+  *
+  * Run: scripts/run-main.sh [-Dspark.key=value ...] graft.Probe <names...>
+  * over SPARK_GRAFT_SF_DIR (default sf0.1), on the session
+  * [[GraftSession.create]] builds from the environment.
+  */
+object Probe {
+
+  /** One run's record. `batches` holds one `durationMs` map per
+    * micro-batch, in arrival order; it is empty for a batch query.
+    */
+  final case class Run(constructMs: Double, analyzeMs: Double,
+                       executeMs: Double, jobs: Long, stages: Long,
+                       tasks: Long, shuffleWriteBytes: Long, spillBytes: Long,
+                       batches: Seq[Map[String, Long]]) {
+    def totalMs: Double = constructMs + analyzeMs + executeMs
+
+    override def toString: String = {
+      val base = f"construct_ms=$constructMs%.1f analyze_ms=$analyzeMs%.1f " +
+        f"execute_ms=$executeMs%.1f total_ms=$totalMs%.1f jobs=$jobs " +
+        s"stages=$stages tasks=$tasks shuffle_write_bytes=$shuffleWriteBytes " +
+        s"spill_bytes=$spillBytes"
+      if (batches.isEmpty) base
+      else base + " batches=" + batches.map(_.toSeq.sorted
+        .map { case (k, v) => s"$k:$v" }.mkString("{", ",", "}"))
+        .mkString("[", ",", "]")
+    }
+  }
+
+  /** Runs `name` once over `dir` and measures it. The listeners are added
+    * for the run and removed after it, once every event has arrived.
+    */
+  def measure(spark: SparkSession, dir: String, name: String): Run = {
+    val jobs, stages, tasks, shuffle, spill = new AtomicLong
+    val batches = new java.util.concurrent.ConcurrentLinkedQueue[Map[String, Long]]
+    val sparkListener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.incrementAndGet(): Unit
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
+        stages.incrementAndGet(): Unit
+      override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
+        tasks.incrementAndGet()
+        Option(e.taskMetrics).foreach { m =>
+          shuffle.addAndGet(m.shuffleWriteMetrics.bytesWritten)
+          spill.addAndGet(m.diskBytesSpilled)
+        }
+      }
+    }
+    val streamListener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        batches.add(e.progress.durationMs.asScala
+          .map { case (k, v) => k -> v.longValue }.toMap): Unit
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(sparkListener)
+    spark.streams.addListener(streamListener)
+    try {
+      val t0 = System.nanoTime()
+      val df = SparkEntry.queries(name)(spark, dir)
+      val t1 = System.nanoTime()
+      df.queryExecution.executedPlan
+      val t2 = System.nanoTime()
+      df.write.format("noop").mode("overwrite").save()
+      val t3 = System.nanoTime()
+      org.apache.spark.ListenerBusDrain(sc)
+      Run((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e6, jobs.get,
+        stages.get, tasks.get, shuffle.get, spill.get,
+        batches.asScala.toSeq)
+    } finally {
+      sc.removeSparkListener(sparkListener)
+      spark.streams.removeListener(streamListener)
+    }
+  }
+
+  def main(args: Array[String]): Unit = {
+    if (args.isEmpty) {
+      System.err.println("usage: graft.Probe <query names...>")
+      sys.exit(2)
+    }
+    val dir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    val spark = GraftSession.create()
+    val sql = GraftSession.effectiveConf(spark).toSeq.sorted
+      .collect { case (k, v) if k.startsWith("spark.sql.") => s"$k=$v" }
+    println(s"conf fingerprint=${GraftSession.fingerprint(spark)} " +
+      s"master=${spark.sparkContext.master} ${sql.mkString(" ")}")
+    try args.foreach { name =>
+      try {
+        println(s"$name warmup ${measure(spark, dir, name)}")
+        val runs = (1 to 3).map { i =>
+          val r = measure(spark, dir, name)
+          println(s"$name run$i $r")
+          r
+        }
+        println(f"$name min_total_ms=${runs.map(_.totalMs).min}%.1f")
+      } catch {
+        case e: Exception => println(s"$name FAILED: $e")
+      }
+    } finally spark.stop()
+  }
+}

@@ -19,14 +19,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = GraftSession.create()
     val src = "/root/testdata/sf0.1"
     // replication factor: 10 = the standard sf1 probe; 100 gives a second
     // point on the scaling curve (SPARK_GRAFT_SCALE_FACTOR=100)

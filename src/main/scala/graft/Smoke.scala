@@ -1,19 +1,11 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: drives the driver contract end-to-end —
   * `SparkEntry.entry` (flagship, sf0.001) like the driver's rows>0 check.
   */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.create()
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)
     println(s"entry rows: ${df.count()}")

@@ -584,14 +584,7 @@ object Main {
     }
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_MASTER", "local[*]"))
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "8"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession.create()
     try run(spark, args.toSeq) match {
       case Left(msg)        => System.err.println(msg); sys.exit(2)
       case Right(Some(out)) => out.show(100, truncate = false)

@@ -16,7 +16,8 @@ import org.apache.spark.sql.functions._
   * only wide operations are the index aggregations themselves plus one
   * row_number window partitioned by doc_id, which reuses the (term,doc)
   * aggregation's data layout. N joins in as a broadcast singleton (J4
-  * pattern, Search.termComponents) keeping the whole plan lazy.
+  * pattern, as Search.search takes its collection stats) keeping the whole
+  * plan lazy.
   */
 object Keywords {
 

@@ -55,7 +55,8 @@ object Search {
   }
 
   /** Per-(term, doc) BM25 components for a query — the plan up to but
-    * excluding the final per-doc sum (reference J1+J2+J3+F9+F10).
+    * excluding the final per-doc sum (reference J1+J2+J3+F9+F10), as
+    * `bm25_term_scores` reports them.
     * Columns: (doc_id, term, df, tf, length, n_docs, avg_len, idf, score).
     */
   def termComponents(spark: SparkSession, query: String,
@@ -127,8 +128,8 @@ object Search {
   }
 
   /** The BM25 ranking chain behind `search`, `searchPrebuilt`, both fuzzy
-    * searches and the hybrid text arm. (`rm3Search` and `snippets` still
-    * cut their own top k from [[termComponents]].)
+    * searches and the hybrid text arm; `rm3Search` and `snippets` take
+    * their top k from `search`.
     *
     * `termDf` arrives pruned to the query's terms (≤ one row per term) and
     * broadcasts into the postings probe, so postings are filtered at the
@@ -613,10 +614,8 @@ object Search {
                 expWeight: Double = 0.5): DataFrame = {
     val origTerms = queryTokens(query)
     val stats = statsAgg(docInfo)
-    val top = termComponents(spark, query, postings, termDf, docInfo)
-      .groupBy("doc_id").agg(sum(col("score")).as("s"))
-      .orderBy(col("s").desc, col("doc_id").asc).limit(fbDocs)
-      .select(col("doc_id"))
+    val top = search(spark, query, postings, termDf, docInfo, fbDocs)
+      .select("doc_id")
     val expansion = postings.select("term", "doc_id", "tf")
       .join(broadcast(top), "doc_id")
       .filter(!col("term").isin(origTerms: _*))
@@ -653,10 +652,8 @@ object Search {
                postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
                k: Int = 10, window: Int = 10): DataFrame = {
     val toks = queryTokens(query)
-    val top = termComponents(spark, query, postings, termDf, docInfo)
-      .groupBy("doc_id").agg(sum(col("score")).as("s"))
-      .orderBy(col("s").desc, col("doc_id").asc).limit(k)
-      .select(col("doc_id"))
+    val top = search(spark, query, postings, termDf, docInfo, k)
+      .select("doc_id")
     val qp = postings.filter(col("term").isin(toks: _*))
       .join(broadcast(top), "doc_id")
       .select(col("doc_id"), col("term"), explode(col("positions")).as("pos"))

@@ -192,20 +192,6 @@ object MultimodalQueries {
   // min-label connected components — one row per MATCHED IMAGE (linear in
   // the corpus no matter how duplicated), keeper = min doc_id — the
   // dedup_clusters contract on the image column.
-  /** The collapsed rep-graph edge list fed to the CC loop — shared with
-    * ProfileCC so the round-count instrumentation profiles the exact
-    * production edge input.
-    */
-  private[queries] def phashRepPairs(groups: DataFrame): DataFrame =
-    bandedPairs(groups.select(col("rep").as("id"),
-        col("phash"), col("lo"), col("hi")))
-      .select(col("id_a").as("a"), col("id_b").as("b"))
-
-  private[queries] def phashGroups(s: SparkSession, dir: String): DataFrame =
-    phashSigs(s, dir).groupBy(col("phash"))
-      .agg(min(col("id")).as("rep"), count(lit(1)).as("n"),
-        first(col("lo")).as("lo"), first(col("hi")).as("hi"))
-
   def dedupPhashClusters(s: SparkSession, dir: String): DataFrame = {
     // EXACT-SIGNATURE COLLAPSE first — the trick every production phash
     // dedup runs: replicas share an identical 32-bit hash, so band-pair
@@ -222,7 +208,9 @@ object MultimodalQueries {
     val groups = sigs.groupBy(col("phash"))
       .agg(min(col("id")).as("rep"), count(lit(1)).as("n"),
         first(col("lo")).as("lo"), first(col("hi")).as("hi"))
-    val repPairs = phashRepPairs(groups)
+    val repPairs = bandedPairs(groups.select(col("rep").as("id"),
+        col("phash"), col("lo"), col("hi")))
+      .select(col("id_a").as("a"), col("id_b").as("b"))
     val labels = graft.operators.Components
       .connectedComponents(repPairs, checkEvery = 4, pointerJump = false)
     // a group is MATCHED iff its rep pairs with another distinct hash OR

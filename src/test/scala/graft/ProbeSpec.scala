@@ -1,0 +1,36 @@
+package graft
+
+/** `graft.Probe`'s measuring function on the test session, at sf0.001. */
+class ProbeSpec extends SparkSpec {
+
+  private val dir = "/root/testdata/sf0.001"
+
+  test("a batch row reports its phases, jobs, stages and tasks") {
+    val r = Probe.measure(spark, dir, "scan_filter")
+    assert(Seq(r.constructMs, r.analyzeMs, r.executeMs).forall(_ >= 0), s"$r")
+    assert(r.jobs >= 1, s"$r")
+    assert(r.tasks >= r.stages, s"$r")
+    assert(r.shuffleWriteBytes >= 0 && r.spillBytes >= 0, s"$r")
+    assert(r.batches.isEmpty, s"$r")
+  }
+
+  test("a streaming row reports its micro-batches") {
+    val r = Probe.measure(spark, dir, "stream_tumbling")
+    assert(r.batches.nonEmpty, s"no micro-batch reported: $r")
+    assert(r.batches.forall(_.contains("triggerExecution")), s"$r")
+    assert(r.jobs >= 1 && r.tasks >= r.stages, s"$r")
+  }
+
+  test("probing a query twice counts the same jobs; no listener outlives its run") {
+    val sc = spark.sparkContext
+    Probe.measure(spark, dir, "scan_filter")
+    org.apache.spark.ListenerBusDrain(sc)
+    val sparkListeners = org.apache.spark.ListenerBusCount(sc)
+    val streamListeners = spark.streams.listListeners().length
+    val first = Probe.measure(spark, dir, "scan_filter")
+    val second = Probe.measure(spark, dir, "scan_filter")
+    assert(first.jobs == second.jobs, s"$first\n$second")
+    assert(org.apache.spark.ListenerBusCount(sc) == sparkListeners)
+    assert(spark.streams.listListeners().length == streamListeners)
+  }
+}
