@@ -13,6 +13,5 @@ FLAGS=""
 for p in $OPENS; do FLAGS="$FLAGS --add-opens $p=ALL-UNNAMED"; done
 MEM="${SPARK_DRIVER_MEM:-8g}"
 ROOT="$(cd "$(dirname "$0")/.." && pwd)"
-exec java $FLAGS -Xmx"$MEM" -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
+exec java $FLAGS -Xmx"$MEM" \
   -cp "$ROOT/target/scala-2.13/classes:/opt/spark/jars/*" "$@"

@@ -2,11 +2,12 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** The one place the engine's session confs are declared. The CLI, the
-  * bench, the oracle dump, the dev tools and the test base all build their
-  * session here, so the engine that is measured and tested is the engine
-  * the command line runs. A conf to compare against goes on the JVM command
-  * line (`-Dspark.key=value`), never into a caller.
+/** The one place the engine's session confs are declared and changed.
+  * The CLI, the bench, the oracle dump, the dev tools and the test base all
+  * build their session here, so the engine that is measured and tested is
+  * the engine the command line runs. A conf to compare against goes on the
+  * JVM command line (`-Dspark.key=value`), never into a caller; an
+  * operator that needs a conf for one write runs it under [[scoped]].
   */
 object GraftSession {
 
@@ -14,6 +15,9 @@ object GraftSession {
     * count is `SPARK_GRAFT_CPUS`; when that is unset too, the session takes
     * every local core and 8 shuffle partitions. `GRAFT_MASTER`, when set,
     * names the master outright (a cluster URL).
+    *
+    * `nanosAsLong` reads a `TIMESTAMP(NANOS)` column, which Spark refuses
+    * otherwise, as a long (`Tables.normalizeEventsTs`).
     */
   def settings(cpus: Option[Int],
                env: Map[String, String] = sys.env): Map[String, String] = {
@@ -23,13 +27,28 @@ object GraftSession {
         n.fold("local[*]")(c => s"local[$c]")),
       "spark.sql.shuffle.partitions" -> n.fold("8")(_.toString),
       "spark.sql.session.timeZone" -> "UTC",
-      "spark.ui.enabled" -> "false")
+      "spark.ui.enabled" -> "false",
+      "spark.sql.legacy.parquet.nanosAsLong" -> "true")
   }
 
   def create(cpus: Option[Int] = None): SparkSession = {
     val spark = SparkSession.builder().config(settings(cpus)).getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark
+  }
+
+  /** Runs `body` with `confs` set, then puts each key back: its old value,
+    * or unset if it was not set (`getOption` would report a default).
+    */
+  def scoped[T](spark: SparkSession, confs: (String, String)*)(body: => T): T = {
+    val set = spark.conf.getAll
+    val prev = confs.map { case (k, _) => k -> set.get(k) }
+    confs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   /** Keys that name a deployment path or a per-process identity. */

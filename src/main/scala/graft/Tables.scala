@@ -65,12 +65,9 @@ object Tables {
       case other => sys.error(s"events.ts: unsupported parquet type $other")
     }
 
-  def events(s: SparkSession, dir: String): DataFrame = {
-    // needed BEFORE the read when the file ships TIMESTAMP(NANOS);
-    // harmless when ts is already µs — the read never sees nanos then
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+  // a TIMESTAMP(NANOS) ts reads as a long: GraftSession.settings' nanosAsLong
+  def events(s: SparkSession, dir: String): DataFrame =
     normalizeEventsTs(pq(s, s"$dir/events.parquet"))
-  }
 
   /** Max event time as epoch micros (0 on an empty source — any sentinel
     * epoch works when there is no state to flush). Shared by the streaming

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.GraftSession
 import graft.functions.Tokenizer
 
 /** Inverted-index construction — replaces the reference's three Hadoop
@@ -104,6 +105,10 @@ object Indexer {
     * agnostic as long as postings and term_df agree).
     */
   val IndexBuckets = 8
+
+  /** Forces the bucketed scan on: one partition, so one file, per bucket. */
+  private[operators] val OnePartitionPerBucket =
+    "spark.sql.sources.bucketing.autoBucketedScan.enabled" -> "false"
 
   /** Persist the index as TERM-BUCKETED tables (the reference's index.sh →
     * Cassandra step, re-expressed as Spark bucketed parquet). postings and
@@ -258,50 +263,17 @@ object Indexer {
       .groupBy("term").agg(sum(col("df")).cast("int").as("df"))
       .filter(col("df") > 0)
     stageAndSwap(spark, newTermDf, s"${prefix}_term_df", bucketed = true)
-    val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "false") // one partition per bucket at the scan
-    try {
+    GraftSession.scoped(spark, OnePartitionPerBucket) {
       val keptPostings = spark.table(s"${prefix}_postings")
         .join(broadcast(ids), Seq("doc_id"), "left_anti")
         .select("term", "doc_id", "tf", "positions") // USING join reorders
       stageAndSwap(spark, keptPostings, s"${prefix}_postings", bucketed = true)
-    } finally spark.conf.set(conf, prev)
+    }
     val keptInfo = spark.table(s"${prefix}_doc_info")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
     stageAndSwap(spark, keptInfo, s"${prefix}_doc_info", bucketed = false)
   }
 
-  /** Compaction — the maintenance half of the append story. Each bucketed
-    * write lands one file per (task, touched bucket), so a build plus N
-    * append batches leaves every bucket a pile of small files and scan
-    * efficiency decays. When any bucket's file count exceeds
-    * `maxFilesPerBucket`, rewrite the postings table WITHOUT ANY SHUFFLE:
-    * with the bucketed scan forced on (autoBucketedScan would disable it
-    * for a plain pass-through read), the source produces exactly one
-    * partition per bucket, every row in a task already belongs to that
-    * task's bucket, and the bucket-spec'd writer emits ONE file per
-    * bucket. The swap reuses the same rename-aside machinery as the
-    * term_df merge. Bucket spec and in-file term sort are preserved, so
-    * pruning (SelectedBucketsCount) and the exchange-free term join
-    * survive (IndexerSpec pins both).
-    *
-    * (A `repartition(IndexBuckets, term)` formulation is a trap: the
-    * catalog bucketing satisfies the repartition's required distribution,
-    * so the exchange is elided — and the planner then disables the
-    * bucketed scan anyway, leaving arbitrary file-split tasks that each
-    * write one file per bucket they touch.)
-    *
-    * Cost is one read+write of postings — amortized across the appends
-    * that triggered it, shuffle-free, and at cluster scale parallel over
-    * IndexBuckets tasks. The refinement there is per-bucket selective
-    * rewrite (read only over-threshold buckets' files, write with
-    * preserved bucket ids), which needs writer-internal file naming; the
-    * whole-table form keeps to public APIs and the same plan shape.
-    *
-    * @return true if a rewrite happened, false if all buckets were within
-    *         the threshold.
-    */
   /** Snapshot the persisted index under a tag — the point-in-time copy a
     * risky maintenance window takes first (append/delete/compact are
     * individually crash-safe via rename-aside, but a bad BATCH — wrong
@@ -314,11 +286,8 @@ object Indexer {
     * cluster scale a storage-level snapshot (object-store copy) replaces
     * the data movement, with the same two-name catalog discipline.
     */
-  def snapshotIndex(spark: SparkSession, prefix: String, tag: String): Unit = {
-    val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-    val prev = spark.conf.get(conf)
-    spark.conf.set(conf, "false")
-    try {
+  def snapshotIndex(spark: SparkSession, prefix: String, tag: String): Unit =
+    GraftSession.scoped(spark, OnePartitionPerBucket) {
       Seq(("postings", true), ("term_df", true), ("doc_info", false))
         .foreach { case (t, bucketed) =>
           val snap = s"${prefix}_${tag}_$t"
@@ -328,8 +297,7 @@ object Indexer {
           (if (bucketed) w.bucketBy(IndexBuckets, "term").sortBy("term") else w)
             .saveAsTable(snap)
         }
-    } finally spark.conf.set(conf, prev)
-  }
+    }
 
   /** Restore the live index from a snapshot taken by snapshotIndex. The
     * snapshot is CONSUMED (renamed in); take another if you need to keep it.
@@ -395,20 +363,14 @@ object Indexer {
     // Scope the propagation off for the whole merge; the plain read path
     // is unaffected and every other index lifecycle op unions
     // non-co-partitioned children.
-    val unionConf = "spark.sql.unionOutputPartitioning"
-    val prevUnion = spark.conf.get(unionConf)
-    spark.conf.set(unionConf, "false")
-    try {
-      val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.get(conf)
-      spark.conf.set(conf, "false") // one partition per bucket at each scan
-      try {
+    GraftSession.scoped(spark, "spark.sql.unionOutputPartitioning" -> "false") {
+      GraftSession.scoped(spark, OnePartitionPerBucket) {
         spark.table(s"${prefixA}_postings")
           .unionByName(spark.table(s"${prefixB}_postings"))
           .write.mode("overwrite").format("parquet")
           .bucketBy(IndexBuckets, "term").sortBy("term")
           .saveAsTable(s"${outPrefix}_postings")
-      } finally spark.conf.set(conf, prev)
+      }
       spark.table(s"${prefixA}_term_df")
         .unionByName(spark.table(s"${prefixB}_term_df"))
         .groupBy("term").agg(sum(col("df")).cast("int").as("df"))
@@ -419,7 +381,7 @@ object Indexer {
         .unionByName(spark.table(s"${prefixB}_doc_info"))
         .write.mode("overwrite").format("parquet")
         .saveAsTable(s"${outPrefix}_doc_info")
-    } finally spark.conf.set(unionConf, prevUnion)
+    }
   }
 
   /** One-row DESCRIBE of a persisted index: vocabulary size, posting
@@ -471,6 +433,36 @@ object Indexer {
     }
   }
 
+  /** Compaction — the maintenance half of the append story. Each bucketed
+    * write lands one file per (task, touched bucket), so a build plus N
+    * append batches leaves every bucket a pile of small files and scan
+    * efficiency decays. When any bucket's file count exceeds
+    * `maxFilesPerBucket`, rewrite the postings table WITHOUT ANY SHUFFLE:
+    * with the bucketed scan forced on (autoBucketedScan would disable it
+    * for a plain pass-through read), the source produces exactly one
+    * partition per bucket, every row in a task already belongs to that
+    * task's bucket, and the bucket-spec'd writer emits ONE file per
+    * bucket. The swap reuses the same rename-aside machinery as the
+    * term_df merge. Bucket spec and in-file term sort are preserved, so
+    * pruning (SelectedBucketsCount) and the exchange-free term join
+    * survive (IndexerSpec pins both).
+    *
+    * (A `repartition(IndexBuckets, term)` formulation is a trap: the
+    * catalog bucketing satisfies the repartition's required distribution,
+    * so the exchange is elided — and the planner then disables the
+    * bucketed scan anyway, leaving arbitrary file-split tasks that each
+    * write one file per bucket they touch.)
+    *
+    * Cost is one read+write of postings — amortized across the appends
+    * that triggered it, shuffle-free, and at cluster scale parallel over
+    * IndexBuckets tasks. The refinement there is per-bucket selective
+    * rewrite (read only over-threshold buckets' files, write with
+    * preserved bucket ids), which needs writer-internal file naming; the
+    * whole-table form keeps to public APIs and the same plan shape.
+    *
+    * @return true if a rewrite happened, false if all buckets were within
+    *         the threshold.
+    */
   def compactBucketedIndex(spark: SparkSession, prefix: String,
                            maxFilesPerBucket: Int = 8): Boolean =
     MaintenanceLease.withLease(spark, prefix, "index-compact") {
@@ -482,13 +474,10 @@ object Indexer {
     val name = s"${prefix}_postings"
     val counts = bucketFileCounts(spark, name)
     val didPostings = counts.values.exists(_ > maxFilesPerBucket)
-    if (didPostings) {
-      val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.get(conf)
-      spark.conf.set(conf, "false") // one partition per bucket at the scan
-      try stageAndSwap(spark, spark.table(name), name, bucketed = true)
-      finally spark.conf.set(conf, prev)
-    }
+    if (didPostings)
+      GraftSession.scoped(spark, OnePartitionPerBucket) {
+        stageAndSwap(spark, spark.table(name), name, bucketed = true)
+      }
     // doc_info grows one file per append batch too (plain unbucketed
     // appends) — same IndexBuckets-scaled threshold, coalesced rewrite
     // (the table is corpus-row-sized but narrow: doc_id, length, title)

@@ -41,6 +41,14 @@ object Search {
     */
   val BulkRequestThreshold = 4096L
 
+  /** Keeps [[bulkSearch]]'s top-k aggregate hash-based past 128 query ids
+    * per task; a buffer holds k entries, so 64k ids stay near 20 MB. Spark
+    * reads it at execution, so a caller scopes the write with it. No session
+    * default: other object-hash aggregates (collect_list) are unbounded.
+    */
+  val BulkTopKConf =
+    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536"
+
   /** Driver-side tokenization of the scalar query string — same semantics
     * as Tokenizer.tokenize, distinct terms in first-occurrence order.
     */
@@ -559,23 +567,13 @@ object Search {
     // (score DESC, doc_id ASC), so posexplode reproduces the same rows
     // with the same ranks. Batch (broadcast) form keeps the window — its
     // volumes are literal-pruned and its plans are regression-adjudicated.
+    // Past 128 query ids per task it sorts unless scoped by BulkTopKConf.
     val top =
       if (broadcastRequests)
         summed
           .withColumn("rank", row_number().over(w).cast("long"))
           .filter(col("rank") <= k)
-      else {
-        // object-hash aggregation falls back to SORT-based past 128
-        // distinct keys per task by default — which would re-introduce a
-        // full sort of the aggregate by query_id. Top-k buffers are
-        // bounded (k entries ≈ 4+16k bytes each), so even 64k in-flight
-        // groups per task is ~20 MB: raise the fallback threshold. This
-        // is load-bound per TASK (keys per partition), so it is
-        // scale-neutral: a bigger corpus grows partition COUNT, not the
-        // per-task group count, which the (query_id, doc_id) exchange
-        // above spreads evenly.
-        queries.sparkSession.conf
-          .set("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", 65536)
+      else
         summed
           .groupBy(col("query_id"))
           .agg(graft.plans.TopKAgg.topK(col("score"),
@@ -585,7 +583,6 @@ object Search {
           .select(col("query_id"), col("e.doc_id").as("doc_id"),
             col("e.score").as("score"),
             (col("pos") + 1).cast("long").as("rank"))
-      }
     // display metadata joins the winners only (cost ∝ |queries|·k) —
     // mirrors the single-query search(); the winners side broadcasts in
     // the batch form but stays a shuffle join under an unbounded bulk run

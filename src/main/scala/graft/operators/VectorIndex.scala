@@ -338,14 +338,11 @@ object VectorIndex {
     val fwd = s"${prefix}_forward"
     val fwdCounts = Indexer.bucketFileCounts(spark, fwd)
     val didForward = fwdCounts.values.exists(_ > maxFilesPerUnit)
-    if (didForward) {
-      val conf = "spark.sql.sources.bucketing.autoBucketedScan.enabled"
-      val prev = spark.conf.get(conf)
-      spark.conf.set(conf, "false") // one partition per bucket at the scan
-      try Indexer.stageAndSwap(spark, spark.table(fwd), fwd,
-        bucketed = true, bucketCol = "id")
-      finally spark.conf.set(conf, prev)
-    }
+    if (didForward)
+      graft.GraftSession.scoped(spark, Indexer.OnePartitionPerBucket) {
+        Indexer.stageAndSwap(spark, spark.table(fwd), fwd,
+          bucketed = true, bucketCol = "id")
+      }
     didVectors || didForward
   }
 

@@ -11,6 +11,9 @@ import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode
   */
 object DocStreams {
 
+  /** The ingest and serving streams' width: a micro-batch is one file. */
+  private val StreamShuffle = "spark.sql.shuffle.partitions" -> "4"
+
   /** One MinHash band row: (band, h1, h2) is the bucket key (rowsPerBand =
     * 2 signature values), `id` the document. NEGATIVE band values carry a
     * second detection CHANNEL through the same keyed state (ch 0; ch 1 for
@@ -287,12 +290,10 @@ object DocStreams {
     val src = s.readStream.schema(schema).option("basePath", stagedDir)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$stagedDir/embeddings.parquet*")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
     // foreachBatch runs serially on the driver, so plain vars are safe
     var retrains = 0
     var replaySkips = 0
-    try {
+    graft.GraftSession.scoped(s, StreamShuffle) {
       val q = src.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt)
@@ -349,7 +350,7 @@ object DocStreams {
         }
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     IngestReport(retrains, replaySkips)
   }
 
@@ -1078,9 +1079,8 @@ object DocStreams {
     val src = s.readStream.schema(schema).option("basePath", stagedDir)
       .option("maxFilesPerTrigger", "1")
       .parquet(s"$stagedDir/requests.parquet*")
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
+    val callerShuffle = s.conf.get("spark.sql.shuffle.partitions")
+    graft.GraftSession.scoped(s, StreamShuffle) {
       val q = src.writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt)
@@ -1106,12 +1106,14 @@ object DocStreams {
               // reduce partitions would idle all but 4 slots. (In the
               // single-JVM probe container the width is a wash — CPU
               // saturates either way — SCALE_r13 §4.)
-              s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-              try graft.operators.Search.hybridBulkSearchPrebuilt(
-                  s, reqDf, textPrefix, vecPrefix, k)
-                .write.mode("overwrite")
-                .parquet(s"$outPath/batch_id=$batchId")
-              finally s.conf.set("spark.sql.shuffle.partitions", "4")
+              graft.GraftSession.scoped(s,
+                  "spark.sql.shuffle.partitions" -> callerShuffle,
+                  graft.operators.Search.BulkTopKConf) {
+                graft.operators.Search.hybridBulkSearchPrebuilt(
+                    s, reqDf, textPrefix, vecPrefix, k)
+                  .write.mode("overwrite")
+                  .parquet(s"$outPath/batch_id=$batchId")
+              }
             } else {
               // below the threshold the literal IN-lists ARE the index
               // pruning, and this collect is bounded by the threshold
@@ -1137,7 +1139,7 @@ object DocStreams {
         }
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
   }
 
   /** Live index ingestion: stream a staged corpus directory one file per
@@ -1164,10 +1166,8 @@ object DocStreams {
                    checkpointDir: Option[String] = None): IngestReport = {
     val ckpt = checkpointDir.getOrElse(
       graft.ScratchDirs.fresh("graft_stream", "ingest_ckpt").toString)
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
     var replaySkips = 0
-    try {
+    graft.GraftSession.scoped(s, StreamShuffle) {
       val q = docsFileStream(s, stagedDir, oneFilePerBatch = true)
         .writeStream
         .outputMode(OutputMode.Append)
@@ -1190,7 +1190,7 @@ object DocStreams {
         }
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     IngestReport(retrains = 0, replaySkips = replaySkips)
   }
 }

@@ -50,7 +50,6 @@ object EventStreams {
     */
   private def eventsFileStream(s: SparkSession, dir: String,
                                oneFilePerBatch: Boolean = false): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val rawSchema = s.read.parquet(s"$dir/events.parquet").schema
     val r = s.readStream.schema(rawSchema).option("basePath", dir)
     graft.Tables.normalizeEventsTs(
@@ -119,6 +118,9 @@ object EventStreams {
     }
   }
 
+  /** State stores per stateful operator in [[runToSink]] (sized there). */
+  private val StatePartitions = "spark.sql.shuffle.partitions" -> "2"
+
   /** Run a finite streaming query to completion (Trigger.AvailableNow —
     * the standard backfill shape: same code path as the live stream,
     * bounded input, exits when caught up), materializing sink batches via
@@ -138,8 +140,8 @@ object EventStreams {
     * session-window row a wash. The session conf is restored after the
     * run; a live deployment sizes this to key cardinality instead.
     */
-  private[streaming] def runToSink(df: DataFrame, mode: OutputMode, tag: String,
-                                   statePartitions: Int = 2): DataFrame = {
+  private[streaming] def runToSink(df: DataFrame, mode: OutputMode,
+                                   tag: String): DataFrame = {
     val s = df.sparkSession
     // unique per-run sink + checkpoint: Append mode needs a fresh
     // checkpoint anyway (resuming an old one would skip already-read
@@ -152,9 +154,7 @@ object EventStreams {
       .createDirectories(base.resolve("sink")).toString
     val ckpt = java.nio.file.Files
       .createDirectories(base.resolve("ckpt")).toString
-    val prevShuffle = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", statePartitions.toString)
-    try {
+    graft.GraftSession.scoped(s, StatePartitions) {
       val q = df.writeStream
         .outputMode(mode)
         .option("checkpointLocation", ckpt)
@@ -166,7 +166,7 @@ object EventStreams {
         }
         .start()
       q.awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevShuffle)
+    }
     s.read.parquet(outDir)
   }
 

@@ -8,19 +8,33 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Every session is built by [[GraftSession]]: a tool or test that builds
   * its own session grows its own conf set, and then the engine it runs is
-  * not the engine that ships. No SparkSession: a source scan.
+  * not the engine that ships. Every conf change goes through
+  * `GraftSession.scoped`: a write an operator leaves behind changes the
+  * engine every later query runs on. No SparkSession: a source scan.
   */
 class SessionSiteSpec extends AnyFunSuite {
 
-  test("only GraftSession.scala builds a SparkSession") {
-    val needle = "SparkSession" + ".builder"
-    val sites = Seq("src/main/scala", "src/test/scala").flatMap { root =>
+  private def sitesMatching(roots: String*)(hit: String => Boolean): Seq[Path] =
+    roots.flatMap { root =>
       Files.walk(Paths.get(root)).iterator.asScala
-        .filter(p => p.toString.endsWith(".scala") &&
-          Files.readString(p).contains(needle))
+        .filter(p => p.toString.endsWith(".scala") && hit(Files.readString(p)))
         .toSeq
     }
-    assert(sites == Seq(Paths.get("src/main/scala/graft/GraftSession.scala")),
+
+  private val only = Seq(Paths.get("src/main/scala/graft/GraftSession.scala"))
+
+  test("only GraftSession.scala builds a SparkSession") {
+    val needle = "SparkSession" + ".builder"
+    val sites = sitesMatching("src/main/scala", "src/test/scala")(_.contains(needle))
+    assert(sites == only,
       s"sessions built outside GraftSession: ${sites.mkString(", ")}")
+  }
+
+  test("only GraftSession.scala writes the session conf under src/main") {
+    // a chained `.conf` then `.set(` on the next line counts too
+    val write = """\.conf\s*\.(set|unset)\(""".r
+    val sites = sitesMatching("src/main/scala")(write.findFirstIn(_).isDefined)
+    assert(sites == only,
+      s"conf written outside GraftSession: ${sites.mkString(", ")}")
   }
 }

@@ -359,10 +359,8 @@ class SimilaritySpec extends SparkSpec {
       val t = System.currentTimeMillis() - ageMs
       fs.setTimes(lease, t, t)
     }
-    val prevStale = spark.conf.getOption(
-      graft.operators.MaintenanceLease.StaleMsConf)
-    spark.conf.set(graft.operators.MaintenanceLease.StaleMsConf, "60000")
-    try {
+    try GraftSession.scoped(spark,
+        graft.operators.MaintenanceLease.StaleMsConf -> "60000") {
       // fresh foreign lease (age 0 < 60 s): blocked, holder named
       plantLease(ageMs = 0)
       val ex = intercept[graft.operators.MaintenanceLease.LeaseHeldException] {
@@ -382,15 +380,7 @@ class SimilaritySpec extends SparkSpec {
       assert(fs.exists(lease),
         "a usurped op deleted the new holder's lease on exit " +
           "(lock-token bug)")
-    } finally {
-      fs.delete(lease, false)
-      prevStale match {
-        case Some(v) => spark.conf.set(
-          graft.operators.MaintenanceLease.StaleMsConf, v)
-        case None => spark.conf.unset(
-          graft.operators.MaintenanceLease.StaleMsConf)
-      }
-    }
+    } finally fs.delete(lease, false)
   }
 
   test("snapshot fails fast when the source prefix's lease is held") {

@@ -999,8 +999,30 @@ class StreamingSpec extends SparkSpec {
     }
     // threshold 0 forces every micro-batch onto the routed (bulk join)
     // path; the default threshold keeps the literal-pruned batch path —
-    // the serving stream must return row-identical results either way
-    val bulk = serve(0L)
+    // the serving stream must return row-identical results either way.
+    // The routed write's jobs run under Search.BulkTopKConf; the session
+    // does not keep it.
+    val (topKKey, topKValue) = graft.operators.Search.BulkTopKConf
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty(topKKey)))
+          .foreach(seen.add)
+    }
+    val sc = spark.sparkContext
+    val before = GraftSession.effectiveConf(spark)
+    sc.addSparkListener(listener)
+    val bulk =
+      try serve(0L)
+      finally {
+        org.apache.spark.ListenerBusDrain(sc)
+        sc.removeSparkListener(listener)
+      }
+    assert(seen.contains(topKValue),
+      s"no bulk-routed job ran with $topKKey=$topKValue (saw $seen)")
+    assert(GraftSession.effectiveConf(spark) == before,
+      "the bulk-routed serving stream left the session conf changed")
     val lit = serve(graft.operators.Search.BulkRequestThreshold)
     assert(bulk.nonEmpty, "routed serving stream produced no rows")
     assert(bulk == lit,
@@ -1581,14 +1603,14 @@ class StreamingSpec extends SparkSpec {
     // assert the serve throws BEFORE pinning partitions.
     val out2 = ScratchDirs.fresh("graft_stream", "sinkleak").toString
     fs.mkdirs(new org.apache.hadoop.fs.Path(out2, "_sink_absorbed"))
-    val before = spark.conf.get("spark.sql.shuffle.partitions")
+    val before = GraftSession.effectiveConf(spark)
     val thrown = intercept[Exception] {
       DocStreams.hybridServe(spark,
         DocStreams.stagedRequestSplits(reqs, 1), tPrefix, vPrefix, out2,
         k = 5)
     }
-    assert(spark.conf.get("spark.sql.shuffle.partitions") == before,
-      s"a failed sink recovery leaked the pinned shuffle width " +
+    assert(GraftSession.effectiveConf(spark) == before,
+      s"a failed sink recovery left the session conf changed " +
         s"(failure was: $thrown)")
   }
 
