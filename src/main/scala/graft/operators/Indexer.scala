@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 
 import graft.GraftSession
 import graft.functions.Tokenizer
+import graft.operators.Commit.dropManagedTable
 
 /** Inverted-index construction — replaces the reference's three Hadoop
   * Streaming MapReduce jobs + Cassandra loader (app/index.sh, app/mapreduce,
@@ -121,18 +122,6 @@ object Indexer {
     * doc_info stays a plain table (joined by doc_id on an already-tiny
     * candidate set).
     */
-  /** Drop a managed table AND its warehouse location — the catalog is
-    * in-memory per JVM, so a previous run's table directory survives as an
-    * orphan that saveAsTable(overwrite) refuses to reuse.
-    */
-  private[operators] def dropManagedTable(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
-
   def buildBucketedIndex(spark: SparkSession, docs: DataFrame,
                          prefix: String): Unit = {
     Seq("postings", "term_df", "doc_info")
@@ -165,7 +154,7 @@ object Indexer {
     *    both halves would otherwise surface twice with partial dfs). The
     *    merged aggregate is vocabulary-sized — orders of magnitude smaller
     *    than postings — so it is rewritten: staged to a sibling bucketed
-    *    table, then swapped in with catalog renames (a table cannot be
+    *    table, then swapped in by [[Commit.swapTable]] (a table cannot be
     *    overwritten while the overwrite plan reads it).
     */
   def appendBucketedIndex(spark: SparkSession, newDocs: DataFrame,
@@ -181,34 +170,26 @@ object Indexer {
     p.unpersist()
   }
 
-  /** Write `df` to a staging table, then swap it in as `target` with a
-    * rename-aside sequence: target → target_old, staging → target, drop
-    * target_old. Unlike drop-then-rename, every intermediate state keeps a
-    * complete copy of the table under SOME recoverable name — a failure
-    * between statements never leaves the index with no table at all.
-    * (Managed-table RENAME moves the warehouse directory with the table.)
+  /** Write `df` to the staging table `<target>_staged`, then swap it in
+    * as `target` with [[Commit.swapTable]]: a failure at any statement
+    * leaves `target` present.
     */
   private[operators] def stageAndSwap(spark: SparkSession, df: DataFrame,
                                       target: String, bucketed: Boolean,
                                       bucketCol: String = "term"): Unit = {
     val staging = s"${target}_staged"
-    val old = s"${target}_old"
     dropManagedTable(spark, staging)
-    dropManagedTable(spark, old) // leftover from a crashed prior swap
     val w = df.write.mode("overwrite").format("parquet")
     (if (bucketed) w.bucketBy(IndexBuckets, bucketCol).sortBy(bucketCol) else w)
       .saveAsTable(staging)
-    spark.sql(s"ALTER TABLE $target RENAME TO $old")
-    spark.sql(s"ALTER TABLE $staging RENAME TO $target")
-    dropManagedTable(spark, old)
+    Commit.swapTable(spark, staging, target)
   }
 
   /** File count per bucket id of a managed bucketed table (bucket id is
     * encoded in the file name: part-NNNNN-uuid_BBBBB.*.parquet).
     */
   def bucketFileCounts(spark: SparkSession, table: String): Map[Int, Int] = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
+    val path = Commit.warehousePath(spark, table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val bucketRe = "_(\\d{5})\\.".r
     fs.listStatus(path).toSeq.map(_.getPath.getName)
@@ -220,8 +201,8 @@ object Indexer {
   /** Document DELETION from the persisted bucketed index — the lifecycle
     * operation a right-to-be-forgotten request forces on a 100 TB corpus
     * (the reference only ever grows its Cassandra tables; a complete
-    * engine must also shrink them). Three bucket-preserving rewrites, all
-    * swap via the crash-safe rename-aside sequence:
+    * engine must also shrink them). Three bucket-preserving rewrites, each
+    * swapped in by [[Commit.swapTable]]:
     *
     *  - term_df FIRST (while old postings are still live): the deleted
     *    docs' per-term posting counts flow as NEGATIVE df rows into the
@@ -276,12 +257,12 @@ object Indexer {
 
   /** Snapshot the persisted index under a tag — the point-in-time copy a
     * risky maintenance window takes first (append/delete/compact are
-    * individually crash-safe via rename-aside, but a bad BATCH — wrong
+    * individually crash-safe via [[Commit.swapTable]], but a bad BATCH — wrong
     * data appended, over-eager delete set — needs semantic rollback, not
     * crash recovery). Each table is copied through a forced bucketed scan
     * into a same-bucket-spec table, so the snapshot is itself a complete,
     * searchable, pruning-capable index; rollbackIndex swaps it live via
-    * the same rename-aside sequence every other lifecycle op uses. Cost:
+    * the same [[Commit.swapTable]] every other lifecycle op uses. Cost:
     * one read+write of the index (identical shape to compaction); at
     * cluster scale a storage-level snapshot (object-store copy) replaces
     * the data movement, with the same two-name catalog discipline.
@@ -302,7 +283,8 @@ object Indexer {
   /** Restore the live index from a snapshot taken by snapshotIndex. The
     * snapshot is CONSUMED (renamed in); take another if you need to keep it.
     * Swaps the live tables, so it takes the maintenance lease like every
-    * other writer.
+    * other writer. A missing snapshot table fails its swap and leaves that
+    * live table in place.
     */
   def rollbackIndex(spark: SparkSession, prefix: String, tag: String): Unit =
     MaintenanceLease.withLease(spark, prefix, "index-rollback") {
@@ -311,15 +293,8 @@ object Indexer {
 
   private def rollbackIndexImpl(spark: SparkSession, prefix: String,
                                 tag: String): Unit =
-    Seq("postings", "term_df", "doc_info").foreach { t =>
-      val live = s"${prefix}_$t"
-      val snap = s"${prefix}_${tag}_$t"
-      val old = s"${live}_old"
-      dropManagedTable(spark, old)
-      spark.sql(s"ALTER TABLE $live RENAME TO $old")
-      spark.sql(s"ALTER TABLE $snap RENAME TO $live")
-      dropManagedTable(spark, old)
-    }
+    Seq("postings", "term_df", "doc_info").foreach(t =>
+      Commit.swapTable(spark, s"${prefix}_${tag}_$t", s"${prefix}_$t"))
 
   /** Merge two persisted bucketed indexes over DISJOINT corpora into a
     * third — the shard-merge step of distributed index construction (build
@@ -424,8 +399,7 @@ object Indexer {
     * the growth signal for doc_info, which appends one file per batch.
     */
   def tableFileCount(spark: SparkSession, table: String): Int = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, table.toLowerCase)
+    val path = Commit.warehousePath(spark, table)
     val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.listStatus(path).count { f =>
       val n = f.getPath.getName
@@ -442,8 +416,8 @@ object Indexer {
     * for a plain pass-through read), the source produces exactly one
     * partition per bucket, every row in a task already belongs to that
     * task's bucket, and the bucket-spec'd writer emits ONE file per
-    * bucket. The swap reuses the same rename-aside machinery as the
-    * term_df merge. Bucket spec and in-file term sort are preserved, so
+    * bucket. The swap is the same [[Commit.swapTable]] as the term_df
+    * merge. Bucket spec and in-file term sort are preserved, so
     * pruning (SelectedBucketsCount) and the exchange-free term join
     * survive (IndexerSpec pins both).
     *

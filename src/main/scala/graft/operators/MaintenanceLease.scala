@@ -7,7 +7,7 @@ import org.apache.spark.sql.SparkSession
   * ingest streams and the same ops (compact / delete / merge / retrain)
   * also on the CLI, two writers against one store — a scheduled in-stream
   * policy plus a manual run, or two streams sharing a prefix — could
-  * interleave the per-list rename-swap windows with nothing but
+  * interleave their commit windows with nothing but
   * documentation preventing it. The lease turns that contract into a
   * check: every maintenance entry point takes a per-prefix lease file for
   * the duration of its swap sequence and FAILS FAST, naming the holder,
@@ -20,9 +20,10 @@ import org.apache.spark.sql.SparkSession
   * overwrite=false); the file body names the holder (op, host, pid,
   * epoch). A lease left behind by a CRASHED writer expires after
   * `graft.maintenance.lease.staleMs` (default 30 min — crash recovery for
-  * the swap itself is [[VectorIndex]]'s recoverAside / the staged-table
-  * rename sequence, so a stale lease only ever delays the next writer,
-  * never loses data); contention within the window is an error, not a
+  * the swap itself is [[Commit]]'s: a logged directory swap finishes at the
+  * next op's entry, and a table swap never drops the live table, so a
+  * stale lease only ever delays the next writer, never loses data);
+  * contention within the window is an error, not a
   * wait — maintenance is scheduled work, and a blocked scheduler beats
   * two interleaved swap sequences.
   *
@@ -30,7 +31,7 @@ import org.apache.spark.sql.SparkSession
   * appends are the data path the streams already serialize per
   * micro-batch, and serving is read-only (its crash-debris recovery
   * acquires the lease opportunistically precisely so it cannot "recover"
-  * lists a LIVE maintenance op has legitimately renamed aside —
+  * a swap a LIVE maintenance op is in the middle of —
   * [[VectorIndex.ensureRecovered]]).
   *
   * Known residual races, accepted and documented: (a) local-filesystem
@@ -52,10 +53,8 @@ object MaintenanceLease {
     */
   final class LeaseHeldException(msg: String) extends RuntimeException(msg)
 
-  private def leasePath(spark: SparkSession, prefix: String) = {
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    new org.apache.hadoop.fs.Path(wh, s"_graft_lease_${prefix.toLowerCase}")
-  }
+  private def leasePath(spark: SparkSession, prefix: String) =
+    Commit.warehousePath(spark, s"_graft_lease_$prefix")
 
   private def staleMs(spark: SparkSession): Long =
     spark.conf.getOption(StaleMsConf).map(_.toLong).getOrElse(DefaultStaleMs)

@@ -25,7 +25,7 @@ object SignatureIndex {
   /** (Re)build the persisted index from hashed token sets (id, toks). */
   def build(spark: SparkSession, sets: DataFrame, prefix: String,
             numHashes: Int, rowsPerBand: Int): Unit = {
-    Seq("bands", "sets").foreach(t => dropManaged(spark, s"${prefix}_$t"))
+    Seq("bands", "sets").foreach(t => Commit.dropManagedTable(spark, s"${prefix}_$t"))
     bandsOf(sets, numHashes, rowsPerBand)
       .write.saveAsTable(s"${prefix}_bands")
     sets.write.saveAsTable(s"${prefix}_sets")
@@ -71,15 +71,4 @@ object SignatureIndex {
     Dedup.banded(sets.select(
       col("id") +: Dedup.minHashSignaturesHashed(col("toks"), numHashes): _*),
       numHashes, rowsPerBand)
-
-  /** Same managed-table + warehouse-dir cleanup as Indexer (in-memory
-    * catalog orphans table dirs across JVMs).
-    */
-  private def dropManaged(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
 }

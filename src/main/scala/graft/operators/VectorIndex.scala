@@ -56,7 +56,7 @@ object VectorIndex {
     }
     spark.catalog.recoverPartitions(s"${prefix}_vectors")
     if (writeForward) {
-      Indexer.dropManagedTable(spark, s"${prefix}_forward")
+      Commit.dropManagedTable(spark, s"${prefix}_forward")
       emb.select(col("id"), col("v"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(ForwardBuckets, "id").sortBy("id")
@@ -118,7 +118,7 @@ object VectorIndex {
   /** DELETE vectors from the persisted index — the right-to-be-forgotten
     * path (the vector twin of Indexer.deleteFromBucketedIndex). Only the
     * coarse lists that CONTAIN deleted ids are rewritten (anti-join, then
-    * staging + per-partition directory swap — the same atomic unit the
+    * one [[Commit.swapDirs]] of the staged lists — the same commit the
     * compaction pass uses); untouched lists keep their files byte-for-byte.
     * Lists emptied entirely disappear, and the catalog re-syncs its
     * partition set. Quantizers are untouched: a delete never retrains —
@@ -135,127 +135,63 @@ object VectorIndex {
 
   private def deleteImpl(spark: SparkSession, ids: DataFrame, prefix: String): Int = {
     val t = s"${prefix}_vectors"
-    val loc = spark.sessionState.catalog
-      .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(t))
-      .location
-    val root = new org.apache.hadoop.fs.Path(loc)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // restore any crashed-swap debris BEFORE reading or counting anything
-    recoverAside(spark, t, root, fs, asideRootsFor(loc.toString))
+    // finish a crashed swap BEFORE reading or counting anything
+    val lists = recoverLists(spark, prefix)
     val del = ids.select(col("id")).distinct()
     val vecs = spark.table(t)
     val affected = vecs.join(broadcast(del), "id")
       .select(col("cent_id")).distinct().collect().map(_.get(0))
     if (affected.isEmpty) return 0
-    val staging = new org.apache.hadoop.fs.Path(loc.toString + "_delete_staging")
-    fs.delete(staging, true)
     vecs.filter(col("cent_id").isin(affected: _*))
       .join(broadcast(del), Seq("id"), "left_anti")
       .repartition(col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id").parquet(staging.toString)
-    swapListDirs(fs, root, staging,
-      new org.apache.hadoop.fs.Path(loc.toString + "_delete_aside"),
-      affected.toSeq, "delete")
-    spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-    spark.catalog.refreshTable(t)
-    // forward store: anti-join rewrite through a staged table + catalog
-    // rename (same recoverable-at-every-step sequence as the text index's
-    // term_df merge) — bucketed by id, the kept rows can't be rewritten
-    // per-list the way _vectors can
+      .write.mode("overwrite").partitionBy("cent_id")
+      .parquet(lists.staging.toString)
+    swapLists(spark, prefix, lists, affected.toSeq)
+    // forward store: bucketed by id, the kept rows can't be rewritten
+    // per-list the way _vectors can — a staged-table swap instead
     val fwd = s"${prefix}_forward"
-    val kept = spark.table(fwd)
+    Indexer.stageAndSwap(spark, spark.table(fwd)
       .join(broadcast(del), Seq("id"), "left_anti")
-      .select(col("id"), col("v")) // USING join reorders
-    val stagedF = s"${fwd}_staged"
-    val oldF = s"${fwd}_old"
-    Indexer.dropManagedTable(spark, stagedF)
-    Indexer.dropManagedTable(spark, oldF)
-    kept.write.mode("overwrite").format("parquet")
-      .bucketBy(ForwardBuckets, "id").sortBy("id").saveAsTable(stagedF)
-    spark.sql(s"ALTER TABLE $fwd RENAME TO $oldF")
-    spark.sql(s"ALTER TABLE $stagedF RENAME TO $fwd")
-    Indexer.dropManagedTable(spark, oldF)
+      .select(col("id"), col("v")), // USING join reorders
+      fwd, bucketed = true, bucketCol = "id")
     affected.length
   }
 
-  /** Crash recovery for the rename-aside swap, run on ENTRY to delete()
-    * and compact() before anything is counted, read, or deleted: if a
-    * prior maintenance run died between renaming a live list aside and
-    * landing its staged replacement, the aside dir holds the list's only
-    * durable copy (entry cleanup deletes staging debris) — restore every
-    * aside list whose live dir is missing, then clear the aside root
-    * (whatever remains belongs to swaps that completed). Without this,
-    * the next run's debris cleanup would destroy the last copy. Re-syncs
-    * the partition catalog when a restore happened.
-    */
-  private def recoverAside(spark: SparkSession, table: String,
-                           root: org.apache.hadoop.fs.Path,
-                           fs: org.apache.hadoop.fs.FileSystem,
-                           asideRoots: Seq[org.apache.hadoop.fs.Path]): Unit = {
-    var restored = false
-    asideRoots.filter(fs.exists(_)).foreach { asideRoot =>
-      fs.listStatus(asideRoot)
-        .filter(d => d.isDirectory && d.getPath.getName.startsWith("cent_id="))
-        .foreach { d =>
-          val live = new org.apache.hadoop.fs.Path(root, d.getPath.getName)
-          if (!fs.exists(live)) {
-            if (!fs.rename(d.getPath, live))
-              sys.error(s"aside recovery rename failed for ${d.getPath}")
-            restored = true
-          }
-        }
-      fs.delete(asideRoot, true)
-    }
-    if (restored) {
-      spark.sql(s"MSCK REPAIR TABLE $table SYNC PARTITIONS")
-      spark.catalog.refreshTable(table)
-    }
+  /** The `_vectors` store's commit: one `cent_id=N` dir per coarse list. */
+  private def listCommit(spark: SparkSession, prefix: String): Commit = {
+    val root = new org.apache.hadoop.fs.Path(
+      tableLocation(spark, s"${prefix}_vectors"))
+    Commit.partitioned(
+      root.getFileSystem(spark.sparkContext.hadoopConfiguration), root)
   }
 
-  /** Both maintenance ops' aside roots for a `_vectors` location — a
-    * crashed DELETE's debris must be recovered on entry to a COMPACT and
-    * vice versa, so every op checks both.
+  /** Entry recovery for every op that reads or re-points `_vectors`:
+    * finish a crashed list swap (re-syncing the partition catalog when one
+    * lands) or drop an unlogged one's staging. Caller holds the lease.
     */
-  private def asideRootsFor(loc: String): Seq[org.apache.hadoop.fs.Path] =
-    Seq(new org.apache.hadoop.fs.Path(loc + "_delete_aside"),
-      new org.apache.hadoop.fs.Path(loc + "_compact_aside"))
+  private def recoverLists(spark: SparkSession, prefix: String): Commit = {
+    val lists = listCommit(spark, prefix)
+    if (lists.recover()) syncLists(spark, prefix)
+    lists
+  }
 
-  /** Per-list directory swap shared by delete() and compact(): for each
-    * affected cent_id, move the staged rewrite into place with the live dir
-    * renamed ASIDE first — never deleted before its replacement has landed
-    * (the rollback() sequence). A crash or rename failure at any step
-    * leaves the list's rows in at least one of live/aside/staging (and
-    * [[recoverAside]] restores aside debris on the next op's entry); an
-    * in-process rename failure restores the live dir before erroring. A
-    * list with NO staged dir was emptied by the rewrite (every member
-    * deleted, or zero-row append debris) — its live dir is removed, which
-    * IS the committed outcome, and SYNC PARTITIONS drops it.
+  private def syncLists(spark: SparkSession, prefix: String): Unit = {
+    spark.sql(s"MSCK REPAIR TABLE ${prefix}_vectors SYNC PARTITIONS")
+    spark.catalog.refreshTable(s"${prefix}_vectors")
+  }
+
+  /** Swap the staged rewrite of the `affected` lists in, shared by
+    * delete() and compact(). A list the rewrite left no staged dir for was
+    * emptied (every member deleted), so it is removed, and SYNC PARTITIONS
+    * drops it from the catalog.
     */
-  private def swapListDirs(fs: org.apache.hadoop.fs.FileSystem,
-                           root: org.apache.hadoop.fs.Path,
-                           staging: org.apache.hadoop.fs.Path,
-                           asideRoot: org.apache.hadoop.fs.Path,
-                           affected: Seq[Any], op: String): Unit = {
-    fs.delete(asideRoot, true) // debris from a prior COMPLETED run only
-    fs.mkdirs(asideRoot)
-    affected.foreach { c =>
-      val live = new org.apache.hadoop.fs.Path(root, s"cent_id=$c")
-      val next = new org.apache.hadoop.fs.Path(staging, s"cent_id=$c")
-      if (!fs.exists(next)) {
-        fs.delete(live, true)
-      } else {
-        val aside = new org.apache.hadoop.fs.Path(asideRoot, s"cent_id=$c")
-        if (fs.exists(live) && !fs.rename(live, aside))
-          sys.error(s"vector $op aside-rename failed for cent_id=$c")
-        if (!fs.rename(next, live)) {
-          fs.rename(aside, live) // restore — no data-loss window
-          sys.error(s"vector $op rename failed for cent_id=$c")
-        }
-        fs.delete(aside, true)
-      }
-    }
-    fs.delete(staging, true)
-    fs.delete(asideRoot, true)
+  private def swapLists(spark: SparkSession, prefix: String, lists: Commit,
+                        affected: Seq[Any]): Unit = {
+    val (targets, emptied) = affected.map(c => s"cent_id=$c")
+      .partition(n => lists.fs.exists(lists.staged(n)))
+    lists.swapDirs(targets, emptied)
+    syncLists(spark, prefix)
   }
 
   /** Data-file count per coarse-list partition directory of `_vectors`
@@ -287,8 +223,8 @@ object VectorIndex {
     * are byte-identical before and after, only the file layout changes.
     *
     *  - `_vectors`: only lists whose directory exceeds `maxFilesPerUnit`
-    *    data files are rewritten (staging dir + per-partition rename —
-    *    the atomic unit delete() already uses); untouched lists keep
+    *    data files are rewritten (staging dir + [[Commit.swapDirs]] —
+    *    the commit delete() already uses); untouched lists keep
     *    their files byte-for-byte. `repartition(cent_id)` collapses each
     *    rewritten list to one task → one file.
     *  - `_forward`: bucket file counts from the managed table's warehouse
@@ -308,32 +244,23 @@ object VectorIndex {
 
   private def compactImpl(spark: SparkSession, prefix: String,
                           maxFilesPerUnit: Int): Boolean = {
-    val t = s"${prefix}_vectors"
-    val loc = tableLocation(spark, t)
-    val root = new org.apache.hadoop.fs.Path(loc)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // restore any crashed-swap debris BEFORE counting files — a restored
-    // list must be counted (and is usually exactly the one over threshold)
-    recoverAside(spark, t, root, fs, asideRootsFor(loc))
+    // finish a crashed swap BEFORE counting files — a landed list must
+    // be counted (and is usually exactly the one over threshold)
+    val lists = recoverLists(spark, prefix)
     val counts = listFileCounts(spark, prefix)
     val affected = counts.filter(_._2 > maxFilesPerUnit).keys.toSeq
       .map(_.stripPrefix("cent_id="))
     val didVectors = affected.nonEmpty
     if (didVectors) {
-      val staging = new org.apache.hadoop.fs.Path(loc + "_compact_staging")
-      fs.delete(staging, true)
       // partition values are numeric by construction (cent_id = centroid
       // ordinal); a raw IN-list literal matches whatever width the
       // partition-column inference chose, so pruning still applies
-      spark.table(t)
+      spark.table(s"${prefix}_vectors")
         .filter(expr(s"cent_id IN (${affected.mkString(", ")})"))
         .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id").parquet(staging.toString)
-      swapListDirs(fs, root, staging,
-        new org.apache.hadoop.fs.Path(loc + "_compact_aside"),
-        affected, "compaction")
-      spark.sql(s"MSCK REPAIR TABLE $t SYNC PARTITIONS")
-      spark.catalog.refreshTable(t)
+        .write.mode("overwrite").partitionBy("cent_id")
+        .parquet(lists.staging.toString)
+      swapLists(spark, prefix, lists, affected)
     }
     val fwd = s"${prefix}_forward"
     val fwdCounts = Indexer.bucketFileCounts(spark, fwd)
@@ -362,22 +289,14 @@ object VectorIndex {
   private def copyIndex(spark: SparkSession, from: String, to: String): Unit =
     // the SOURCE lease is held for the whole copy (ADVICE r12): the old
     // warn-and-proceed ensureRecovered let a snapshot raced against another
-    // process's compact/delete copy mid-swap state with a list renamed
-    // aside — now contention fails fast like every other maintenance op,
-    // and no new maintenance can start mid-copy. The in-stream retrain
-    // policy catches the LeaseHeldException as skip-and-retry.
+    // process's compact/delete copy mid-swap state with a list missing —
+    // now contention fails fast like every other maintenance op, and no
+    // new maintenance can start mid-copy. The in-stream retrain policy
+    // catches the LeaseHeldException as skip-and-retry.
     MaintenanceLease.withLease(spark, from, "snapshot-read") {
       // a snapshot taken between a crash and the next maintenance op must
-      // not bake a mid-swap missing list into the fence copy (ADVICE r11);
-      // recoverAside directly — we already hold the lease ensureRecovered
-      // would try to take
-      locally {
-        val t = s"${from}_vectors"
-        val loc = tableLocation(spark, t)
-        val root = new org.apache.hadoop.fs.Path(loc)
-        val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        recoverAside(spark, t, root, fs, asideRootsFor(loc))
-      }
+      // not bake a mid-swap missing list into the fence copy (ADVICE r11)
+      recoverLists(spark, from)
       copyIndexImpl(spark, from, to)
     }
 
@@ -396,7 +315,7 @@ object VectorIndex {
       if (t == "vectors") spark.catalog.recoverPartitions(toT)
     }
     val fwdTo = s"${to}_forward"
-    Indexer.dropManagedTable(spark, fwdTo)
+    Commit.dropManagedTable(spark, fwdTo)
     spark.table(s"${from}_forward")
       .write.mode("overwrite").format("parquet")
       .bucketBy(ForwardBuckets, "id").sortBy("id").saveAsTable(fwdTo)
@@ -447,6 +366,27 @@ object VectorIndex {
     }
   }
 
+  /** Snapshot-fenced retrain under ONE lease (ADVICE r13): the fence copy
+    * and the retrain it protects are a single maintenance operation, so
+    * taking separate leases (snapshot releases, retrain re-acquires) left
+    * a gap — another writer grabbing the lease between them skipped the
+    * retrain but left the just-taken `_<tag>` snapshot lingering, and any
+    * append/delete landing in the gap would be silently reverted by a
+    * later rollback to the fence. Holding the lease across both makes the
+    * pair atomic against other writers: contention skips BOTH (no
+    * orphaned fence), and nothing can write between fence and retrain.
+    */
+  def snapshotFencedRetrain(spark: SparkSession, prefix: String,
+                            iters: Int = 2,
+                            tag: String = "preretrain"): Unit =
+    MaintenanceLease.withLease(spark, prefix, "snapshot-fenced-retrain") {
+      // one recovery serves both halves (snapshot and retrain each do
+      // exactly this under their own lease)
+      recoverLists(spark, prefix)
+      copyIndexImpl(spark, prefix, s"${prefix}_$tag")
+      retrainImpl(spark, prefix, iters, nlistOverride = None)
+    }
+
   /** RETRAIN the quantizers of a persisted index from its own forward
     * store — the drift remedy the maintenance loop closes with: append and
     * delete never retrain (standard IVF-PQ), so a corpus that drifts from
@@ -472,42 +412,13 @@ object VectorIndex {
     * CLI's `vretrain` takes the snapshot automatically). Old directories
     * are never deleted, so no state is unrecoverable.
     */
-  /** Snapshot-fenced retrain under ONE lease (ADVICE r13): the fence copy
-    * and the retrain it protects are a single maintenance operation, so
-    * taking separate leases (snapshot releases, retrain re-acquires) left
-    * a gap — another writer grabbing the lease between them skipped the
-    * retrain but left the just-taken `_<tag>` snapshot lingering, and any
-    * append/delete landing in the gap would be silently reverted by a
-    * later rollback to the fence. Holding the lease across both makes the
-    * pair atomic against other writers: contention skips BOTH (no
-    * orphaned fence), and nothing can write between fence and retrain.
-    */
-  def snapshotFencedRetrain(spark: SparkSession, prefix: String,
-                            iters: Int = 2,
-                            tag: String = "preretrain"): Unit =
-    MaintenanceLease.withLease(spark, prefix, "snapshot-fenced-retrain") {
-      // one recoverAside serves both halves (snapshot and retrain each do
-      // exactly this under their own lease)
-      val t = s"${prefix}_vectors"
-      val loc = tableLocation(spark, t)
-      val root = new org.apache.hadoop.fs.Path(loc)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recoverAside(spark, t, root, fs, asideRootsFor(loc))
-      copyIndexImpl(spark, prefix, s"${prefix}_$tag")
-      retrainImpl(spark, prefix, iters, nlistOverride = None)
-    }
-
   def retrain(spark: SparkSession, prefix: String, iters: Int = 2,
               nlistOverride: Option[Int] = None): Unit =
     MaintenanceLease.withLease(spark, prefix, "vector-retrain") {
-      // clear crashed-swap debris first (ADVICE r11): retrain never reads
-      // `_vectors`, but build()'s re-point would orphan the aside copy
-      // forever (asideRootsFor derives from the NEW location afterwards)
-      val t = s"${prefix}_vectors"
-      val loc = tableLocation(spark, t)
-      val root = new org.apache.hadoop.fs.Path(loc)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      recoverAside(spark, t, root, fs, asideRootsFor(loc))
+      // finish a crashed list swap first (ADVICE r11): retrain never reads
+      // `_vectors`, but build()'s re-point would orphan its intent and
+      // staging forever (listCommit derives from the NEW location after)
+      recoverLists(spark, prefix)
       retrainImpl(spark, prefix, iters, nlistOverride)
     }
 
@@ -621,18 +532,11 @@ object VectorIndex {
       if (t == "vectors") spark.catalog.recoverPartitions(liveT)
       spark.catalog.refreshTable(liveT)
     }
-    // forward store: managed-table RENAME moves the directory AND keeps
-    // the bucket spec — pure catalog surgery, snapshot consumed like the
-    // external parts. Rename live aside FIRST and drop it LAST (the
-    // recoverable-at-every-step sequence delete() uses): dropping the live
-    // table before the snapshot rename would destroy the only copy if the
-    // snapshot's forward table is missing or its rename fails.
+    // forward store: a managed table, so a catalog swap — the snapshot is
+    // consumed like the external parts, and a missing snapshot table
+    // leaves the live one in place
     val fwdLive = s"${prefix}_forward"
-    val fwdOld = s"${fwdLive}_old"
-    Indexer.dropManagedTable(spark, fwdOld) // leftover from a crashed swap
-    spark.sql(s"ALTER TABLE $fwdLive RENAME TO $fwdOld")
-    spark.sql(s"ALTER TABLE ${prefix}_${tag}_forward RENAME TO $fwdLive")
-    Indexer.dropManagedTable(spark, fwdOld)
+    Commit.swapTable(spark, s"${prefix}_${tag}_forward", fwdLive)
     spark.catalog.refreshTable(fwdLive)
   }
 
@@ -664,35 +568,24 @@ object VectorIndex {
     servePlan(spark, prefix, probes, k, nprobe, shortlist, withVector,
       broadcastProbes = false)
 
-  /** Crash-debris check shared by the READ entry points (serving, the
-    * snapshot copy): if either maintenance op's aside root exists, a prior
+  /** Crash check on the serving path: a logged list swap means a prior
     * run crashed mid-swap and the live `_vectors` may be missing a list —
-    * recover it NOW rather than silently under-returning until the next
+    * finish it NOW rather than silently under-returning until the next
     * delete/compact (ADVICE r11). Recovery runs under the maintenance
-    * lease, taken OPPORTUNISTICALLY: when a live op holds it, the "debris"
-    * is that op's in-flight swap, which its own sequence will land or its
-    * successor recover — touching it here would corrupt the swap, so the
-    * read proceeds (serving across a live swap window was always the
-    * documented transient; the lease now bounds it to genuinely-live ops).
-    * Cost on the hot serve path: two fs.exists calls, nothing else, in the
-    * no-debris case.
+    * lease, taken OPPORTUNISTICALLY: when a live op holds it, the intent
+    * is that op's in-flight swap, which it lands itself, so the read
+    * proceeds (the documented transient of a live swap). Cost on the hot
+    * serve path: one fs.exists call when no swap is logged.
     */
   private def ensureRecovered(spark: SparkSession, prefix: String,
                               context: String): Unit = {
-    val t = s"${prefix}_vectors"
-    val loc = tableLocation(spark, t)
-    val root = new org.apache.hadoop.fs.Path(loc)
-    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (asideRootsFor(loc).exists(fs.exists)) {
-      val done = MaintenanceLease
-        .tryWithLease(spark, prefix, "aside-recovery") {
-          recoverAside(spark, t, root, fs, asideRootsFor(loc))
-        }
-      if (done.isEmpty)
-        System.err.println(s"[graft] $prefix has aside-swap directories " +
-          s"and a live maintenance op holds the lease — proceeding " +
-          s"without recovery ($context; transient while the op runs)")
-    }
+    val lists = listCommit(spark, prefix)
+    if (lists.fs.exists(lists.intent) && MaintenanceLease
+        .tryWithLease(spark, prefix, "commit-recovery")(
+          recoverLists(spark, prefix)).isEmpty)
+      System.err.println(s"[graft] $prefix has a logged list swap and a " +
+        s"live maintenance op holds the lease — proceeding without " +
+        s"recovery ($context; transient while the op runs)")
   }
 
   private def servePlan(spark: SparkSession, prefix: String, probes: DataFrame,

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 import graft.Tables
+import graft.operators.Commit
+import graft.operators.Commit.dropManagedTable
 
 /** Data-LAYOUT lifecycle queries: the physical-design levers a 100 TB
   * deployment lives by, each proven end-to-end against an oracle that
@@ -38,18 +40,6 @@ object LayoutQueries {
 
   private def tName(dir: String, name: String): String =
     "layout_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + name
-
-  /** Drop a managed table AND its warehouse directory (the in-memory
-    * catalog forgets tables across JVMs but their directories survive and
-    * block a later saveAsTable).
-    */
-  private def dropManagedTable(spark: SparkSession, name: String): Unit = {
-    spark.sql(s"DROP TABLE IF EXISTS $name")
-    val wh = spark.conf.get("spark.sql.warehouse.dir")
-    val path = new org.apache.hadoop.fs.Path(wh, name.toLowerCase)
-    val fs = path.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(path)) fs.delete(path, true)
-  }
 
   // ---- bucketed fact⋈fact ----------------------------------------------------
 
@@ -254,40 +244,32 @@ object LayoutQueries {
 
   /** Rewrite the partitions of a day-partitioned parquet PATH whose file
     * count exceeds `maxFilesPerPartition`, preserving the partition layout
-    * (dynamic overwrite touches only the heavy partitions). One
-    * repartition by the partition key means each rewritten directory
-    * collapses to a single file. The generic-table twin of
-    * Indexer.compactBucketedIndex — appends grow one file per batch per
-    * partition, and scan efficiency decays until the maintenance pass
-    * runs.
+    * (only the heavy partitions are touched). One repartition by the
+    * partition key means each rewritten directory collapses to a single
+    * file. The generic-table twin of Indexer.compactBucketedIndex —
+    * appends grow one file per batch per partition, and scan efficiency
+    * decays until the maintenance pass runs. The rewrite is staged, then
+    * swapped in by [[Commit.swapDirs]] (Spark refuses to overwrite a path
+    * it is reading); entry recovery finishes a crashed swap first.
     */
   def compactDayPartitions(s: SparkSession, path: String,
                            maxFilesPerPartition: Int): Seq[String] = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val days = Commit.partitioned(fs, root)
+    days.recover()
     val heavy = fs.listStatus(root).toSeq
       .filter(st => st.isDirectory && st.getPath.getName.startsWith("day="))
       .filter(st => fs.listStatus(st.getPath)
         .count(f => f.getPath.getName.endsWith(".parquet")) > maxFilesPerPartition)
       .map(st => st.getPath.getName.stripPrefix("day="))
     if (heavy.nonEmpty) {
-      // rewrite to a staging root, then swap each heavy partition's
-      // DIRECTORY in (Spark refuses to overwrite a path it is reading, and
-      // per-partition rename is the atomic unit real compaction ships)
-      val staging = new org.apache.hadoop.fs.Path(path + "_compact_staging")
-      fs.delete(staging, true)
       s.read.option("basePath", path).parquet(path)
         .filter(col("day").isin(heavy: _*))
         .repartition(col("day"))
-        .write.mode("overwrite").partitionBy("day").parquet(staging.toString)
-      heavy.foreach { d =>
-        val live = new org.apache.hadoop.fs.Path(root, s"day=$d")
-        val next = new org.apache.hadoop.fs.Path(staging, s"day=$d")
-        fs.delete(live, true)
-        if (!fs.rename(next, live))
-          sys.error(s"compaction rename failed for partition day=$d")
-      }
-      fs.delete(staging, true)
+        .write.mode("overwrite").partitionBy("day")
+        .parquet(days.staging.toString)
+      days.swapDirs(heavy.map(d => s"day=$d"), Nil)
     }
     heavy
   }

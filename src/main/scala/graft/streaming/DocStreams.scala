@@ -45,22 +45,21 @@ object DocStreams {
     */
   def stagedDocSplits(docs: DataFrame, nFiles: Int): String = {
     val dir = graft.ScratchDirs.fresh("graft_stream", "docs_src")
-    (0 until nFiles).foreach { i =>
-      val tmp = dir.resolve(s"_split_$i")
-      docs.filter(pmod(col("doc_id"), lit(nFiles)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"doc split $i produced no parquet part file"))
-      java.nio.file.Files.move(part.toPath,
-        dir.resolve(if (i == 0) "documents.parquet" else s"documents.parquet$i"))
-      locally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively(): Unit
-      }
-    }
+    writeSplits(docs, "doc_id", nFiles, dir, "documents.parquet", startAt = 0)
     dir.toString
   }
+
+  /** Write `df` as `nFiles` single-file splits (`key` mod nFiles) into
+    * `dir`, named `file`, `file1`, `file2`, ... counting from `startAt`.
+    */
+  private def writeSplits(df: DataFrame, key: String, nFiles: Int,
+                          dir: java.nio.file.Path, file: String,
+                          startAt: Int): Unit =
+    (0 until nFiles).foreach { i =>
+      val n = startAt + i
+      EventStreams.writeSingleFile(df.filter(pmod(col(key), lit(nFiles)) === i),
+        dir, if (n == 0) file else s"$file$n")
+    }
 
   /** Stateful LSH bucket-collision detection: per-bucket keyed state holds
     * every id seen in that bucket so far; each arriving id emits a
@@ -359,20 +358,7 @@ object DocStreams {
     */
   def stagedEmbSplits(emb: DataFrame, nFiles: Int): String = {
     val dir = graft.ScratchDirs.fresh("graft_stream", "emb_src")
-    (0 until nFiles).foreach { i =>
-      val tmp = dir.resolve(s"_split_$i")
-      emb.filter(pmod(col("id"), lit(nFiles)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"emb split $i produced no parquet part file"))
-      java.nio.file.Files.move(part.toPath,
-        dir.resolve(if (i == 0) "embeddings.parquet" else s"embeddings.parquet$i"))
-      locally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively(): Unit
-      }
-    }
+    writeSplits(emb, "id", nFiles, dir, "embeddings.parquet", startAt = 0)
     dir.toString
   }
 
@@ -395,24 +381,9 @@ object DocStreams {
     * so batch order stays deterministic.
     */
   def stageRequestSplitsInto(dirPath: String, reqs: DataFrame, nFiles: Int,
-                             startAt: Int): Unit = {
-    val dir = java.nio.file.Paths.get(dirPath)
-    (0 until nFiles).foreach { i =>
-      val tmp = dir.resolve(s"_split_${startAt + i}")
-      reqs.filter(pmod(col("query_id"), lit(nFiles)) === i)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.toFile.listFiles()
-        .find(f => f.getName.startsWith("part-") && f.getName.endsWith(".parquet"))
-        .getOrElse(sys.error(s"request split $i produced no parquet part file"))
-      java.nio.file.Files.move(part.toPath,
-        dir.resolve(if (startAt + i == 0) "requests.parquet"
-        else s"requests.parquet${startAt + i}"))
-      locally {
-        import scala.reflect.io.Directory
-        new Directory(tmp.toFile).deleteRecursively(): Unit
-      }
-    }
-  }
+                             startAt: Int): Unit =
+    writeSplits(reqs, "query_id", nFiles, java.nio.file.Paths.get(dirPath),
+      "requests.parquet", startAt)
 
   /** ONLINE hybrid serving: a micro-batched request stream (query_id =
     * stored probe vector id, query_text) served from the persisted
@@ -450,20 +421,18 @@ object DocStreams {
     * results-invisible: the union read bin-packs the small files and
     * writes few large ones.
     *
-    * Crash safety, same discipline as the index swaps (staged + marker +
-    * recover-at-entry): the staged union is written under an
-    * underscore-prefixed name (invisible to parquet readers), THEN a
-    * marker naming the target and every absorbed dir is created, THEN the
-    * absorbed dirs delete and the staging renames into place, THEN the
-    * marker deletes. A crash at any point recovers at the next
-    * compaction-capable stream start or batch: marker present → staging
-    * is authoritative (it was complete before the marker existed), so
-    * recovery deletes the listed dirs, lands the staging at the named
-    * target if not already landed, and clears the marker; marker absent →
-    * any stale staging is an incomplete write whose rows are all still
-    * live, deleted outright. Readers see a transient under-return between
-    * the deletes and the rename (the documented maintenance transient the
-    * vector index shares), never a duplicate.
+    * Crash safety is [[graft.operators.Commit.swapDirs]], the commit the
+    * index stores use: the staged union is written to `_sink_staging`
+    * (underscore-prefixed, invisible to parquet readers), THEN the intent
+    * `_sink_absorbed` (`target=<name>`, then one absorbed dir per line)
+    * lands by tmp+rename, THEN the absorbed dirs delete and the staging
+    * renames into place, THEN the intent deletes. A crash at any point
+    * recovers at the next compaction-capable stream start or batch: intent
+    * present → the swap is finished; intent absent → any stale staging is
+    * an incomplete write whose rows are all still live, deleted outright.
+    * Readers see a transient under-return between the deletes and the
+    * rename (the documented maintenance transient the vector index
+    * shares), never a duplicate.
     */
   private[graft] def recoverSinkCompaction(s: SparkSession, outPath: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(outPath)
@@ -484,7 +453,7 @@ object DocStreams {
   }
 
   /** Full sink recovery under a held lease: first the swap-level protocol
-    * (a crashed compaction/forget SWAP — staging + absorbed-marker), then
+    * (a crashed compaction/forget SWAP — staging + absorbed intent), then
     * the forget-level one (a forget crashed BETWEEN its two swaps — the
     * erasure marker + persisted id list let recovery finish the purge
     * instead of leaving it silently partial; VERDICT r14 "what's wrong"
@@ -494,60 +463,18 @@ object DocStreams {
   private def recoverSinkLocked(
       s: SparkSession, root: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    recoverSinkCompactionLocked(s, root, fs)
+    sinkCommit(fs, root).recover()
     recoverSinkForgetLocked(s, root, fs)
   }
 
-  private def recoverSinkCompactionLocked(
-      s: SparkSession, root: org.apache.hadoop.fs.Path,
-      fs: org.apache.hadoop.fs.FileSystem): Unit = {
-    val marker = new org.apache.hadoop.fs.Path(root, "_sink_absorbed")
+  /** The sink's [[graft.operators.Commit]]: one target per swap, staged
+    * as `_sink_staging` itself, logged in `_sink_absorbed`.
+    */
+  private def sinkCommit(fs: org.apache.hadoop.fs.FileSystem,
+                         root: org.apache.hadoop.fs.Path): graft.operators.Commit = {
     val staging = new org.apache.hadoop.fs.Path(root, "_sink_staging")
-    // a .tmp marker is an INCOMPLETE write (the real marker lands by
-    // atomic rename): the crashed compaction never reached its
-    // destructive phase, so every row is still live in the source dirs —
-    // drop the debris. Without the rename protocol a partially-written
-    // marker would mislead recovery into deleting only the parsed subset
-    // of absorbed dirs and landing the staging beside the rest:
-    // duplicates (AUDIT_r13 #16).
-    fs.delete(new org.apache.hadoop.fs.Path(root, "_sink_absorbed.tmp"),
-      false)
-    if (fs.exists(marker)) {
-      val in = fs.open(marker)
-      val lines = new String(
-        org.apache.commons.io.IOUtils.toByteArray(in), "UTF-8")
-        .split("\n").map(_.trim).filter(_.nonEmpty).toSeq
-      in.close()
-      val target = lines.head.stripPrefix("target=")
-      System.err.println(s"[graft] completing crashed sink compaction at " +
-        s"$root (target $target)")
-      val targetPath = new org.apache.hadoop.fs.Path(root, target)
-      // the staging's existence decides HOW FAR the crashed swap got —
-      // critical when the target's name is also in the absorbed list (a
-      // swap absorbing a same-named prior generation, the tier-0
-      // collision form, or an in-place purge): post-rename, the dir at
-      // the target name is the RESULT, and deleting every listed dir
-      // unconditionally would destroy it (AUDIT_r14 #14)
-      if (fs.exists(staging)) {
-        // rename not reached: every listed dir is still the absorbed
-        // SOURCE (a same-named one is the old generation) — delete them
-        // all, then land the staging
-        lines.tail.foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, d), true): Unit)
-        if (!fs.rename(staging, targetPath))
-          sys.error(s"sink compaction recovery rename failed for $target")
-      } else
-        // staging gone = the rename happened (it was complete before the
-        // marker existed, so only the rename can have consumed it): the
-        // swap is done — clear any absorbed leftovers EXCEPT the landed
-        // target, then the marker
-        lines.tail.filter(_ != target).foreach(d =>
-          fs.delete(new org.apache.hadoop.fs.Path(root, d), true): Unit)
-      fs.delete(marker, false): Unit
-    } else
-      // no marker: an incomplete staged write whose rows are all still
-      // live in the source dirs — drop it
-      fs.delete(staging, true): Unit
+    graft.operators.Commit(fs, root,
+      new org.apache.hadoop.fs.Path(root, "_sink_absorbed"), staging, _ => staging)
   }
 
   /** TIERED absorption (VERDICT r13 "what's wrong" #2): a single-tier
@@ -757,16 +684,10 @@ object DocStreams {
         .parquet(idsDir.toString)
       // the marker gates "an erasure is owed": written AFTER the id list
       // is durable (so a present marker always has a complete list to
-      // resume from) by the same tmp+rename discipline as the swap marker
-      val marker =
-        new org.apache.hadoop.fs.Path(root, "_sink_forget_pending")
-      val markerTmp =
-        new org.apache.hadoop.fs.Path(root, "_sink_forget_pending.tmp")
-      val out = fs.create(markerTmp, true)
-      out.write("ids=_sink_forget_ids\n".getBytes("UTF-8"))
-      out.close()
-      if (!fs.rename(markerTmp, marker))
-        sys.error("sink forget marker rename failed")
+      // resume from), all-or-nothing like the swap intent
+      graft.operators.Commit.writeMarker(fs,
+        new org.apache.hadoop.fs.Path(root, "_sink_forget_pending"),
+        "ids=_sink_forget_ids\n")
       forgetLocked(s, root, fs)
     }
   }
@@ -953,11 +874,11 @@ object DocStreams {
         val resultDirs = st.filter(d => d.isDirectory &&
           (d.getPath.getName.startsWith("batch_id=") ||
             d.getPath.getName.startsWith("compacted_")))
+        val swap = sinkCommit(fs, root)
         (dirs.count(_.startsWith("batch_id=")).toLong,
           dirs.count(_.startsWith("compacted_")).toLong,
           resultDirs.map(d => fs.getContentSummary(d.getPath).getLength).sum,
-          fs.exists(new org.apache.hadoop.fs.Path(root, "_sink_absorbed")) ||
-            fs.exists(new org.apache.hadoop.fs.Path(root, "_sink_staging")),
+          fs.exists(swap.intent) || fs.exists(swap.staging),
           fs.exists(
             new org.apache.hadoop.fs.Path(root, "_sink_forget_pending")),
           countSinkLineages(fs, root).toLong)
@@ -972,14 +893,14 @@ object DocStreams {
   }
 
   /** One staged swap: union `absorb` (through `transform` — identity for
-    * compaction, an anti-join for forget) into `_sink_staging`, marker,
-    * delete absorbed, rename staging to `target` — the crash protocol
-    * [[recoverSinkCompaction]] completes. Caller holds the sink lease.
-    * The target name MAY be in the absorb set (same-named prior
-    * generation, or an in-place purge): the staging write happens before
-    * the marker, and recovery distinguishes pre- from post-rename by the
-    * staging's existence, so the same-named source deletes as a source
-    * and the landed result is never mistaken for one.
+    * compaction, an anti-join for forget) into `_sink_staging`, then
+    * [[graft.operators.Commit.swapDirs]] lands it at `target` and deletes
+    * the absorbed dirs — the commit [[recoverSinkCompaction]] finishes.
+    * Caller holds the sink lease. The target name MAY be in the absorb set
+    * (same-named prior generation, or an in-place purge): recovery tells
+    * pre- from post-rename by the staging's existence, so the same-named
+    * source deletes as a source and the landed result is never mistaken
+    * for one (AUDIT_r14 #14).
     */
   private def swapServingSink(s: SparkSession,
                               root: org.apache.hadoop.fs.Path,
@@ -988,29 +909,14 @@ object DocStreams {
                               target: String,
                               transform: DataFrame => DataFrame =
                                 identity): Boolean = {
-    val staging = new org.apache.hadoop.fs.Path(root, "_sink_staging")
-    fs.delete(staging, true)
+    val swap = sinkCommit(fs, root)
     // recursiveFileLookup disables partition inference — without it the
     // batch_id=K path components would be inferred as a partition column
     // and conflict with the compacted_M dirs' non-kv names
     transform(s.read.option("recursiveFileLookup", "true")
       .parquet(absorb.map(_.toString): _*))
-      .write.mode("overwrite").parquet(staging.toString)
-    // the marker gates the destructive phase, so it must be all-or-
-    // nothing: write to a .tmp and RENAME into place (atomic on local
-    // and HDFS) — recovery treats a .tmp as never-started
-    val marker = new org.apache.hadoop.fs.Path(root, "_sink_absorbed")
-    val markerTmp = new org.apache.hadoop.fs.Path(root, "_sink_absorbed.tmp")
-    val out = fs.create(markerTmp, true)
-    out.write((s"target=$target\n" + absorb.map(_.getName).mkString("\n"))
-      .getBytes("UTF-8"))
-    out.close()
-    if (!fs.rename(markerTmp, marker))
-      sys.error("sink compaction marker rename failed")
-    absorb.foreach(p => fs.delete(p, true): Unit)
-    if (!fs.rename(staging, new org.apache.hadoop.fs.Path(root, target)))
-      sys.error(s"sink compaction rename failed for $target")
-    fs.delete(marker, false)
+      .write.mode("overwrite").parquet(swap.staging.toString)
+    swap.swapDirs(Seq(target), absorb.map(_.getName))
     true
   }
 

@@ -88,12 +88,6 @@ object EventStreams {
   private def memoStaged(key: String)(build: => String): String =
     stagedDirCache.computeIfAbsent(key, _ => { lazy val v = build; () => v })()
 
-  /** Write `df` as ONE flat parquet file at `dir/name` (stream-source
-    * staging: files must match the `events.parquet*` glob, and writing
-    * through Spark — rather than copying the source file — guarantees
-    * every staged file carries the SAME canonical ts type regardless of
-    * which physical timestamp the driver's parquet shipped).
-    */
   /** Cast every column of a synthetic (sentinel/fake) row frame to the
     * reference frame's exact types. Synthetic rows are built from
     * literals (lit(0.0) is double, lit(-1L) is long); if a testdata
@@ -104,8 +98,15 @@ object EventStreams {
   private def conformTo(df: DataFrame, ref: DataFrame): DataFrame =
     df.select(ref.schema.map(f => col(f.name).cast(f.dataType).as(f.name)): _*)
 
-  private def writeSingleFile(df: DataFrame, dir: java.nio.file.Path,
-                              name: String): Unit = {
+  /** Write `df` as ONE flat parquet file at `dir/name` (stream-source
+    * staging: files must match a `<name>*` glob such as `events.parquet*`,
+    * and writing through Spark — rather than copying the source file —
+    * guarantees every staged file carries the SAME canonical ts type
+    * whichever physical timestamp type the source parquet uses).
+    * The one single-file staging writer: DocStreams' split stagers use it.
+    */
+  private[streaming] def writeSingleFile(df: DataFrame, dir: java.nio.file.Path,
+                                         name: String): Unit = {
     val tmp = dir.resolve(s"_tmp_$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
     val part = tmp.toFile.listFiles()

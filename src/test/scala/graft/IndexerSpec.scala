@@ -300,6 +300,23 @@ class IndexerSpec extends SparkSpec {
       s"rolled-back index shuffles the term join:\n$p")
   }
 
+  test("rollback to a tag with no snapshot throws and keeps the live index") {
+    val prefix = "graft_idx_rbmiss_spec"
+    Indexer.buildBucketedIndex(spark, docs, prefix)
+    val query = "big data spark"
+    val before = Search.searchPrebuilt(spark, query, prefix).collect().toSeq
+    assert(before.nonEmpty, "query matches nothing — the check is vacuous")
+    intercept[Exception](Indexer.rollbackIndex(spark, prefix, "typo"))
+    assert(Search.searchPrebuilt(spark, query, prefix).collect().toSeq == before,
+      "a failed rollback changed the live index")
+    // a second failed rollback must not drop anything either
+    intercept[Exception](Indexer.rollbackIndex(spark, prefix, "typo"))
+    assert(Search.searchPrebuilt(spark, query, prefix).collect().toSeq == before)
+    val left = spark.catalog.listTables().collect().map(_.name)
+      .filter(n => n.startsWith(prefix) && n.endsWith("_old"))
+    assert(left.isEmpty, s"failed rollback left tables: ${left.mkString(", ")}")
+  }
+
   test("deletion purges postings, decrements term_df, drops vanished terms") {
     val prefix = "graft_idx_delete_spec"
     val d = Tables.documents(spark, "/root/testdata/sf0.001")

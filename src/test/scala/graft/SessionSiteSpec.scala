@@ -10,7 +10,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * its own session grows its own conf set, and then the engine it runs is
   * not the engine that ships. Every conf change goes through
   * `GraftSession.scoped`: a write an operator leaves behind changes the
-  * engine every later query runs on. No SparkSession: a source scan.
+  * engine every later query runs on. Every rename that moves data into
+  * place goes through `graft.operators.Commit`, the one crash protocol.
+  * No SparkSession: a source scan.
   */
 class SessionSiteSpec extends AnyFunSuite {
 
@@ -36,5 +38,12 @@ class SessionSiteSpec extends AnyFunSuite {
     val sites = sitesMatching("src/main/scala")(write.findFirstIn(_).isDefined)
     assert(sites == only,
       s"conf written outside GraftSession: ${sites.mkString(", ")}")
+  }
+
+  test("only Commit.scala renames data into place under src/main") {
+    val rename = """fs\.rename\(|RENAME TO""".r
+    val sites = sitesMatching("src/main/scala")(rename.findFirstIn(_).isDefined)
+    assert(sites == Seq(Paths.get("src/main/scala/graft/operators/Commit.scala")),
+      s"renames outside Commit: ${sites.mkString(", ")}")
   }
 }

@@ -262,10 +262,9 @@ class SimilaritySpec extends SparkSpec {
       .searchPrebuilt(spark, prefix, probes, k = 5, nprobe = 4, shortlist = 20)
       .collect().map(_.toSeq).toSeq.sortBy(_.toString)
     val before = serve()
-    // simulate the crash window: a compact/delete died AFTER renaming a
-    // live list aside and BEFORE landing its staged replacement (staging
-    // debris already cleared by the next run's entry cleanup) — the aside
-    // dir holds the list's only copy
+    // simulate the crash window: a compact/delete logged its list swap's
+    // intent, deleted the live list and died BEFORE renaming its staged
+    // replacement in — the staged dir holds the list's only copy
     val loc = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
         s"${prefix}_vectors")).location
@@ -274,14 +273,16 @@ class SimilaritySpec extends SparkSpec {
     val victim = fs.listStatus(root)
       .filter(d => d.isDirectory && d.getPath.getName.startsWith("cent_id="))
       .map(_.getPath).minBy(_.getName)
-    val asideRoot = new org.apache.hadoop.fs.Path(loc.toString + "_compact_aside")
-    fs.mkdirs(asideRoot)
-    assert(fs.rename(victim,
-      new org.apache.hadoop.fs.Path(asideRoot, victim.getName)))
+    val lists = graft.operators.Commit.partitioned(fs, root)
+    fs.mkdirs(lists.staging)
+    assert(fs.rename(victim, lists.staged(victim.getName)))
+    graft.operators.Commit.writeMarker(fs, lists.intent,
+      s"target=${victim.getName}")
     // ANY subsequent maintenance op must first restore the stranded list
     // (threshold 999 = no rewrite work; entry recovery is what runs)
     VectorIndex.compact(spark, prefix, maxFilesPerUnit = 999)
-    assert(!fs.exists(asideRoot), "recovery left the aside root behind")
+    assert(!fs.exists(lists.intent) && !fs.exists(lists.staging),
+      "recovery left the intent or staging behind")
     assert(fs.exists(victim), "recovery did not restore the stranded list")
     assert(serve() == before,
       "serving changed across crash recovery — rows were lost")
@@ -387,7 +388,7 @@ class SimilaritySpec extends SparkSpec {
     import graft.operators.{MaintenanceLease, VectorIndex}
     // ADVICE r12: snapshot used to warn-and-proceed past a held source
     // lease — a copy raced against another process's compact/delete could
-    // bake mid-swap state (a list renamed aside) into the fence copy. It
+    // bake mid-swap state (a list missing) into the fence copy. It
     // now holds the SOURCE lease for the copy and fails fast like every
     // other maintenance op.
     val dir = "/root/testdata/sf0.001"
@@ -482,30 +483,32 @@ class SimilaritySpec extends SparkSpec {
         s"${prefix}_vectors")).location
     val root = new org.apache.hadoop.fs.Path(loc)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // the crash state: list swap logged, live list gone, staged list
+    // present — returns the intent the crashed op left
+    val lists = graft.operators.Commit.partitioned(fs, root)
     def strand(): org.apache.hadoop.fs.Path = {
       val victim = fs.listStatus(root)
         .filter(d => d.isDirectory && d.getPath.getName.startsWith("cent_id="))
         .map(_.getPath).minBy(_.getName)
-      val asideRoot = new org.apache.hadoop.fs.Path(
-        loc.toString + "_delete_aside")
-      fs.mkdirs(asideRoot)
-      assert(fs.rename(victim,
-        new org.apache.hadoop.fs.Path(asideRoot, victim.getName)))
+      fs.mkdirs(lists.staging)
+      assert(fs.rename(victim, lists.staged(victim.getName)))
+      graft.operators.Commit.writeMarker(fs, lists.intent,
+        s"target=${victim.getName}")
       spark.sql(s"MSCK REPAIR TABLE ${prefix}_vectors SYNC PARTITIONS")
-      asideRoot
+      lists.intent
     }
     // crash debris with NO live op: the serve itself recovers it (ADVICE
     // r11 — no under-returning window until the next maintenance op)
-    val aside1 = strand()
+    val intent1 = strand()
     assert(serve() == before,
       "serve did not recover crash debris — results under-returned")
-    assert(!fs.exists(aside1), "serve-path recovery left the aside root")
+    assert(!fs.exists(intent1), "serve-path recovery left the intent")
     // debris while a LIVE op holds the lease: serving must NOT touch the
     // op's in-flight swap state (recovering here would corrupt it)
-    val aside2 = strand()
+    val intent2 = strand()
     MaintenanceLease.withLease(spark, prefix, "live-compact") {
       serve() // transient under-return is the documented contract here
-      assert(fs.exists(aside2),
+      assert(fs.exists(intent2),
         "serve-path recovery ran under a live maintenance lease")
     }
     // op gone (lease released): next maintenance entry restores the list
