@@ -283,8 +283,8 @@ object Indexer {
   /** Restore the live index from a snapshot taken by snapshotIndex. The
     * snapshot is CONSUMED (renamed in); take another if you need to keep it.
     * Swaps the live tables, so it takes the maintenance lease like every
-    * other writer. A missing snapshot table fails its swap and leaves that
-    * live table in place.
+    * other writer. A snapshot that lacks any of its three tables throws
+    * before the first swap, leaving the live index as it was.
     */
   def rollbackIndex(spark: SparkSession, prefix: String, tag: String): Unit =
     MaintenanceLease.withLease(spark, prefix, "index-rollback") {
@@ -292,9 +292,16 @@ object Indexer {
     }
 
   private def rollbackIndexImpl(spark: SparkSession, prefix: String,
-                                tag: String): Unit =
-    Seq("postings", "term_df", "doc_info").foreach(t =>
+                                tag: String): Unit = {
+    val parts = Seq("postings", "term_df", "doc_info")
+    val missing = parts.map(t => s"${prefix}_${tag}_$t")
+      .filterNot(spark.catalog.tableExists)
+    if (missing.nonEmpty)
+      throw new IllegalStateException(s"snapshot '$tag' of $prefix lacks " +
+        s"${missing.mkString(", ")}; the live index is unchanged")
+    parts.foreach(t =>
       Commit.swapTable(spark, s"${prefix}_${tag}_$t", s"${prefix}_$t"))
+  }
 
   /** Merge two persisted bucketed indexes over DISJOINT corpora into a
     * third — the shard-merge step of distributed index construction (build

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -41,13 +41,13 @@ object Search {
     */
   val BulkRequestThreshold = 4096L
 
-  /** Keeps [[bulkSearch]]'s top-k aggregate hash-based past 128 query ids
-    * per task; a buffer holds k entries, so 64k ids stay near 20 MB. Spark
-    * reads it at execution, so a caller scopes the write with it. No session
-    * default: other object-hash aggregates (collect_list) are unbounded.
+  /** Reciprocal-rank fusion of the text and vector arms' ranks
+    * (`text_rank`, `vec_rank`): sum over arms of 1/(60 + rank), where an
+    * arm that did not return the document adds 0.
     */
-  val BulkTopKConf =
-    "spark.sql.objectHashAggregate.sortBased.fallbackThreshold" -> "65536"
+  val rrf: Column =
+    coalesce(lit(1.0) / (lit(60.0) + col("text_rank")), lit(0.0)) +
+      coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0))
 
   /** Driver-side tokenization of the scalar query string — same semantics
     * as Tokenizer.tokenize, distinct terms in first-occurrence order.
@@ -266,9 +266,7 @@ object Search {
       .searchPrebuilt(spark, vecPrefix, probe, k, nprobe, shortlist)
       .select(col("cand_id").as("doc_id"), col("rank").as("vec_rank"))
     val fused = textRank.join(vecRank, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("text_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+      .withColumn("rrf", rrf)
       .orderBy(col("rrf").desc, col("doc_id")).limit(k)
     spark.table(s"${textPrefix}_doc_info")
       .select(col("doc_id").cast("long").as("doc_id"), col("title"))
@@ -332,9 +330,7 @@ object Search {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     val fused = textRank.join(vecRank, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("text_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+      .withColumn("rrf", rrf)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn")
     spark.table(s"${textPrefix}_doc_info")
@@ -365,9 +361,12 @@ object Search {
     *    candidates from [[VectorIndex.searchBulk]], which scores the
     *    probed lists through a shuffle join on cent_id instead of a probe
     *    broadcast;
-    *  - fusion and the per-query top-k are partitionBy(query_id) windows,
-    *    and the display-title attach is a plain join of doc_info against
-    *    the |requests|·k winners.
+    *  - the text arm's per-query top-k keeps k rows per query per
+    *    partition in partial heaps before its rank window
+    *    ([[graft.plans.TopK.perGroup]]), so no task sorts more than that
+    *    however many requests it holds; fusion is a partitionBy(query_id)
+    *    window, and the display-title attach is a plain join of doc_info
+    *    against the |requests|·k winners.
     * Cost ∝ |requests| + touched index data; every shuffle key
     * (term, cent_id, doc_id, query_id) partitions across the cluster, so
     * no single task, no broadcast, and no driver structure scales with the
@@ -408,9 +407,7 @@ object Search {
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("rrf").desc, col("doc_id"))
     val fused = textRank.join(vecRank, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("text_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+      .withColumn("rrf", rrf)
       .withColumn("rn", row_number().over(w))
       .filter(col("rn") <= k).drop("rn")
     spark.table(s"${textPrefix}_doc_info")
@@ -531,8 +528,6 @@ object Search {
       .crossJoin(broadcast(stats))
       .withColumn("score", BM25.termScore(col("tf"),
         BM25.idf(col("n_docs"), col("df")), col("length"), col("avg_len")))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id").asc)
     // Bulk form: place the (query_id, doc_id) exchange BEFORE the partial
     // aggregation, not after it. The scored relation leaves the term join
     // partitioned by TERM, where a (query, doc) pair appears at most once
@@ -545,9 +540,9 @@ object Search {
     // then run post-exchange where groups are co-located, so the partial
     // map holds |groups in partition| entries and fully reduces. The
     // (query_id, doc_id) key keeps a hot query's candidate set spread
-    // across the cluster (skew safety, guide §2.5); the rank window's
-    // WindowGroupLimit then cuts to k per query per partition before the
-    // small query_id exchange, exactly as before.
+    // across the cluster (skew safety, guide §2.5); the top-k's partial
+    // heaps then cut to k per query per partition before the small
+    // query_id exchange.
     val preAgg = {
       val narrow = scored.select(col("query_id"), col("doc_id"), col("score"))
       if (broadcastRequests) narrow
@@ -555,34 +550,13 @@ object Search {
     }
     val summed = preAgg.groupBy(col("query_id"), col("doc_id"))
       .agg(sum(col("score")).as("score"))
-    // Bulk form: the per-query top-k runs as a bounded TOP-K AGGREGATE
-    // (graft.plans.TopKAgg), not a rank window. The window form sorted the
-    // ENTIRE (query, doc) aggregate by (query_id, score, doc_id) — tens of
-    // millions of rows at the bench fixture, corpus-bound at 100 TB — kept
-    // k per query per partition, exchanged, and sorted again, all to
-    // discard everything but k rows per query. The aggregate's partial
-    // buffers cap at k entries per (query, partition): no sort anywhere,
-    // and the query_id exchange carries only the k-entry buffers. Ordering
-    // inside the buffer is the window's exact total order
-    // (score DESC, doc_id ASC), so posexplode reproduces the same rows
-    // with the same ranks. Batch (broadcast) form keeps the window — its
-    // volumes are literal-pruned and its plans are regression-adjudicated.
-    // Past 128 query ids per task it sorts unless scoped by BulkTopKConf.
+    // Both forms cut to k per query with the rank window. The bulk form's
+    // partial heaps first keep k rows per query per partition, so the
+    // window sorts at most that many however many queries a task holds.
     val top =
       if (broadcastRequests)
-        summed
-          .withColumn("rank", row_number().over(w).cast("long"))
-          .filter(col("rank") <= k)
-      else
-        summed
-          .groupBy(col("query_id"))
-          .agg(graft.plans.TopKAgg.topK(col("score"),
-            col("doc_id").cast("long"), k).as("top"))
-          .select(col("query_id"),
-            posexplode(col("top")).as(Seq("pos", "e")))
-          .select(col("query_id"), col("e.doc_id").as("doc_id"),
-            col("e.score").as("score"),
-            (col("pos") + 1).cast("long").as("rank"))
+        graft.plans.TopK.rank(summed, "query_id", "doc_id", "score", k)
+      else graft.plans.TopK.perGroup(summed, "query_id", "doc_id", "score", k)
     // display metadata joins the winners only (cost ∝ |queries|·k) —
     // mirrors the single-query search(); the winners side broadcasts in
     // the batch form but stays a shuffle join under an unbounded bulk run

@@ -512,7 +512,8 @@ object VectorIndex {
   /** Restore the live index from a snapshot. The tables are external
     * (path-backed), so rollback is pure catalog surgery: live names
     * re-point at the snapshot's directories. The snapshot is CONSUMED —
-    * its files now serve the live index; take another to keep one.
+    * its files now serve the live index; take another to keep one. A
+    * snapshot that lacks any part throws before the catalog changes.
     */
   def rollback(spark: SparkSession, prefix: String, tag: String): Unit =
     // rollback swaps the LIVE index (catalog re-points + forward rename)
@@ -522,10 +523,16 @@ object VectorIndex {
     }
 
   private def rollbackImpl(spark: SparkSession, prefix: String, tag: String): Unit = {
-    Parts.foreach { t =>
+    // every part is resolved before the first catalog change, so an
+    // incomplete snapshot cannot leave new quantizers over old data
+    val snapLocs = Parts.map(t => t -> tableLocation(spark, s"${prefix}_${tag}_$t"))
+    val fwdSnap = s"${prefix}_${tag}_forward"
+    if (!spark.catalog.tableExists(fwdSnap))
+      throw new IllegalStateException(s"snapshot '$tag' of $prefix lacks " +
+        s"$fwdSnap; the live index is unchanged")
+    snapLocs.foreach { case (t, snapLoc) =>
       val liveT = s"${prefix}_$t"
       val snapT = s"${prefix}_${tag}_$t"
-      val snapLoc = tableLocation(spark, snapT)
       spark.sql(s"DROP TABLE IF EXISTS $liveT") // external: files untouched
       spark.catalog.createTable(liveT, snapLoc, "parquet")
       spark.sql(s"DROP TABLE IF EXISTS $snapT")
@@ -533,10 +540,9 @@ object VectorIndex {
       spark.catalog.refreshTable(liveT)
     }
     // forward store: a managed table, so a catalog swap — the snapshot is
-    // consumed like the external parts, and a missing snapshot table
-    // leaves the live one in place
+    // consumed like the external parts
     val fwdLive = s"${prefix}_forward"
-    Commit.swapTable(spark, s"${prefix}_${tag}_forward", fwdLive)
+    Commit.swapTable(spark, fwdSnap, fwdLive)
     spark.catalog.refreshTable(fwdLive)
   }
 

@@ -187,19 +187,15 @@ object RelationalQueries {
       |WHERE rn <= 3
       |ORDER BY o_custkey, rn""".stripMargin
 
-  // ---- Same result via the typed top-k Aggregator (partial-agg path:
-  //      k rows per group per map task cross the shuffle, vs the window
-  //      formulation shuffling every row) ---------------------------------
-  def aggTopPerGroup(s: SparkSession, dir: String): DataFrame = {
-    val topk = graft.functions.TopKAgg.topK(3)
-    Tables.orders(s, dir)
-      .groupBy(col("o_custkey"))
-      .agg(topk(col("o_totalprice"), col("o_orderkey")).as("top"))
-      .select(col("o_custkey"), posexplode(col("top")).as(Seq("i", "s")))
-      .select(col("o_custkey"), (col("i") + 1).cast("long").as("rn"),
-        col("s.id").as("o_orderkey"), col("s.score").cast("double").as("total"))
+  // ---- Same result via graft.plans.TopK.perGroup: per-partition top-k
+  //      heaps ahead of the same rank window, so the window sorts at most
+  //      k rows per group per map task, not every order ------------------
+  def aggTopPerGroup(s: SparkSession, dir: String): DataFrame =
+    graft.plans.TopK.perGroup(Tables.orders(s, dir),
+        "o_custkey", "o_orderkey", "o_totalprice", 3)
+      .select(col("o_custkey"), col("rank").as("rn"), col("o_orderkey"),
+        col("o_totalprice").as("total"))
       .orderBy("o_custkey", "rn")
-  }
   // oracle: identical result set to window_top_per_group
   val aggTopPerGroupSql: String = windowTopPerGroupSql
 

@@ -220,9 +220,7 @@ object TextIndexQueries {
       .bruteForceTopK(emb.filter(col("id") === 0), emb, 10)
       .select(col("cand_id").as("doc_id"), col("rank").as("vec_rank"))
     val fused = textRank.join(vecRank, Seq("doc_id"), "full_outer")
-      .withColumn("rrf",
-        coalesce(lit(1.0) / (lit(60.0) + col("text_rank")), lit(0.0)) +
-          coalesce(lit(1.0) / (lit(60.0) + col("vec_rank")), lit(0.0)))
+      .withColumn("rrf", Search.rrf)
       .orderBy(col("rrf").desc, col("doc_id")).limit(10)
     Tables.documents(s, dir)
       .select(col("doc_id"), substring(col("text"), 1, 50).as("title"))

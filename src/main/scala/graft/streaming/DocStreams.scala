@@ -1013,8 +1013,7 @@ object DocStreams {
               // single-JVM probe container the width is a wash — CPU
               // saturates either way — SCALE_r13 §4.)
               graft.GraftSession.scoped(s,
-                  "spark.sql.shuffle.partitions" -> callerShuffle,
-                  graft.operators.Search.BulkTopKConf) {
+                  "spark.sql.shuffle.partitions" -> callerShuffle) {
                 graft.operators.Search.hybridBulkSearchPrebuilt(
                     s, reqDf, textPrefix, vecPrefix, k)
                   .write.mode("overwrite")

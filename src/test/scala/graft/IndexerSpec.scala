@@ -317,6 +317,24 @@ class IndexerSpec extends SparkSpec {
     assert(left.isEmpty, s"failed rollback left tables: ${left.mkString(", ")}")
   }
 
+  test("rollback to a snapshot lacking doc_info throws and swaps nothing") {
+    val prefix = "graft_idx_rbpart_spec"
+    Indexer.buildBucketedIndex(spark, docs.filter(col("doc_id") =!= "d3"), prefix)
+    Indexer.snapshotIndex(spark, prefix, "pre")
+    Indexer.appendBucketedIndex(spark, docs.filter(col("doc_id") === "d3"), prefix)
+    val query = "simple spark"
+    val before = Search.searchPrebuilt(spark, query, prefix).collect().toSeq
+    assert(before.exists(_.getAs[String]("doc_id") == "d3"),
+      "the appended doc is not served — a partial rollback would not show")
+    spark.sql(s"DROP TABLE ${prefix}_pre_doc_info")
+    intercept[Exception](Indexer.rollbackIndex(spark, prefix, "pre"))
+    assert(Search.searchPrebuilt(spark, query, prefix).collect().toSeq == before,
+      "a failed rollback changed the live index")
+    Seq("postings", "term_df").foreach(t =>
+      assert(spark.catalog.tableExists(s"${prefix}_pre_$t"),
+        s"a failed rollback consumed the snapshot's $t"))
+  }
+
   test("deletion purges postings, decrements term_df, drops vanished terms") {
     val prefix = "graft_idx_delete_spec"
     val d = Tables.documents(spark, "/root/testdata/sf0.001")

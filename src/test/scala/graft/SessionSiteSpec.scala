@@ -40,6 +40,14 @@ class SessionSiteSpec extends AnyFunSuite {
       s"conf written outside GraftSession: ${sites.mkString(", ")}")
   }
 
+  test("no code under src/main names the object-hash fallback threshold") {
+    // a top-k whose speed depends on this conf is fast only for callers
+    // that scope it; the top-k is bounded in the plan instead
+    val sites = sitesMatching("src/main/scala")(_.contains("fallback" + "Threshold"))
+    assert(sites.isEmpty,
+      s"fallback threshold named in: ${sites.mkString(", ")}")
+  }
+
   test("only Commit.scala renames data into place under src/main") {
     val rename = """fs\.rename\(|RENAME TO""".r
     val sites = sitesMatching("src/main/scala")(rename.findFirstIn(_).isDefined)

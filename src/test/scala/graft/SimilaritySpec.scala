@@ -211,6 +211,29 @@ class SimilaritySpec extends SparkSpec {
       s"restored forward store lost its bucket spec:\n$described")
   }
 
+  test("VectorIndex rollback to a snapshot lacking _forward throws and " +
+    "changes nothing") {
+    import graft.operators.VectorIndex
+    val emb = spark.range(0, 400).select(col("id"),
+      array((1 to 8).map(j => sin((col("id") + 1) * j)): _*).as("v"))
+    val prefix = "vecsnap_part_spec"
+    VectorIndex.trainAndBuild(spark, emb, prefix, nlist = 8, iters = 1,
+      pqM = 4, pqKs = 8)
+    VectorIndex.snapshot(spark, prefix, "pre")
+    // after the snapshot, so lists re-pointed at it would serve these again
+    VectorIndex.delete(spark,
+      emb.filter(col("id") % 3 === 0).select(col("id")), prefix)
+    val probes = emb.filter(col("id") % 50 === 0)
+    def serve() = VectorIndex
+      .searchPrebuilt(spark, prefix, probes, k = 5, nprobe = 4, shortlist = 20)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getDouble(3))).toSeq.sorted
+    val before = serve()
+    spark.sql(s"DROP TABLE ${prefix}_pre_forward")
+    intercept[Exception](VectorIndex.rollback(spark, prefix, "pre"))
+    assert(serve() == before, "a failed rollback changed the live index")
+  }
+
   test("VectorIndex.compact merges append debris; serving is unchanged") {
     import graft.operators.VectorIndex
     val dir = "/root/testdata/sf0.001"

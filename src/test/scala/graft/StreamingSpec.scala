@@ -1000,27 +1000,10 @@ class StreamingSpec extends SparkSpec {
     // threshold 0 forces every micro-batch onto the routed (bulk join)
     // path; the default threshold keeps the literal-pruned batch path —
     // the serving stream must return row-identical results either way.
-    // The routed write's jobs run under Search.BulkTopKConf; the session
-    // does not keep it.
-    val (topKKey, topKValue) = graft.operators.Search.BulkTopKConf
-    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        Option(e.properties).flatMap(p => Option(p.getProperty(topKKey)))
-          .foreach(seen.add)
-    }
-    val sc = spark.sparkContext
+    // The routed write scopes its shuffle width; the session does not
+    // keep it.
     val before = GraftSession.effectiveConf(spark)
-    sc.addSparkListener(listener)
-    val bulk =
-      try serve(0L)
-      finally {
-        org.apache.spark.ListenerBusDrain(sc)
-        sc.removeSparkListener(listener)
-      }
-    assert(seen.contains(topKValue),
-      s"no bulk-routed job ran with $topKKey=$topKValue (saw $seen)")
+    val bulk = serve(0L)
     assert(GraftSession.effectiveConf(spark) == before,
       "the bulk-routed serving stream left the session conf changed")
     val lit = serve(graft.operators.Search.BulkRequestThreshold)
