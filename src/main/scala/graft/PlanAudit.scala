@@ -9,10 +9,11 @@ package graft
   * to PlanSpec's targeted pins: PlanSpec asserts the plans we designed;
   * this catches the ones we didn't look at.
   *
-  * Queries are executed (noop sink) before auditing: under AQE the
-  * pre-execution plan is conservative (every join starts sort-merge and
-  * converts at runtime), so a static audit would drown in false
-  * positives — r7 measured 7 spurious SMJ flags static vs 0 executed.
+  * Each query's own plan is executed ([[Probe.run]]) before it is
+  * audited: under AQE the pre-execution plan is conservative (every join
+  * starts sort-merge and converts at runtime), so a static audit would
+  * drown in false positives — r7 measured 7 spurious SMJ flags static vs
+  * 0 executed.
   */
 object PlanAudit {
   def main(args: Array[String]): Unit = {
@@ -21,7 +22,7 @@ object PlanAudit {
     import org.apache.spark.sql.catalyst.expressions.{And, Attribute, AttributeReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
     import org.apache.spark.sql.catalyst.expressions.{Contains, EndsWith, StartsWith}
     import org.apache.spark.sql.catalyst.plans.FullOuter
-    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, ProjectExec, SparkPlan}
+    import org.apache.spark.sql.execution.{FileSourceScanExec, FilterExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
     import org.apache.spark.sql.execution.joins.{BroadcastNestedLoopJoinExec, CartesianProductExec, SortMergeJoinExec}
     import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ReusedExchangeExec, ShuffleExchangeExec}
     import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
@@ -37,6 +38,10 @@ object PlanAudit {
     def unwrap(p: SparkPlan): SparkPlan = p match {
       case a: AdaptiveSparkPlanExec => unwrap(a.executedPlan)
       case q: QueryStageExec => unwrap(q.plan)
+      // codegen stages exist only in a plan that ran: AQE collapses them
+      // per query stage at run time
+      case w: WholeStageCodegenExec => unwrap(w.child)
+      case i: InputAdapter => unwrap(i.child)
       case r: ReusedExchangeExec => unwrap(r.child)
       case e: BroadcastExchangeExec => unwrap(e.child)
       case e: ShuffleExchangeExec => unwrap(e.child)
@@ -179,11 +184,9 @@ object PlanAudit {
     var flagged = 0
     Queries.all.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       try {
-        val df = fn(spark, dir)
         // execute so AQE reaches its FINAL plan (broadcast conversions,
         // skew splits); the audit below reads runtime truth
-        df.write.format("noop").mode("overwrite").save()
-        val plan = df.queryExecution.executedPlan
+        val plan = Probe.run(fn(spark, dir))
         val joinBad = nodes(plan).toSeq.collect {
           case j: BroadcastNestedLoopJoinExec =>
             val build = j.buildSide match {

@@ -6,18 +6,21 @@ import scala.jdk.CollectionConverters._
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.{SQLExecution, SparkPlan}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /** Dev tool: where a registry query's time goes, one line per run.
   *
-  * Each query gets one warm-up run and three measured runs through the
-  * `noop` sink, as in [[Bench]]. A run splits into
+  * Each query gets one warm-up run and three measured runs, each to
+  * completion with no row collected, as the `noop` sink in [[Bench]]
+  * does. A run splits into
   *   construct — building the DataFrame (plan assembly; a `stream_*`
   *               row runs its stream to the sink here)
   *   analyze   — analysis, optimization and physical planning
   *               (forcing `queryExecution.executedPlan`)
-  *   execute   — the noop write (scheduling, tasks, AQE re-planning)
+  *   execute   — running that same plan ([[run]]: scheduling, tasks,
+  *               AQE re-planning)
   * and reports the run's Spark jobs, stages and tasks, shuffle-write and
   * spill bytes, and each micro-batch's `durationMs` map.
   *
@@ -46,6 +49,20 @@ object Probe {
         .map { case (k, v) => s"$k:$v" }.mkString("{", ",", "}"))
         .mkString("[", ",", "]")
     }
+  }
+
+  /** Runs `df`'s own QueryExecution to completion, with no row collected
+    * to the driver, and returns its final physical plan: under AQE the
+    * plan that ran, with its runtime join conversions and its SQL metrics
+    * filled in. A `noop` write would not do: it plans and runs a
+    * QueryExecution of its own, and `df`'s plan would never run.
+    */
+  private[graft] def run(df: DataFrame): SparkPlan = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("graft.Probe.run")) {
+      qe.toRdd.foreach(_ => ())
+    }
+    qe.executedPlan
   }
 
   /** Runs `name` once over `dir` and measures it. The listeners are added
@@ -84,7 +101,7 @@ object Probe {
       val t1 = System.nanoTime()
       df.queryExecution.executedPlan
       val t2 = System.nanoTime()
-      df.write.format("noop").mode("overwrite").save()
+      run(df)
       val t3 = System.nanoTime()
       org.apache.spark.ListenerBusDrain(sc)
       Run((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e6, jobs.get,

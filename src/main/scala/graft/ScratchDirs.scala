@@ -16,21 +16,19 @@ package graft
 object ScratchDirs {
 
   private val counter = new java.util.concurrent.atomic.AtomicLong(0)
-  private val roots = scala.collection.mutable.Map[String, java.nio.file.Path]()
+  private val roots = new Memo[java.nio.file.Path]
 
   /** The per-(namespace, process) root, created on first use. */
-  def root(namespace: String): java.nio.file.Path = synchronized {
-    roots.getOrElseUpdate(namespace, {
-      val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        namespace, s"pid${ProcessHandle.current().pid()}")
-      java.nio.file.Files.createDirectories(p)
-      Runtime.getRuntime.addShutdownHook(new Thread(() => {
-        import scala.reflect.io.Directory
-        if (!new Directory(p.toFile).deleteRecursively())
-          System.err.println(s"[graft] could not fully remove scratch $p")
-      }))
-      p
-    })
+  def root(namespace: String): java.nio.file.Path = roots(namespace) {
+    val p = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
+      namespace, s"pid${ProcessHandle.current().pid()}")
+    java.nio.file.Files.createDirectories(p)
+    Runtime.getRuntime.addShutdownHook(new Thread(() => {
+      import scala.reflect.io.Directory
+      if (!new Directory(p.toFile).deleteRecursively())
+        System.err.println(s"[graft] could not fully remove scratch $p")
+    }))
+    p
   }
 
   /** A fresh, never-reused directory under the namespace root. */

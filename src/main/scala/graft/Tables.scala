@@ -23,18 +23,10 @@ object Tables {
     * gets the same effect from a catalog (table schemas are declared, not
     * re-inferred per query).
     */
-  private val schemaMemo =
-    new java.util.concurrent.ConcurrentHashMap[String, org.apache.spark.sql.types.StructType]()
+  private val schemas = new Memo[org.apache.spark.sql.types.StructType]
 
-  private def pq(s: SparkSession, path: String): DataFrame = {
-    val sch = schemaMemo.get(path)
-    if (sch != null) s.read.schema(sch).parquet(path)
-    else {
-      val df = s.read.parquet(path)
-      schemaMemo.put(path, df.schema)
-      df
-    }
-  }
+  private def pq(s: SparkSession, path: String): DataFrame =
+    s.read.schema(schemas(path)(s.read.parquet(path).schema)).parquet(path)
 
   def lineitem(s: SparkSession, dir: String): DataFrame = pq(s, s"$dir/lineitem.parquet")
   def orders(s: SparkSession, dir: String): DataFrame = pq(s, s"$dir/orders.parquet")

@@ -294,34 +294,32 @@ object DedupQueries {
     * when the sweep's caches go away.
     */
   private val componentLabelCache = {
-    val m = scala.collection.mutable.Map[String, DataFrame]()
-    graft.CacheRegistry.onRelease(() => synchronized { m.clear() })
+    val m = new graft.Memo[DataFrame]
+    graft.CacheRegistry.onRelease(() => m.clear())
     m
   }
 
   private def componentLabels(s: SparkSession, dir: String): DataFrame =
-    synchronized {
+    componentLabelCache(dir) {
       import graft.CacheRegistry.RegisteredCache
-      componentLabelCache.getOrElseUpdate(dir, {
-        // shingled pairs, not unigram: the cluster family is a PRODUCTION
-        // consumer, so its edge input must be the form that survives x100
-        // (full-corpus coverage is a bonus — splits leak-proofing now sees
-        // every near-dup edge, not just the %5 cost-subset's)
-        val pairs = shingledPairs(s, dir)
-          .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
-        // checkEvery=2, not 4: ProfileCC (r16) measured this graph's loop
-        // converging in ONE propagation round at every SF probed — shingled
-        // near-dup clusters are dense and shallow, and the fused round-1
-        // seeding already lands most labels — so checkEvery=4 computed 3
-        // provably-idle extra rounds per run (1.4-1.9 s vs 0.8-1.1 s). At 2
-        // the wasted work is bounded by one idle round, and a deeper graph
-        // pays one extra counting job per 2 rounds instead of none per 4 —
-        // the phash rep graph's loop (measured diameter 8, rounds
-        // data-inherent) keeps checkEvery=4 where it is optimal.
-        graft.operators.Components
-          .connectedComponents(pairs, checkEvery = 2, pointerJump = false)
-          .registeredCache()
-      })
+      // shingled pairs, not unigram: the cluster family is a PRODUCTION
+      // consumer, so its edge input must be the form that survives x100
+      // (full-corpus coverage is a bonus — splits leak-proofing now sees
+      // every near-dup edge, not just the %5 cost-subset's)
+      val pairs = shingledPairs(s, dir)
+        .select(col("doc_id_a").as("a"), col("doc_id_b").as("b"))
+      // checkEvery=2, not 4: ProfileCC (r16) measured this graph's loop
+      // converging in ONE propagation round at every SF probed — shingled
+      // near-dup clusters are dense and shallow, and the fused round-1
+      // seeding already lands most labels — so checkEvery=4 computed 3
+      // provably-idle extra rounds per run (1.4-1.9 s vs 0.8-1.1 s). At 2
+      // the wasted work is bounded by one idle round, and a deeper graph
+      // pays one extra counting job per 2 rounds instead of none per 4 —
+      // the phash rep graph's loop (measured diameter 8, rounds
+      // data-inherent) keeps checkEvery=4 where it is optimal.
+      graft.operators.Components
+        .connectedComponents(pairs, checkEvery = 2, pointerJump = false)
+        .registeredCache()
     }
 
   // ---- STREAMING near-dup: stateful bucket collisions + batch verify ----------
@@ -340,14 +338,13 @@ object DedupQueries {
     * builds), so repeat runs measure the streaming detection itself, not
     * re-staging; only the subset the stream consumes is staged.
     */
-  private val stagedNearSrc = scala.collection.mutable.Map[String, String]()
+  private val stagedNearSrc = new graft.Memo[String]
 
-  private def stagedNearDir(s: SparkSession, dir: String): String = synchronized {
-    stagedNearSrc.getOrElseUpdate(dir, graft.streaming.DocStreams
+  private def stagedNearDir(s: SparkSession, dir: String): String =
+    stagedNearSrc(dir)(graft.streaming.DocStreams
       .stagedDocSplits(Tables.documents(s, dir)
         .filter(col("doc_id") % 5 === 0)
         .select(col("doc_id"), col("text")), nFiles = 3))
-  }
 
   def streamDedupNear(s: SparkSession, dir: String): DataFrame = {
     val src = graft.streaming.DocStreams
@@ -407,15 +404,13 @@ object DedupQueries {
   // bucket state (the stream_dedup_near machinery). The emitted pair sets
   // equal the batch formulations under any arrival interleaving, so the
   // final manifest hash-matches the SAME oracle as ingest_pipeline.
-  private val stagedIngestSrc = scala.collection.mutable.Map[String, String]()
+  private val stagedIngestSrc = new graft.Memo[String]
 
   private def stagedIngestDir(s: SparkSession, dir: String): String =
-    synchronized {
-      stagedIngestSrc.getOrElseUpdate(dir, graft.streaming.DocStreams
-        .stagedDocSplits(Tables.documents(s, dir)
-          .filter(col("doc_id") % 4 === 0)
-          .select(col("doc_id"), col("text")), nFiles = 3))
-    }
+    stagedIngestSrc(dir)(graft.streaming.DocStreams
+      .stagedDocSplits(Tables.documents(s, dir)
+        .filter(col("doc_id") % 4 === 0)
+        .select(col("doc_id"), col("text")), nFiles = 3))
 
   def streamIngestPipeline(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
@@ -1060,22 +1055,15 @@ object DedupQueries {
   // exercising the append path), then the arriving batch probes them.
   // Must produce exactly the pairs of the recompute-everything oracle
   // (same corpus/batch subsets as dedup_incremental_near).
-  private val builtSigIdx = scala.collection.mutable.Set[String]()
-
   private def ensureSigIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_sigidx_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtSigIdx.contains(prefix)) {
-        // the near-dup oracle's EXISTING corpus is the id%10==5 subset —
-        // build from one half of it, append the other
-        val sets = hashedSets(s, dir)
-        SignatureIndex.build(s, sets.filter(col("id") % 20 === 5), prefix,
-          NumHashes, RowsPerBand)
-        SignatureIndex.append(s, sets.filter(col("id") % 20 === 15), prefix,
-          NumHashes, RowsPerBand)
-        builtSigIdx += prefix
-      }
-      prefix
+    Fixtures.persisted("graft_sigidx_", dir) { prefix =>
+      // the near-dup oracle's EXISTING corpus is the id%10==5 subset —
+      // build from one half of it, append the other
+      val sets = hashedSets(s, dir)
+      SignatureIndex.build(s, sets.filter(col("id") % 20 === 5), prefix,
+        NumHashes, RowsPerBand)
+      SignatureIndex.append(s, sets.filter(col("id") % 20 === 15), prefix,
+        NumHashes, RowsPerBand)
     }
 
   def dedupIncrementalPersisted(s: SparkSession, dir: String): DataFrame = {

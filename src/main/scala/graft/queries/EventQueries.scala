@@ -559,21 +559,19 @@ object EventQueries {
   // stored partial. The oracle is the full recompute: refresh(stored,
   // delta) must be indistinguishable from aggregating all of history.
   private val MvCutoff = "2024-01-21"
-  private val mvDirs = scala.collection.mutable.Map[String, String]()
+  private val mvDirs = new graft.Memo[String]
 
   private[graft] def dailyPartial(df: DataFrame): DataFrame =
     df.groupBy(col("event_type"), to_date(col("ts")).as("day"))
       .agg(count(lit(1)).cast("long").as("n"),
         sum(round(col("value") * 1e6).cast("long")).as("tv_micro"))
 
-  private def ensureMv(s: SparkSession, dir: String): String = synchronized {
-    mvDirs.getOrElseUpdate(dir, {
-      val base = graft.ScratchDirs.fresh("graft_mv", "daily").toString
-      dailyPartial(Tables.events(s, dir)
-          .filter(to_date(col("ts")) < lit(MvCutoff).cast("date")))
-        .write.mode("overwrite").parquet(base)
-      base
-    })
+  private def ensureMv(s: SparkSession, dir: String): String = mvDirs(dir) {
+    val base = graft.ScratchDirs.fresh("graft_mv", "daily").toString
+    dailyPartial(Tables.events(s, dir)
+        .filter(to_date(col("ts")) < lit(MvCutoff).cast("date")))
+      .write.mode("overwrite").parquet(base)
+    base
   }
 
   def mvRefresh(s: SparkSession, dir: String): DataFrame = {

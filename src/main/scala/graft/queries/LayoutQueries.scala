@@ -36,7 +36,7 @@ object LayoutQueries {
     */
   val JoinBuckets = 8
 
-  private val built = scala.collection.mutable.Set[String]()
+  private val built = new graft.Memo[(String, String)]
 
   private def tName(dir: String, name: String): String =
     "layout_" + dir.replaceAll("[^A-Za-z0-9]", "_") + "_" + name
@@ -44,24 +44,21 @@ object LayoutQueries {
   // ---- bucketed fact⋈fact ----------------------------------------------------
 
   private def ensureBucketed(s: SparkSession, dir: String): (String, String) =
-    synchronized {
+    built(s"$dir#bucketed") {
       val liT = tName(dir, "lineitem")
       val ordT = tName(dir, "orders")
-      if (!built.contains(s"$dir#bucketed")) {
-        dropManagedTable(s, liT)
-        dropManagedTable(s, ordT)
-        Tables.lineitem(s, dir)
-          .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
-          .saveAsTable(liT)
-        Tables.orders(s, dir)
-          .select(col("o_orderkey"), col("o_orderpriority"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
-          .saveAsTable(ordT)
-        built += s"$dir#bucketed"
-      }
+      dropManagedTable(s, liT)
+      dropManagedTable(s, ordT)
+      Tables.lineitem(s, dir)
+        .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
+        .saveAsTable(liT)
+      Tables.orders(s, dir)
+        .select(col("o_orderkey"), col("o_orderpriority"))
+        .write.mode("overwrite").format("parquet")
+        .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
+        .saveAsTable(ordT)
       (liT, ordT)
     }
 
@@ -105,33 +102,30 @@ object LayoutQueries {
   private val DayAnchor = "2024-01-01"
 
   private def ensurePartitioned(s: SparkSession, dir: String): (String, String) =
-    synchronized {
+    built(s"$dir#partitioned") {
       val evT = tName(dir, "events_byday")
       val dimT = tName(dir, "dim_days")
-      if (!built.contains(s"$dir#partitioned")) {
-        dropManagedTable(s, evT)
-        dropManagedTable(s, dimT)
-        val ev = Tables.events(s, dir)
-          .select(col("event_type"), col("value"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        // repartition by day first: each day's rows land in one task, so
-        // the table gets ~1 file per partition directory instead of
-        // (tasks × days) small files
-        ev.repartition(JoinBuckets, col("day"))
-          .write.mode("overwrite").format("parquet")
-          .partitionBy("day").saveAsTable(evT)
-        // dow kept as an INT and filtered with a comparison: Spark's DPP
-        // insertion gate requires a "likely selective" dim predicate
-        // (BinaryComparison / In / Like...) — a bare boolean attribute
-        // does not qualify and silently disables the pruning
-        ev.select(col("day")).distinct()
-          .withColumn("dow",
-            (datediff(to_date(col("day")), to_date(lit(DayAnchor))) % 7)
-              .cast("int"))
-          .coalesce(1)
-          .write.mode("overwrite").format("parquet").saveAsTable(dimT)
-        built += s"$dir#partitioned"
-      }
+      dropManagedTable(s, evT)
+      dropManagedTable(s, dimT)
+      val ev = Tables.events(s, dir)
+        .select(col("event_type"), col("value"),
+          date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      // repartition by day first: each day's rows land in one task, so
+      // the table gets ~1 file per partition directory instead of
+      // (tasks × days) small files
+      ev.repartition(JoinBuckets, col("day"))
+        .write.mode("overwrite").format("parquet")
+        .partitionBy("day").saveAsTable(evT)
+      // dow kept as an INT and filtered with a comparison: Spark's DPP
+      // insertion gate requires a "likely selective" dim predicate
+      // (BinaryComparison / In / Like...) — a bare boolean attribute
+      // does not qualify and silently disables the pruning
+      ev.select(col("day")).distinct()
+        .withColumn("dow",
+          (datediff(to_date(col("day")), to_date(lit(DayAnchor))) % 7)
+            .cast("int"))
+        .coalesce(1)
+        .write.mode("overwrite").format("parquet").saveAsTable(dimT)
       (evT, dimT)
     }
 
@@ -199,21 +193,19 @@ object LayoutQueries {
     * dataset: columns arrive mid-stream). Built once per (JVM, sfDir)
     * under the process scratch root.
     */
-  private val evolvedDirs = scala.collection.mutable.Map[String, String]()
+  private val evolvedDirs = new graft.Memo[String]
 
   private def ensureEvolved(s: SparkSession, dir: String): String =
-    synchronized {
-      evolvedDirs.getOrElseUpdate(dir, {
-        val base = graft.ScratchDirs.fresh("graft_layout", "evolved")
-        val ord = Tables.orders(s, dir)
-        ord.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .write.mode("overwrite").parquet(s"$base/batch=1")
-        ord.filter(col("o_orderkey") % 2 =!= 0)
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
-          .write.mode("overwrite").parquet(s"$base/batch=2")
-        base.toString
-      })
+    evolvedDirs(dir) {
+      val base = graft.ScratchDirs.fresh("graft_layout", "evolved")
+      val ord = Tables.orders(s, dir)
+      ord.filter(col("o_orderkey") % 2 === 0)
+        .select(col("o_orderkey"), col("o_totalprice"))
+        .write.mode("overwrite").parquet(s"$base/batch=1")
+      ord.filter(col("o_orderkey") % 2 =!= 0)
+        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderpriority"))
+        .write.mode("overwrite").parquet(s"$base/batch=2")
+      base.toString
     }
 
   /** Read the evolved dataset with schema merging: the union schema comes
@@ -280,22 +272,20 @@ object LayoutQueries {
     * compacted table and must match the raw-table oracle exactly — proof
     * the maintenance pass moved bytes without changing a row.
     */
-  private val compactedDirs = scala.collection.mutable.Map[String, String]()
+  private val compactedDirs = new graft.Memo[String]
 
   private def ensureCompacted(s: SparkSession, dir: String): String =
-    synchronized {
-      compactedDirs.getOrElseUpdate(dir, {
-        val base = graft.ScratchDirs.fresh("graft_layout", "compacted").toString
-        val ev = Tables.events(s, dir)
-          .select(col("event_id"), col("event_type"), col("value"),
-            date_format(col("ts"), "yyyy-MM-dd").as("day"))
-        (0 to 2).foreach { i =>
-          ev.filter(col("event_id") % 3 === i).drop("event_id")
-            .write.mode("append").partitionBy("day").parquet(base)
-        }
-        compactDayPartitions(s, base, maxFilesPerPartition = 2)
-        base
-      })
+    compactedDirs(dir) {
+      val base = graft.ScratchDirs.fresh("graft_layout", "compacted").toString
+      val ev = Tables.events(s, dir)
+        .select(col("event_id"), col("event_type"), col("value"),
+          date_format(col("ts"), "yyyy-MM-dd").as("day"))
+      (0 to 2).foreach { i =>
+        ev.filter(col("event_id") % 3 === i).drop("event_id")
+          .write.mode("append").partitionBy("day").parquet(base)
+      }
+      compactDayPartitions(s, base, maxFilesPerPartition = 2)
+      base
     }
 
   def partitionedCompacted(s: SparkSession, dir: String): DataFrame = {

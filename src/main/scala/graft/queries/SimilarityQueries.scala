@@ -592,8 +592,7 @@ object SimilarityQueries {
     * queries broadcast the NList·Dim constant table. The collect is
     * bounded at NList rows regardless of corpus size.
     */
-  private val centroidCache =
-    scala.collection.mutable.Map[String, Seq[(Long, Seq[Double])]]()
+  private val centroidCache = new graft.Memo[Seq[(Long, Seq[Double])]]
 
   private def ivfCentroids(s: SparkSession, dir: String): DataFrame =
     ivfCentroidsN(s, dir, NList)
@@ -606,11 +605,9 @@ object SimilarityQueries {
   private def ivfCentroidsN(s: SparkSession, dir: String,
                             nlist: Int): DataFrame = {
     import s.implicits._
-    val rows = synchronized {
-      centroidCache.getOrElseUpdate(s"$dir#$nlist",
-        Similarity.trainCentroids(emb(s, dir), nlist, IvfIters, Dim))
-    }
-    rows.toDF("id", "v")
+    centroidCache(s"$dir#$nlist")(
+      Similarity.trainCentroids(emb(s, dir), nlist, IvfIters, Dim))
+      .toDF("id", "v")
   }
 
   def annIvf(s: SparkSession, dir: String): DataFrame = {
@@ -835,15 +832,42 @@ object SimilarityQueries {
     */
   private val PqShortlist = 40
 
-  private val pqCache =
-    scala.collection.mutable.Map[String, Seq[graft.operators.Pq.Code]]()
+  private val pqCache = new graft.Memo[Seq[graft.operators.Pq.Code]]
 
   private def pqCodes(s: SparkSession, dir: String): Seq[graft.operators.Pq.Code] =
-    synchronized {
-      pqCache.getOrElseUpdate(dir,
-        graft.operators.Pq.train(emb(s, dir).select(col("id"), col("v")),
+    pqCache(dir)(graft.operators.Pq.train(
+      emb(s, dir).select(col("id"), col("v")), PqM, PqSubDim, PqKs))
+
+  /** Centroids and codebooks trained on the id % 2 == 0 half of the
+    * corpus, once per (JVM, dir): the quantizers the appended, streamed,
+    * compacted and merged lifecycles build from, and the stale ones the
+    * retrain lifecycle starts with.
+    */
+  private val halfQuantizerCache =
+    new graft.Memo[(Seq[(Long, Seq[Double])], Seq[graft.operators.Pq.Code])]
+
+  private def halfQuantizers(s: SparkSession, dir: String)
+      : (DataFrame, Seq[graft.operators.Pq.Code]) = {
+    import s.implicits._
+    val (cents, codes) = halfQuantizerCache(dir) {
+      val half = emb(s, dir).filter(col("id") % 2 === 0)
+      (Similarity.trainCentroids(half, NList, IvfIters, Dim),
+        graft.operators.Pq.train(half.select(col("id"), col("v")),
           PqM, PqSubDim, PqKs))
     }
+    (cents.toDF("id", "v"), codes)
+  }
+
+  /** The standard probes served from a persisted vector index, in the
+    * oracle's shape.
+    */
+  private def servePersisted(s: SparkSession, dir: String,
+                             prefix: String): DataFrame =
+    graft.operators.VectorIndex.searchPrebuilt(s, prefix, probes(s, dir), K,
+        NProbe, PqShortlist)
+      .select(col("probe_id"), col("rank"), col("cand_id"),
+        col("cosine").cast("double").as("cosine"))
+      .orderBy("probe_id", "rank")
 
   def annIvfPq(s: SparkSession, dir: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
@@ -894,25 +918,14 @@ object SimilarityQueries {
   // vectors — the on-disk inverted-file form). Built once per (JVM, dir)
   // like the text-index variants; results are bit-identical to the
   // in-memory plan, so the oracle is shared.
-  private val builtVectorIdx = scala.collection.mutable.Set[String]()
-
   private def ensureVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidx_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdx.contains(prefix)) {
-        graft.operators.VectorIndex.build(s, emb(s, dir), prefix,
-          ivfCentroids(s, dir), pqCodes(s, dir), PqM, PqSubDim)
-        builtVectorIdx += prefix
-      }
-      prefix
+    Fixtures.persisted("graft_vecidx_", dir) { prefix =>
+      graft.operators.VectorIndex.build(s, emb(s, dir), prefix,
+        ivfCentroids(s, dir), pqCodes(s, dir), PqM, PqSubDim)
     }
 
   def annIvfPqPrebuilt(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s, ensureVectorIndex(s, dir),
-        probes(s, dir), K, NProbe, PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, ensureVectorIndex(s, dir))
 
   /** Cross-family composition hooks (hybrid retrieval serves its vector
     * arm from this family's persisted IVF-PQ index): the built index's
@@ -1116,29 +1129,14 @@ object SimilarityQueries {
   // ORIGINAL quantizers (a delete never retrains); the oracle keeps
   // training on the full corpus and restricts candidates to the kept set.
   private val VecDelMod = 7
-  private val builtVectorIdxDel = scala.collection.mutable.Set[String]()
-
-  private def ensureDeletedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxd_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxDel.contains(prefix)) {
-        graft.operators.VectorIndex.build(s, emb(s, dir), prefix,
-          ivfCentroids(s, dir), pqCodes(s, dir), PqM, PqSubDim)
-        graft.operators.VectorIndex.delete(s,
-          emb(s, dir).filter(col("id") % VecDelMod === 0).select(col("id")),
-          prefix)
-        builtVectorIdxDel += prefix
-      }
-      prefix
-    }
-
   def annIvfPqDeleted(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureDeletedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxd_", dir) { prefix =>
+      graft.operators.VectorIndex.build(s, emb(s, dir), prefix,
+        ivfCentroids(s, dir), pqCodes(s, dir), PqM, PqSubDim)
+      graft.operators.VectorIndex.delete(s,
+        emb(s, dir).filter(col("id") % VecDelMod === 0).select(col("id")),
+        prefix)
+    })
 
   // ---- Vector-index APPEND lifecycle -----------------------------------------
   // Build the persisted index from half the corpus, append the other half
@@ -1147,35 +1145,19 @@ object SimilarityQueries {
   // trains on the built half and encodes everything, so the appended index
   // must be indistinguishable from that split — the vector twin of
   // index_append_persisted.
-  private val builtVectorIdxApp = scala.collection.mutable.Set[String]()
-
-  private def ensureAppendedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxa_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxApp.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val cents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val codes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, half, prefix, cents, codes,
-          PqM, PqSubDim)
-        graft.operators.VectorIndex.append(s, e.filter(col("id") % 2 =!= 0),
-          prefix)
-        builtVectorIdxApp += prefix
-      }
-      prefix
-    }
+  /** Build from the id % 2 == 0 half with [[halfQuantizers]]. */
+  private def buildHalf(s: SparkSession, dir: String, prefix: String): Unit = {
+    val (cents, codes) = halfQuantizers(s, dir)
+    graft.operators.VectorIndex.build(s, emb(s, dir).filter(col("id") % 2 === 0),
+      prefix, cents, codes, PqM, PqSubDim)
+  }
 
   def annIvfPqAppended(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureAppendedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxa_", dir) { prefix =>
+      buildHalf(s, dir, prefix)
+      graft.operators.VectorIndex.append(s,
+        emb(s, dir).filter(col("id") % 2 =!= 0), prefix)
+    })
 
   // ---- STREAMING vector ingest: the arriving half grows the index live -------
   // Build the persisted index from half the corpus, then STREAM the other
@@ -1184,39 +1166,20 @@ object SimilarityQueries {
   // VectorIndex.append — the vector twin of stream_index_ingest). Append
   // order is immaterial (per-row assignment with frozen quantizers), so
   // serving the result hash-matches the SAME oracle as ann_ivf_pq_appended.
-  private val builtVectorIdxStream = scala.collection.mutable.Set[String]()
-
-  private def ensureStreamedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxs_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxStream.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val cents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val codes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, half, prefix, cents, codes,
-          PqM, PqSubDim)
-        val staged = graft.streaming.DocStreams.stagedEmbSplits(
-          e.filter(col("id") % 2 =!= 0).select(col("id"), col("v")), nFiles = 3)
-        // maintenance policy ON at the production threshold (no-op for 3
-        // staged files; StreamingSpec drives it past the threshold)
-        graft.streaming.DocStreams.vectorIngestAppend(s, staged, prefix,
-          maxFilesPerUnit = Some(8))
-        builtVectorIdxStream += prefix
-      }
-      prefix
-    }
+  /** The id % 2 == 1 half staged as three stream source files. */
+  private def stagedOddHalf(s: SparkSession, dir: String): String =
+    graft.streaming.DocStreams.stagedEmbSplits(
+      emb(s, dir).filter(col("id") % 2 =!= 0).select(col("id"), col("v")),
+      nFiles = 3)
 
   def streamVectorIngest(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureStreamedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxs_", dir) { prefix =>
+      buildHalf(s, dir, prefix)
+      // maintenance policy ON at the production threshold (no-op for 3
+      // staged files; StreamingSpec drives it past the threshold)
+      graft.streaming.DocStreams.vectorIngestAppend(s, stagedOddHalf(s, dir),
+        prefix, maxFilesPerUnit = Some(8))
+    })
 
   // ---- Vector ingest stream + drift-triggered RETRAIN POLICY -----------------
   // The automation half of the maintenance loop (r11 wired compaction into
@@ -1232,43 +1195,18 @@ object SimilarityQueries {
   // store correctly, the in-stream policy fires through the snapshot
   // fence and the maintenance lease, and retrain-in-stream equals
   // build-fresh.
-  private val builtVectorIdxStreamRt = scala.collection.mutable.Set[String]()
-
-  private def ensureStreamRetrainedIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxsr_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxStreamRt.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val cents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val codes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, half, prefix, cents, codes,
-          PqM, PqSubDim)
-        val staged = graft.streaming.DocStreams.stagedEmbSplits(
-          e.filter(col("id") % 2 =!= 0).select(col("id"), col("v")), nFiles = 3)
-        val fired = graft.streaming.DocStreams.vectorIngestAppend(s, staged,
-          prefix, maxFilesPerUnit = None,
-          retrainPolicy = Some(graft.streaming.DocStreams.RetrainPolicy(
-            everyNBatches = 3, skewThreshold = 0.0, iters = IvfIters)))
-          .retrains
-        if (fired != 1)
-          sys.error(s"retrain policy fired $fired times, fixture expects " +
-            "exactly 1 (at the final micro-batch)")
-        builtVectorIdxStreamRt += prefix
-      }
-      prefix
-    }
-
   def streamVectorIngestRetrain(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureStreamRetrainedIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxsr_", dir) { prefix =>
+      buildHalf(s, dir, prefix)
+      val fired = graft.streaming.DocStreams.vectorIngestAppend(s,
+        stagedOddHalf(s, dir), prefix, maxFilesPerUnit = None,
+        retrainPolicy = Some(graft.streaming.DocStreams.RetrainPolicy(
+          everyNBatches = 3, skewThreshold = 0.0, iters = IvfIters)))
+        .retrains
+      if (fired != 1)
+        sys.error(s"retrain policy fired $fired times, fixture expects " +
+          "exactly 1 (at the final micro-batch)")
+    })
 
   // ---- Vector-index COMPACTION lifecycle --------------------------------------
   // Build from half the corpus, append the other half in TWO batches
@@ -1279,41 +1217,19 @@ object SimilarityQueries {
   // append lifecycle's SQL (train on the built half, encode everything).
   // Completes the vector-index lifecycle: build / append / delete /
   // snapshot / rollback / compact — the text index's full operation set.
-  private val builtVectorIdxComp = scala.collection.mutable.Set[String]()
-
-  private def ensureCompactedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxc_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxComp.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val cents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val codes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, half, prefix, cents, codes,
-          PqM, PqSubDim)
-        graft.operators.VectorIndex.append(s, e.filter(col("id") % 4 === 1),
-          prefix)
-        graft.operators.VectorIndex.append(s, e.filter(col("id") % 4 === 3),
-          prefix)
-        if (!graft.operators.VectorIndex.compact(s, prefix,
-            maxFilesPerUnit = 1))
-          sys.error("vector compaction unexpectedly skipped " +
-            "(files under threshold)")
-        builtVectorIdxComp += prefix
-      }
-      prefix
-    }
-
   def annIvfPqCompacted(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureCompactedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxc_", dir) { prefix =>
+      val e = emb(s, dir)
+      buildHalf(s, dir, prefix)
+      graft.operators.VectorIndex.append(s, e.filter(col("id") % 4 === 1),
+        prefix)
+      graft.operators.VectorIndex.append(s, e.filter(col("id") % 4 === 3),
+        prefix)
+      if (!graft.operators.VectorIndex.compact(s, prefix,
+          maxFilesPerUnit = 1))
+        sys.error("vector compaction unexpectedly skipped " +
+          "(files under threshold)")
+    })
 
   // ---- Vector-index MERGE lifecycle -------------------------------------------
   // Distributed index construction, the text index's indexMerged on the
@@ -1323,41 +1239,18 @@ object SimilarityQueries {
   // B's vectors re-encode from its raw forward store. The result must be
   // indistinguishable from build(A) + append(B), so the oracle is the
   // append lifecycle's SQL (train on A's half, encode everything).
-  private val builtVectorIdxMerge = scala.collection.mutable.Set[String]()
-
-  private def ensureMergedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxm_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxMerge.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val other = e.filter(col("id") % 2 =!= 0)
-        val cents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val codes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, half, s"${prefix}_sa", cents,
-          codes, PqM, PqSubDim)
-        // shard B trains its OWN quantizers — discarded by the merge,
-        // exactly the production situation (the surviving shard's
-        // geometry wins)
-        graft.operators.VectorIndex.trainAndBuild(s, other, s"${prefix}_sb",
-          nlist = NList, iters = IvfIters, pqM = PqM, pqKs = PqKs)
-        graft.operators.VectorIndex.merge(s, s"${prefix}_sa",
-          s"${prefix}_sb", prefix)
-        builtVectorIdxMerge += prefix
-      }
-      prefix
-    }
-
   def annIvfPqMerged(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureMergedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxm_", dir) { prefix =>
+      buildHalf(s, dir, s"${prefix}_sa")
+      // shard B trains its OWN quantizers — discarded by the merge,
+      // exactly the production situation (the surviving shard's
+      // geometry wins)
+      graft.operators.VectorIndex.trainAndBuild(s,
+        emb(s, dir).filter(col("id") % 2 =!= 0), s"${prefix}_sb",
+        nlist = NList, iters = IvfIters, pqM = PqM, pqKs = PqKs)
+      graft.operators.VectorIndex.merge(s, s"${prefix}_sa",
+        s"${prefix}_sb", prefix)
+    })
 
   // ---- Vector-index RETRAIN lifecycle -----------------------------------------
   // The drift remedy: build the full corpus under STALE quantizers (trained
@@ -1369,34 +1262,13 @@ object SimilarityQueries {
   // index from the appended oracle's answer to this one. RecallSpec pins
   // the recall recovery on a drifted fixture; the fuzzer mixes retrain
   // into random op sequences.
-  private val builtVectorIdxRetrain = scala.collection.mutable.Set[String]()
-
-  private def ensureRetrainedVectorIndex(s: SparkSession, dir: String): String =
-    synchronized {
-      val prefix = "graft_vecidxr_" + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVectorIdxRetrain.contains(prefix)) {
-        import s.implicits._
-        val e = emb(s, dir)
-        val half = e.filter(col("id") % 2 === 0)
-        val staleCents = Similarity.trainCentroids(half, NList, IvfIters, Dim)
-          .toDF("id", "v")
-        val staleCodes = graft.operators.Pq.train(
-          half.select(col("id"), col("v")), PqM, PqSubDim, PqKs)
-        graft.operators.VectorIndex.build(s, e, prefix, staleCents,
-          staleCodes, PqM, PqSubDim)
-        graft.operators.VectorIndex.retrain(s, prefix, iters = IvfIters)
-        builtVectorIdxRetrain += prefix
-      }
-      prefix
-    }
-
   def annIvfPqRetrained(s: SparkSession, dir: String): DataFrame =
-    graft.operators.VectorIndex.searchPrebuilt(s,
-        ensureRetrainedVectorIndex(s, dir), probes(s, dir), K, NProbe,
-        PqShortlist)
-      .select(col("probe_id"), col("rank"), col("cand_id"),
-        col("cosine").cast("double").as("cosine"))
-      .orderBy("probe_id", "rank")
+    servePersisted(s, dir, Fixtures.persisted("graft_vecidxr_", dir) { prefix =>
+      val (staleCents, staleCodes) = halfQuantizers(s, dir)
+      graft.operators.VectorIndex.build(s, emb(s, dir), prefix, staleCents,
+        staleCodes, PqM, PqSubDim)
+      graft.operators.VectorIndex.retrain(s, prefix, iters = IvfIters)
+    })
 
   // ---- Vector-index DESCRIBE ---------------------------------------------------
   // The maintainer's one-row report over the standard persisted index:

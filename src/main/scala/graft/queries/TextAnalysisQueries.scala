@@ -719,14 +719,12 @@ object TextAnalysisQueries {
   // + average quality in Complete mode. Per-doc quality quantizes to
   // integer micro-units before the stateful sum, so the streamed result
   // hash-matches the batch oracle under any arrival interleaving.
-  private val stagedQualitySrc = scala.collection.mutable.Map[String, String]()
+  private val stagedQualitySrc = new graft.Memo[String]
 
   private def stagedQualityDir(s: SparkSession, dir: String): String =
-    synchronized {
-      stagedQualitySrc.getOrElseUpdate(dir, graft.streaming.DocStreams
-        .stagedDocSplits(Tables.documents(s, dir)
-          .select(col("doc_id"), col("text"), col("source")), nFiles = 3))
-    }
+    stagedQualitySrc(dir)(graft.streaming.DocStreams
+      .stagedDocSplits(Tables.documents(s, dir)
+        .select(col("doc_id"), col("text"), col("source")), nFiles = 3))
 
   def streamQualityBySource(s: SparkSession, dir: String): DataFrame =
     graft.streaming.DocStreams

@@ -463,21 +463,46 @@ object TextIndexQueries {
   // Per-query results are batching-invariant (each query joins only its
   // own terms/probe), so the accumulated sink hash-matches the one-shot
   // batch oracle — replay invariance on the query side.
-  private val servedHybridOut = scala.collection.mutable.Map[String, String]()
+  def streamHybridServing(s: SparkSession, dir: String): DataFrame =
+    servedSink(s, dir, "hserve_out")(_.serve())
 
-  def streamHybridServing(s: SparkSession, dir: String): DataFrame = {
-    val out = synchronized {
-      servedHybridOut.getOrElseUpdate(dir, {
-        import s.implicits._
-        val t = ensurePrebuilt(s, dir)
-        val v = graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir)
-        val staged = graft.streaming.DocStreams.stagedRequestSplits(
-          HybridBatch.toDF("query_id", "query_text"), nFiles = 3)
-        val outPath = graft.ScratchDirs
-          .fresh("graft_stream", "hserve_out").toString
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath)
-        outPath
-      })
+  /** One served-sink fixture: the shared persisted text and vector
+    * indexes, the batch requests staged as three stream source files, and
+    * the row's own fresh sink.
+    */
+  private final case class ServedSink(s: SparkSession, text: String,
+                                      vec: String, reqs: DataFrame,
+                                      staged: String, out: String) {
+    def serve(checkpointDir: Option[String] = None,
+              bulkThreshold: Long = Search.BulkRequestThreshold,
+              retainBatches: Option[Int] = None): Unit =
+      graft.streaming.DocStreams.hybridServe(s, staged, text, vec, out,
+        checkpointDir = checkpointDir, bulkThreshold = bulkThreshold,
+        retainBatches = retainBatches)
+
+    /** Erase every result row of a doc_id % 7 == 0 document. */
+    def forgetSevenths(dir: String): Unit =
+      graft.streaming.DocStreams.forgetFromServingSink(s, out,
+        docs(s, dir).select(col("doc_id")).filter(col("doc_id") % 7 === 0))
+  }
+
+  private val servedSinks = new graft.Memo[String]
+
+  /** Runs a serving row's `steps` (serve, forget, re-serve) once per (JVM,
+    * dir) into a fresh `graft_stream/<outName>` sink, then reads the
+    * accumulated results back in the oracle's shape.
+    */
+  private def servedSink(s: SparkSession, dir: String, outName: String)(
+      steps: ServedSink => Unit): DataFrame = {
+    val out = servedSinks(s"$outName#$dir") {
+      import s.implicits._
+      val reqs = HybridBatch.toDF("query_id", "query_text")
+      val sink = ServedSink(s, ensurePrebuilt(s, dir),
+        graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir),
+        reqs, graft.streaming.DocStreams.stagedRequestSplits(reqs, nFiles = 3),
+        graft.ScratchDirs.fresh("graft_stream", outName).toString)
+      steps(sink)
+      sink.out
     }
     // recursiveFileLookup: the sink's batch_id=N subdirs exist for
     // idempotent replay (one overwrite target per micro-batch), NOT as a
@@ -497,28 +522,8 @@ object TextIndexQueries {
   // nothing request-derived inlined as a literal). Shares
   // stream_hybrid_serving's oracle: the route must be results-invisible,
   // and this row makes the DuckDB gate enforce it every round.
-  private val servedHybridBulkOut = scala.collection.mutable.Map[String, String]()
-
-  def streamHybridServingBulk(s: SparkSession, dir: String): DataFrame = {
-    val out = synchronized {
-      servedHybridBulkOut.getOrElseUpdate(dir, {
-        import s.implicits._
-        val t = ensurePrebuilt(s, dir)
-        val v = graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir)
-        val staged = graft.streaming.DocStreams.stagedRequestSplits(
-          HybridBatch.toDF("query_id", "query_text"), nFiles = 3)
-        val outPath = graft.ScratchDirs
-          .fresh("graft_stream", "hservebulk_out").toString
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath,
-          bulkThreshold = 0L)
-        outPath
-      })
-    }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
-      .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
-        col("vec_rank"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
-  }
+  def streamHybridServingBulk(s: SparkSession, dir: String): DataFrame =
+    servedSink(s, dir, "hservebulk_out")(_.serve(bulkThreshold = 0L))
 
   // ---- Results-log erasure: forget on the serving sink -----------------------
   // The deletion path's last mile (VERDICT r13 closed the stores; the
@@ -531,30 +536,11 @@ object TextIndexQueries {
   // prebuilt indexes are NOT purged here (every other prebuilt row reads
   // them); the index-then-sink ordering contract is CliSpec's `forget
   // --sink` fixture.
-  private val sinkForgetOut = scala.collection.mutable.Map[String, String]()
-
-  def sinkForget(s: SparkSession, dir: String): DataFrame = {
-    val out = synchronized {
-      sinkForgetOut.getOrElseUpdate(dir, {
-        import s.implicits._
-        val t = ensurePrebuilt(s, dir)
-        val v = graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir)
-        val staged = graft.streaming.DocStreams.stagedRequestSplits(
-          HybridBatch.toDF("query_id", "query_text"), nFiles = 3)
-        val outPath = graft.ScratchDirs
-          .fresh("graft_stream", "hservefgt_out").toString
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath)
-        graft.streaming.DocStreams.forgetFromServingSink(s, outPath,
-          docs(s, dir).select(col("doc_id"))
-            .filter(col("doc_id") % 7 === 0))
-        outPath
-      })
+  def sinkForget(s: SparkSession, dir: String): DataFrame =
+    servedSink(s, dir, "hservefgt_out") { sink =>
+      sink.serve()
+      sink.forgetSevenths(dir)
     }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
-      .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
-        col("vec_rank"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
-  }
 
   lazy val sinkForgetSql: String =
     s"""SELECT * FROM (
@@ -571,28 +557,8 @@ object TextIndexQueries {
   // query_ids {0, 50, 100} exactly query 0's batch ages out: the oracle
   // is the serving oracle minus query_id 0 — retention must drop whole
   // aged batches and nothing newer.
-  private val sinkRetentionOut = scala.collection.mutable.Map[String, String]()
-
-  def sinkRetention(s: SparkSession, dir: String): DataFrame = {
-    val out = synchronized {
-      sinkRetentionOut.getOrElseUpdate(dir, {
-        import s.implicits._
-        val t = ensurePrebuilt(s, dir)
-        val v = graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir)
-        val staged = graft.streaming.DocStreams.stagedRequestSplits(
-          HybridBatch.toDF("query_id", "query_text"), nFiles = 3)
-        val outPath = graft.ScratchDirs
-          .fresh("graft_stream", "hserveret_out").toString
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath,
-          retainBatches = Some(2))
-        outPath
-      })
-    }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
-      .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
-        col("vec_rank"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
-  }
+  def sinkRetention(s: SparkSession, dir: String): DataFrame =
+    servedSink(s, dir, "hserveret_out")(_.serve(retainBatches = Some(2)))
 
   lazy val sinkRetentionSql: String =
     s"""SELECT * FROM (
@@ -614,38 +580,16 @@ object TextIndexQueries {
   // it the purged pre-forget history survives forever and this row goes
   // hash-red. Oracle = the serving oracle minus the one query whose
   // re-serve batch aged out.
-  private val sinkForgetAgedOut = scala.collection.mutable.Map[String, String]()
-
-  def sinkForgetAged(s: SparkSession, dir: String): DataFrame = {
-    val out = synchronized {
-      sinkForgetAgedOut.getOrElseUpdate(dir, {
-        import s.implicits._
-        val t = ensurePrebuilt(s, dir)
-        val v = graft.queries.SimilarityQueries.persistedVectorIndexPrefix(s, dir)
-        val reqs = HybridBatch.toDF("query_id", "query_text")
-        val staged = graft.streaming.DocStreams.stagedRequestSplits(
-          reqs, nFiles = 3)
-        val ckpt = graft.ScratchDirs
-          .fresh("graft_stream", "hservefga_ckpt").toString
-        val outPath = graft.ScratchDirs
-          .fresh("graft_stream", "hservefga_out").toString
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath,
-          checkpointDir = Some(ckpt))
-        graft.streaming.DocStreams.forgetFromServingSink(s, outPath,
-          docs(s, dir).select(col("doc_id"))
-            .filter(col("doc_id") % 7 === 0))
-        graft.streaming.DocStreams.stageRequestSplitsInto(staged, reqs,
-          nFiles = 3, startAt = 3)
-        graft.streaming.DocStreams.hybridServe(s, staged, t, v, outPath,
-          checkpointDir = Some(ckpt), retainBatches = Some(2))
-        outPath
-      })
+  def sinkForgetAged(s: SparkSession, dir: String): DataFrame =
+    servedSink(s, dir, "hservefga_out") { sink =>
+      val ckpt = Some(graft.ScratchDirs
+        .fresh("graft_stream", "hservefga_ckpt").toString)
+      sink.serve(checkpointDir = ckpt)
+      sink.forgetSevenths(dir)
+      graft.streaming.DocStreams.stageRequestSplitsInto(sink.staged, sink.reqs,
+        nFiles = 3, startAt = 3)
+      sink.serve(checkpointDir = ckpt, retainBatches = Some(2))
     }
-    s.read.option("recursiveFileLookup", "true").parquet(out)
-      .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
-        col("vec_rank"), col("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
-  }
 
   lazy val sinkForgetAgedSql: String =
     s"""SELECT * FROM (
@@ -735,23 +679,9 @@ object TextIndexQueries {
   // The reference's true architecture: index.sh builds + persists ONCE;
   // query.py reads the stored tables per query. Each lifecycle variant
   // (plain / appended / deleted / compacted) is built per (JVM, sfDir) and
-  // memoized — bench's repeat runs measure the query-over-stored-index
-  // cost, with the build amortized exactly like the reference's one-time
-  // index job.
-  private val builtVariants = scala.collection.mutable.Set[String]()
-
-  /** Build-once memo for the persisted index variants: prefix = tag +
-    * mangled dir; the build body runs on the first call per (JVM, dir).
-    */
-  private def memoizedIndex(tag: String, dir: String)(build: String => Unit): String =
-    synchronized {
-      val prefix = tag + dir.replaceAll("[^A-Za-z0-9]", "_")
-      if (!builtVariants.contains(prefix)) {
-        build(prefix)
-        builtVariants += prefix
-      }
-      prefix
-    }
+  // memoized (Fixtures.persisted) — bench's repeat runs measure the
+  // query-over-stored-index cost, with the build amortized exactly like
+  // the reference's one-time index job.
 
   /** The flagship query over a persisted index, in the oracle's shape. */
   private def prebuiltSearch(s: SparkSession, prefix: String): DataFrame =
@@ -761,7 +691,7 @@ object TextIndexQueries {
 
   /** The plain full-corpus persisted index (also probed by the batch path). */
   private[queries] def ensurePrebuilt(s: SparkSession, dir: String): String =
-    memoizedIndex("graft_idx_", dir) { prefix =>
+    Fixtures.persisted("graft_idx_", dir) { prefix =>
       Indexer.buildBucketedIndex(s, docs(s, dir), prefix)
     }
 
@@ -784,7 +714,7 @@ object TextIndexQueries {
   // bm25 SQL — the appended index must be indistinguishable from a
   // from-scratch build (same merged term_df, same co-located layout).
   def indexAppendPersisted(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxa_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxa_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 2 === 0), prefix)
       Indexer.appendBucketedIndex(s, d.filter(col("doc_id") % 2 === 1), prefix)
@@ -797,7 +727,7 @@ object TextIndexQueries {
   // bm25 SQL over the filtered corpus (term_df decremented with df==0
   // terms dropped, postings/doc_info purged, bucketing intact).
   def indexDeletePersisted(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxd_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxd_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d, prefix)
       Indexer.deleteFromBucketedIndex(s, prefix,
@@ -813,7 +743,7 @@ object TextIndexQueries {
   // (same bm25 SQL oracle) — compaction is invisible to queries except for
   // file counts (which IndexerSpec pins separately).
   def indexCompacted(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxc_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxc_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 3 === 0), prefix)
       Indexer.appendBucketedIndex(s, d.filter(col("doc_id") % 3 === 1), prefix)
@@ -829,7 +759,7 @@ object TextIndexQueries {
   // shuffling postings. The oracle is the full-corpus bm25 SQL — a merged
   // index must be indistinguishable from a from-scratch build.
   def indexMerged(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxm_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxm_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 2 === 0), s"${prefix}_sa")
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 2 === 1), s"${prefix}_sb")
@@ -843,7 +773,7 @@ object TextIndexQueries {
   // doc_id%2==0 half only. Completes the lifecycle: create / append /
   // merge / compact / delete / snapshot / rollback.
   def indexRollback(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxr_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxr_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 2 === 0), prefix)
       Indexer.snapshotIndex(s, prefix, "pre")
@@ -862,7 +792,7 @@ object TextIndexQueries {
   // indistinguishable from a from-scratch full-corpus build — the oracle
   // is the full-corpus bm25 SQL.
   def streamIndexIngest(s: SparkSession, dir: String): DataFrame =
-    prebuiltSearch(s, memoizedIndex("graft_idxs_", dir) { prefix =>
+    prebuiltSearch(s, Fixtures.persisted("graft_idxs_", dir) { prefix =>
       val d = docs(s, dir)
       Indexer.buildBucketedIndex(s, d.filter(col("doc_id") % 2 === 0), prefix)
       val staged = graft.streaming.DocStreams

@@ -75,18 +75,7 @@ object EventStreams {
     * per call: checkpoints and sinks stay per-run fresh (runToSink), so
     * each invocation recomputes the result from the staged parquet.
     */
-  private val stagedDirCache =
-    new java.util.concurrent.ConcurrentHashMap[String, () => String]()
-
-  /** Per-KEY memoization (ADVICE r15): the map insert is the only globally
-    * synchronized step; the multi-second staging build itself runs under a
-    * per-key lazy holder, so first-call staging of UNRELATED stream rows
-    * proceeds concurrently (and a reentrant build of a different key
-    * cannot deadlock on one object monitor). The lazy val guarantees each
-    * key's build still runs exactly once.
-    */
-  private def memoStaged(key: String)(build: => String): String =
-    stagedDirCache.computeIfAbsent(key, _ => { lazy val v = build; () => v })()
+  private val stagedSources = new graft.Memo[String]
 
   /** Cast every column of a synthetic (sentinel/fake) row frame to the
     * reference frame's exact types. Synthetic rows are built from
@@ -267,7 +256,7 @@ object EventStreams {
     // driver's testdata but not for directory-shaped parquet (what any
     // Spark writer produces; the x100 ScaleProbe corpus surfaced it as
     // an empty staged source)
-    val srcDir = memoStaged(s"$dir#dedup_src") {
+    val srcDir = stagedSources(s"$dir#dedup_src") {
       val d = freshDir("dedup_src")
       val ev = graft.Tables.events(s, dir)
       writeSingleFile(ev, d, "events.parquet")
@@ -351,7 +340,7 @@ object EventStreams {
   private def sentinelStagedDir(s: SparkSession, dir: String, tag: String,
                                 extraSentinels: Int = 0,
                                 slices: Int = 1): String =
-    memoStaged(s"$dir#$tag#$extraSentinels#$slices") {
+    stagedSources(s"$dir#$tag#$extraSentinels#$slices") {
       sentinelStagedDirBuild(s, dir, tag, extraSentinels, slices)
     }
 
@@ -507,7 +496,7 @@ object EventStreams {
     */
   private def stagedEventSplits(s: SparkSession, dir: String, nFiles: Int,
                                 tag: String): String =
-    memoStaged(s"$dir#$tag#$nFiles") {
+    stagedSources(s"$dir#$tag#$nFiles") {
       val raw = graft.Tables.events(s, dir) // ts canonical µs TIMESTAMP
       val out = freshDir(tag)
       (0 until nFiles).foreach { i =>
@@ -732,7 +721,7 @@ object EventStreams {
     */
   private def lateTypedStagedDir(s: SparkSession, dir: String,
                                  tag: String, slices: Int = 1): String =
-    memoStaged(s"$dir#$tag#late#$slices") {
+    stagedSources(s"$dir#$tag#late#$slices") {
       lateTypedStagedDirBuild(s, dir, tag, slices)
     }
 
@@ -827,7 +816,7 @@ object EventStreams {
     */
   private[graft] def mvRefreshReplay(s: SparkSession, dir: String,
                                      slices: Int): DataFrame = {
-    val srcDir = memoStaged(s"$dir#mvr_src#$slices") {
+    val srcDir = stagedSources(s"$dir#mvr_src#$slices") {
       val d = freshDir(s"mvr_src$slices")
       writeChronoSlices(graft.Tables.events(s, dir), d, slices)
       d.toString

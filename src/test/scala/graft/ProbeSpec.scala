@@ -1,9 +1,32 @@
 package graft
 
+import org.apache.spark.sql.execution.{LeafExecNode, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+
 /** `graft.Probe`'s measuring function on the test session, at sf0.001. */
 class ProbeSpec extends SparkSpec {
 
   private val dir = "/root/testdata/sf0.001"
+
+  /** Every node of a plan, through AQE's wrapper and its query stages. */
+  private def nodes(p: SparkPlan): Iterator[SparkPlan] = {
+    val kids = p match {
+      case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
+      case q: QueryStageExec => Seq(q.plan)
+      case other => other.children
+    }
+    Iterator(p) ++ kids.iterator.flatMap(nodes)
+  }
+
+  test("Probe.run returns the plan that ran: its scan reports the rows it read") {
+    val plan = Probe.run(SparkEntry.queries("scan_filter")(spark, dir))
+    val scanRows = nodes(plan).collect {
+      case l: LeafExecNode if l.metrics.contains("numOutputRows") =>
+        l.metrics("numOutputRows").value
+    }.toSeq
+    assert(scanRows.nonEmpty, s"no scan node in:\n$plan")
+    assert(scanRows.exists(_ > 0), s"every scan reads 0 rows ($scanRows):\n$plan")
+  }
 
   test("a batch row reports its phases, jobs, stages and tasks") {
     val r = Probe.measure(spark, dir, "scan_filter")

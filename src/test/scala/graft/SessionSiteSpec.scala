@@ -12,6 +12,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * `GraftSession.scoped`: a write an operator leaves behind changes the
   * engine every later query runs on. Every rename that moves data into
   * place goes through `graft.operators.Commit`, the one crash protocol.
+  * Every build-once fixture goes through [[Memo]]: a memo map behind a lock
+  * on its whole object serializes unrelated multi-second builds.
   * No SparkSession: a source scan.
   */
 class SessionSiteSpec extends AnyFunSuite {
@@ -53,5 +55,21 @@ class SessionSiteSpec extends AnyFunSuite {
     val sites = sitesMatching("src/main/scala")(rename.findFirstIn(_).isDefined)
     assert(sites == Seq(Paths.get("src/main/scala/graft/operators/Commit.scala")),
       s"renames outside Commit: ${sites.mkString(", ")}")
+  }
+
+  test("only Memo, CacheRegistry and Search synchronize under src/main") {
+    val allowed = Set("graft/Memo.scala", "graft/CacheRegistry.scala",
+      "graft/operators/Search.scala").map(f => Paths.get("src/main/scala", f))
+    val sites = sitesMatching("src/main/scala")(_.contains("synchronized"))
+    assert(sites.forall(allowed),
+      s"synchronized outside Memo: ${sites.filterNot(allowed).mkString(", ")}")
+  }
+
+  test("no hand-rolled memo map or set under the query families") {
+    val field = """mutable\.(Map|Set)\[""".r
+    val sites = sitesMatching("src/main/scala/graft/queries")(
+      field.findFirstIn(_).isDefined)
+    assert(sites.isEmpty,
+      s"mutable Map/Set fields in: ${sites.mkString(", ")}")
   }
 }
