@@ -24,6 +24,12 @@ import graft.operators.Commit.dropManagedTable
   * docInfo is shuffle-free (a map-only projection). Positions are kept sorted
   * (`sort_array`) for deterministic output; the reference's position order is
   * partition-dependent (SURVEY.md §7.6).
+  *
+  * The persisted (bucketed) index is born compact: build and append write
+  * ONE postings and one term_df file per bucket ([[bucketedPostings]]), so
+  * compaction fires after about `maxFilesPerBucket` appends, not at the
+  * first. The price: that exchange ships token rows without a map-side
+  * combine, as the reference's jobs do.
   */
 object Indexer {
 
@@ -33,11 +39,26 @@ object Indexer {
       posexplode(Tokenizer.tokenize(col("text"))).as(Seq("pos", "term")))
 
   /** A1 — (term, doc_id) -> (tf, positions). */
-  def postings(docs: DataFrame): DataFrame =
-    tokenPositions(docs)
+  def postings(docs: DataFrame): DataFrame = aggregatePostings(tokenPositions(docs))
+
+  private def aggregatePostings(tokens: DataFrame): DataFrame =
+    tokens
       .groupBy("term", "doc_id")
       .agg(count(lit(1)).cast("int").as("tf"),
            sort_array(collect_list(col("pos"))).as("positions"))
+
+  /** [[postings]] aggregated over ONE exchange hashed by term alone into
+    * IndexBuckets partitions. A partition's id is then
+    * pmod(murmur3(term), IndexBuckets) — the bucketed writer's bucket id —
+    * so each task holds exactly one bucket and a bucketBy(IndexBuckets,
+    * term) write lands one file per bucket, whatever the session's shuffle
+    * partition count. The (term, doc_id) aggregate and a term_df derived
+    * from the cached result reuse that partitioning without exchanging
+    * again.
+    */
+  private def bucketedPostings(docs: DataFrame): DataFrame =
+    aggregatePostings(
+      tokenPositions(docs).repartition(IndexBuckets, col("term")))
 
   /** A2 — term -> document frequency. Derived from postings (already one row
     * per (term, doc_id)) so it is a plain count, not a countDistinct.
@@ -113,7 +134,8 @@ object Indexer {
 
   /** Persist the index as TERM-BUCKETED tables (the reference's index.sh →
     * Cassandra step, re-expressed as Spark bucketed parquet). postings and
-    * term_df share bucketBy(IndexBuckets, term) + sortBy(term), so:
+    * term_df share bucketBy(IndexBuckets, term) + sortBy(term), one file
+    * per bucket (see [[bucketedPostings]]), so:
     *  - the query-time term join is co-located — zero exchange on either
     *    index scan (Search.searchPrebuilt);
     *  - literal term predicates prune to matching buckets
@@ -126,7 +148,7 @@ object Indexer {
                          prefix: String): Unit = {
     Seq("postings", "term_df", "doc_info")
       .foreach(t => dropManagedTable(spark, s"${prefix}_$t"))
-    val p = postings(docs).cache()
+    val p = bucketedPostings(docs).cache()
     p.write.mode("overwrite").format("parquet")
       .bucketBy(IndexBuckets, "term").sortBy("term")
       .saveAsTable(s"${prefix}_postings")
@@ -145,11 +167,14 @@ object Indexer {
     *
     *  - postings / doc_info: append-mode writes by table name. The writer
     *    declares the SAME bucketing as the existing table (Spark verifies
-    *    the specs match), so the batch lands as one extra file per touched
-    *    bucket — normal bucketed-table growth; the co-located term join
-    *    stays exchange-free. Cost ∝ batch, not corpus. (File counts grow
-    *    one per bucket per batch — compactBucketedIndex is the matching
-    *    maintenance operation.)
+    *    the specs match), and the batch's postings are aggregated over the
+    *    same one-partition-per-bucket exchange as the build, so the batch
+    *    lands as exactly one extra file per touched bucket, however wide
+    *    the session's shuffle — normal bucketed-table growth; the
+    *    co-located term join stays exchange-free. Cost ∝ batch, not
+    *    corpus. (File counts grow one per bucket per batch, so
+    *    compactBucketedIndex at threshold t first rewrites after about t
+    *    appends.)
     *  - term_df: per-term counts must MERGE, not append (a term present in
     *    both halves would otherwise surface twice with partial dfs). The
     *    merged aggregate is vocabulary-sized — orders of magnitude smaller
@@ -159,7 +184,7 @@ object Indexer {
     */
   def appendBucketedIndex(spark: SparkSession, newDocs: DataFrame,
                           prefix: String): Unit = {
-    val p = postings(newDocs).cache()
+    val p = bucketedPostings(newDocs).cache()
     p.write.mode("append").format("parquet")
       .bucketBy(IndexBuckets, "term").sortBy("term")
       .saveAsTable(s"${prefix}_postings")
@@ -414,11 +439,12 @@ object Indexer {
     }
   }
 
-  /** Compaction — the maintenance half of the append story. Each bucketed
-    * write lands one file per (task, touched bucket), so a build plus N
-    * append batches leaves every bucket a pile of small files and scan
-    * efficiency decays. When any bucket's file count exceeds
-    * `maxFilesPerBucket`, rewrite the postings table WITHOUT ANY SHUFFLE:
+  /** Compaction — the maintenance half of the append story. The build and
+    * each append write one file per bucket, so after N append batches
+    * every bucket holds 1 + N small files and scan efficiency decays; the
+    * first rewrite comes after about `maxFilesPerBucket` appends. When any
+    * bucket's file count exceeds `maxFilesPerBucket`, rewrite the
+    * postings table WITHOUT ANY SHUFFLE:
     * with the bucketed scan forced on (autoBucketedScan would disable it
     * for a plain pass-through read), the source produces exactly one
     * partition per bucket, every row in a task already belongs to that

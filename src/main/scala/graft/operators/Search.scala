@@ -315,8 +315,8 @@ object Search {
     // single-probe hybrid's convention — the window orders ≤k rows/query)
     val tw = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    val textRank = batchSearch(
-        queries.toDF("query_id", "query_text"), postings, termDf, docInfo, k)
+    val textRank = batchTopK(queries.toDF("query_id", "query_text"),
+        postings, termDf, docInfo, k, broadcastRequests = true)
       .select(col("query_id"), col("doc_id").cast("long").as("doc_id"),
         col("score"))
       .withColumn("text_rank", row_number().over(tw).cast("long"))
@@ -392,7 +392,8 @@ object Search {
     // score — the batch form's convention, unchanged
     val tw = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    val textRank = bulkSearch(requests, postings, termDf, docInfo, k)
+    val textRank = batchTopK(requests, postings, termDf, docInfo, k,
+        broadcastRequests = false)
       .select(col("query_id"), col("doc_id").cast("long").as("doc_id"),
         col("score"))
       .withColumn("text_rank", row_number().over(tw).cast("long"))
@@ -478,8 +479,8 @@ object Search {
   def batchSearch(queries: DataFrame,
                   postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
                   k: Int = 10): DataFrame =
-    batchSearchImpl(queries, postings, termDf, docInfo, k,
-      broadcastRequests = true)
+    withTitles(batchTopK(queries, postings, termDf, docInfo, k,
+      broadcastRequests = true), docInfo, broadcastWinners = true)
 
   /** [[batchSearch]] for an UNBOUNDED requests table: identical math, but
     * nothing derived from the requests is ever broadcast — the term probe
@@ -491,13 +492,28 @@ object Search {
   def bulkSearch(requests: DataFrame,
                  postings: DataFrame, termDf: DataFrame, docInfo: DataFrame,
                  k: Int = 10): DataFrame =
-    batchSearchImpl(requests, postings, termDf, docInfo, k,
-      broadcastRequests = false)
+    withTitles(batchTopK(requests, postings, termDf, docInfo, k,
+      broadcastRequests = false), docInfo, broadcastWinners = false)
 
-  private def batchSearchImpl(queries: DataFrame,
-                              postings: DataFrame, termDf: DataFrame,
-                              docInfo: DataFrame, k: Int,
-                              broadcastRequests: Boolean): DataFrame = {
+  /** Display metadata joins the winners only (cost ∝ |queries|·k) —
+    * mirrors the single-query search(); the winners side broadcasts in
+    * the batch form but stays a shuffle join under an unbounded bulk run.
+    */
+  private def withTitles(top: DataFrame, docInfo: DataFrame,
+                         broadcastWinners: Boolean): DataFrame =
+    docInfo.select(col("doc_id"), col("title"))
+      .join(if (broadcastWinners) broadcast(top) else top, "doc_id")
+      .select(col("query_id"), col("rank"), col("doc_id"), col("title"),
+        col("score"))
+
+  /** [[batchSearch]]/[[bulkSearch]] without the title attach:
+    * (query_id, rank, doc_id, score). The hybrid forms fuse these winners
+    * and attach titles once, after fusion.
+    */
+  private def batchTopK(queries: DataFrame,
+                        postings: DataFrame, termDf: DataFrame,
+                        docInfo: DataFrame, k: Int,
+                        broadcastRequests: Boolean): DataFrame = {
     val stats = statsAgg(docInfo)
     val qTerms0 = queries.select(col("query_id"),
         explode(array_distinct(
@@ -557,13 +573,8 @@ object Search {
       if (broadcastRequests)
         graft.plans.TopK.rank(summed, "query_id", "doc_id", "score", k)
       else graft.plans.TopK.perGroup(summed, "query_id", "doc_id", "score", k)
-    // display metadata joins the winners only (cost ∝ |queries|·k) —
-    // mirrors the single-query search(); the winners side broadcasts in
-    // the batch form but stays a shuffle join under an unbounded bulk run
-    docInfo.select(col("doc_id"), col("title"))
-      .join(if (broadcastRequests) broadcast(top) else top, "doc_id")
-      .select(col("query_id"), col("rank"), col("doc_id"), col("title"),
-        graft.Money.micros(col("score")).as("score"))
+    top.select(col("query_id"), col("rank"), col("doc_id"),
+      graft.Money.micros(col("score")).as("score"))
   }
 
   /** RM3-style pseudo-relevance-feedback expansion: run the query, treat

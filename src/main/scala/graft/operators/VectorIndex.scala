@@ -21,7 +21,10 @@ import org.apache.spark.sql.functions._
   *    vector-DB forward index) — point fetches BY ID (a probe vector, a
   *    rerank candidate's raw vector) bucket-prune here instead of
   *    scanning the cent_id-partitioned lists, whose layout answers "which
-  *    vectors are near centroid c", never "what is vector i".
+  *    vectors are near centroid c", never "what is vector i". The build
+  *    writes it one file per bucket (an exchange by id into
+  *    ForwardBuckets partitions, whose ids are the bucket ids); `append`
+  *    writes its batch without that exchange.
   *
   * Serving reads the same centroid/codebook values the build wrote (both
   * bounded: NList and M*Ks rows), so results are bit-identical to the
@@ -58,11 +61,21 @@ object VectorIndex {
     if (writeForward) {
       Commit.dropManagedTable(spark, s"${prefix}_forward")
       emb.select(col("id"), col("v"))
+        .repartition(ForwardBuckets, col("id"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(ForwardBuckets, "id").sortBy("id")
         .saveAsTable(s"${prefix}_forward")
     }
   }
+
+  /** The stored codebooks in (m, k) order. The table holds M*Ks rows, so
+    * they sort on the driver: an `orderBy` before the collect would cost a
+    * range-sampling job and a shuffle on every serve and append.
+    */
+  private def readCodes(spark: SparkSession, prefix: String): Seq[Pq.Code] =
+    spark.table(s"${prefix}_codes").collect().toSeq
+      .map(r => Pq.Code(r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
+      .sortBy(c => (c.m, c.k))
 
   /** Train (coarse centroids + PQ codebooks) and build in one call — the
     * CLI entry shape. `emb` needs (id, v array<double>). Dimensionality is
@@ -91,10 +104,7 @@ object VectorIndex {
     * built ones.
     */
   def append(spark: SparkSession, batch: DataFrame, prefix: String): Unit = {
-    val codes = spark.table(s"${prefix}_codes")
-      .orderBy("m", "k").collect()
-      .map(r => Pq.Code(r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .toSeq
+    val codes = readCodes(spark, prefix)
     val pqM = codes.map(_.m).max + 1
     val pqSubDim = codes.head.carr.length
     val cents = spark.table(s"${prefix}_centroids")
@@ -107,8 +117,9 @@ object VectorIndex {
       .write.mode("append").partitionBy("cent_id").parquet(loc.toString)
     spark.catalog.recoverPartitions(s"${prefix}_vectors")
     spark.catalog.refreshTable(s"${prefix}_vectors")
-    // forward store grows the same way postings do: one extra file per
-    // touched bucket (the writer re-declares the matching bucket spec)
+    // forward store: one extra file per (batch partition, touched bucket);
+    // the writer re-declares the matching bucket spec. No exchange by id as
+    // in build: a streamed batch is one partition, so it would buy nothing
     batch.select(col("id"), col("v"))
       .write.mode("append").format("parquet")
       .bucketBy(ForwardBuckets, "id").sortBy("id")
@@ -425,10 +436,7 @@ object VectorIndex {
   private def retrainImpl(spark: SparkSession, prefix: String, iters: Int,
                           nlistOverride: Option[Int]): Unit = {
     import spark.implicits._
-    val codes0 = spark.table(s"${prefix}_codes")
-      .orderBy("m", "k").collect()
-      .map(r => Pq.Code(r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .toSeq
+    val codes0 = readCodes(spark, prefix)
     val pqM = codes0.map(_.m).max + 1
     val pqSubDim = codes0.head.carr.length
     val pqKs = codes0.map(_.k).max + 1
@@ -602,10 +610,7 @@ object VectorIndex {
     // under-return from a mid-swap-missing list (ADVICE r11)
     ensureRecovered(spark, prefix,
       context = "serving may transiently under-return from probed lists")
-    val codes = spark.table(s"${prefix}_codes")
-      .orderBy("m", "k").collect()
-      .map(r => Pq.Code(r.getInt(0), r.getInt(1), r.getSeq[Double](2)))
-      .toSeq
+    val codes = readCodes(spark, prefix)
     // geometry comes from the stored codebooks, never from the caller —
     // a mismatched assumption would silently score garbage
     val pqM = codes.map(_.m).max + 1

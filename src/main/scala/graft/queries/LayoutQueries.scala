@@ -12,7 +12,9 @@ import graft.operators.Commit.dropManagedTable
   * recomputes the result from the raw unpartitioned parquet.
   *
   *  - `bucketed_join`: fact⋈fact co-located via storage bucketing. Both
-  *    tables are written `bucketBy(N, orderkey)`; the join consumes the
+  *    tables are written `bucketBy(N, orderkey)` after a
+  *    `repartition(N, orderkey)`, whose partition ids are the bucket ids,
+  *    so each bucket is one file; the join consumes the
   *    bucket layout and needs NO exchange on either side — the shuffle was
   *    paid once at write time and amortizes over every subsequent join
   *    (PlanSpec pins the exchange-free shape). This is the general-table
@@ -51,11 +53,13 @@ object LayoutQueries {
       dropManagedTable(s, ordT)
       Tables.lineitem(s, dir)
         .select(col("l_orderkey"), col("l_extendedprice"), col("l_discount"))
+        .repartition(JoinBuckets, col("l_orderkey"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(JoinBuckets, "l_orderkey").sortBy("l_orderkey")
         .saveAsTable(liT)
       Tables.orders(s, dir)
         .select(col("o_orderkey"), col("o_orderpriority"))
+        .repartition(JoinBuckets, col("o_orderkey"))
         .write.mode("overwrite").format("parquet")
         .bucketBy(JoinBuckets, "o_orderkey").sortBy("o_orderkey")
         .saveAsTable(ordT)

@@ -422,4 +422,65 @@ class IndexerSpec extends SparkSpec {
       s"top-k cut is not on the raw score: kept $kept (a micros-grid cut " +
         "breaks this tie toward the smaller doc_id)")
   }
+
+  // build and append aggregate postings over one exchange hashed by term
+  // into IndexBuckets partitions, so whatever the session's shuffle
+  // partition count, each write lands one file per bucket
+  Seq(3, 32).foreach { n =>
+    test(s"one file per bucket per write at $n shuffle partitions") {
+      val prefix = s"graft_idx_layout_$n"
+      val d = Tables.documents(spark, "/root/testdata/sf0.001")
+        .select(col("doc_id"), col("text"))
+      GraftSession.scoped(spark, "spark.sql.shuffle.partitions" -> n.toString) {
+        Indexer.buildBucketedIndex(spark, d.filter(col("doc_id") % 2 === 0), prefix)
+        Seq("postings", "term_df").foreach { t =>
+          val files = Indexer.bucketFileCounts(spark, s"${prefix}_$t")
+          assert(files.keySet == (0 until Indexer.IndexBuckets).toSet &&
+            files.values.forall(_ == 1), s"build wrote $t as $files")
+        }
+        Indexer.appendBucketedIndex(spark, d.filter(col("doc_id") % 2 === 1), prefix)
+        Seq("postings", "term_df").foreach { t =>
+          val files = Indexer.bucketFileCounts(spark, s"${prefix}_$t")
+          assert(files.values.max <= 2, s"one append stacked $t as $files")
+        }
+        assert(!Indexer.compactBucketedIndex(spark, prefix, 8),
+          "one append already crossed the compaction threshold")
+      }
+    }
+  }
+
+  test("term_df after build + append equals a fresh build, one row per term") {
+    // the append merges the bucketed term_df scan with the term-partitioned
+    // batch in one union: a union that claimed its children's partitioning
+    // without co-partitioning them would leave one partial row per side
+    val d = Tables.documents(spark, "/root/testdata/sf0.001")
+      .select(col("doc_id"), col("text"))
+    Indexer.buildBucketedIndex(spark, d.filter(col("doc_id") % 3 =!= 0),
+      "graft_idx_tdf_grown")
+    Indexer.appendBucketedIndex(spark, d.filter(col("doc_id") % 3 === 0),
+      "graft_idx_tdf_grown")
+    Indexer.buildBucketedIndex(spark, d, "graft_idx_tdf_fresh")
+    def rows(t: String) = spark.table(t).collect()
+      .map(r => (r.getString(0), r.getInt(1))).toSeq.sorted
+    val grown = rows("graft_idx_tdf_grown_term_df")
+    assert(grown.map(_._1).distinct.size == grown.size,
+      "term_df holds more than one row for some term")
+    assert(grown == rows("graft_idx_tdf_fresh_term_df"))
+  }
+
+  test("VectorIndex.build writes one forward-store file per bucket") {
+    import graft.operators.VectorIndex
+    val prefix = "graft_vec_layout"
+    // five input partitions: without the exchange by id each task would
+    // write its own file into every bucket it touches
+    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
+      .select(col("vec_id").as("id"),
+        expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
+      .repartition(5)
+    VectorIndex.trainAndBuild(spark, emb, prefix, nlist = 8, iters = 1,
+      pqM = 4, pqKs = 8)
+    val files = Indexer.bucketFileCounts(spark, s"${prefix}_forward")
+    assert(files.keySet == (0 until Indexer.IndexBuckets).toSet &&
+      files.values.forall(_ == 1), s"forward store written as $files")
+  }
 }
