@@ -30,6 +30,16 @@ import graft.operators.Commit.dropManagedTable
   * compaction fires after about `maxFilesPerBucket` appends, not at the
   * first. The price: that exchange ships token rows without a map-side
   * combine, as the reference's jobs do.
+  *
+  * Storage: every table write goes through [[IndexWriter]], which writes
+  * zstd pages and parquet v2 data pages. Postings go without dictionary
+  * pages. The bucket's in-file term sort clusters each term's postings by
+  * ascending doc_id, as the reference's `PRIMARY KEY(term, doc_id)` does,
+  * so the v2 writer's delta codings (DELTA_BYTE_ARRAY for the term runs,
+  * DELTA_BINARY_PACKED for doc_ids, tfs and positions) beat a
+  * dictionary. term_df and doc_info keep their dictionaries. An index
+  * written before this encoding reads as it is; an append writes the new
+  * encoding beside the old files, and compaction rewrites them.
   */
 object Indexer {
 
@@ -115,9 +125,12 @@ object Indexer {
     */
   def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit = {
     val p = postings(docs).cache()
-    p.write.mode("overwrite").parquet(s"$indexDir/postings")
-    termDf(p).write.mode("overwrite").parquet(s"$indexDir/term_df")
-    docInfo(docs).write.mode("overwrite").parquet(s"$indexDir/doc_info")
+    IndexWriter.writeFiles(p, s"$indexDir/postings", "overwrite",
+      IndexWriter.Layout(dictionary = false))
+    IndexWriter.writeFiles(termDf(p), s"$indexDir/term_df", "overwrite",
+      IndexWriter.Plain)
+    IndexWriter.writeFiles(docInfo(docs), s"$indexDir/doc_info", "overwrite",
+      IndexWriter.Plain)
     p.unpersist()
   }
 
@@ -127,6 +140,16 @@ object Indexer {
     * agnostic as long as postings and term_df agree).
     */
   val IndexBuckets = 8
+
+  /** The tables' layouts for [[IndexWriter]]: postings and term_df share
+    * bucketBy(IndexBuckets, term) + sortBy(term); postings are written
+    * without dictionaries (delta-coded terms and doc_ids are smaller).
+    */
+  private val PostingsLayout =
+    IndexWriter.bucketed(IndexBuckets, "term", dictionary = false)
+  private val TermDfLayout = IndexWriter.bucketed(IndexBuckets, "term")
+  private val Layouts = Seq("postings" -> PostingsLayout,
+    "term_df" -> TermDfLayout, "doc_info" -> IndexWriter.Plain)
 
   /** Forces the bucketed scan on: one partition, so one file, per bucket. */
   private[operators] val OnePartitionPerBucket =
@@ -146,17 +169,13 @@ object Indexer {
     */
   def buildBucketedIndex(spark: SparkSession, docs: DataFrame,
                          prefix: String): Unit = {
-    Seq("postings", "term_df", "doc_info")
-      .foreach(t => dropManagedTable(spark, s"${prefix}_$t"))
+    Layouts.foreach { case (t, _) => dropManagedTable(spark, s"${prefix}_$t") }
     val p = bucketedPostings(docs).cache()
-    p.write.mode("overwrite").format("parquet")
-      .bucketBy(IndexBuckets, "term").sortBy("term")
-      .saveAsTable(s"${prefix}_postings")
-    termDf(p).write.mode("overwrite").format("parquet")
-      .bucketBy(IndexBuckets, "term").sortBy("term")
-      .saveAsTable(s"${prefix}_term_df")
-    docInfo(docs).write.mode("overwrite").format("parquet")
-      .saveAsTable(s"${prefix}_doc_info")
+    IndexWriter.writeTable(p, s"${prefix}_postings", "overwrite", PostingsLayout)
+    IndexWriter.writeTable(termDf(p), s"${prefix}_term_df", "overwrite",
+      TermDfLayout)
+    IndexWriter.writeTable(docInfo(docs), s"${prefix}_doc_info", "overwrite",
+      IndexWriter.Plain)
     p.unpersist()
   }
 
@@ -185,13 +204,11 @@ object Indexer {
   def appendBucketedIndex(spark: SparkSession, newDocs: DataFrame,
                           prefix: String): Unit = {
     val p = bucketedPostings(newDocs).cache()
-    p.write.mode("append").format("parquet")
-      .bucketBy(IndexBuckets, "term").sortBy("term")
-      .saveAsTable(s"${prefix}_postings")
-    docInfo(newDocs).write.mode("append").format("parquet")
-      .saveAsTable(s"${prefix}_doc_info")
+    IndexWriter.writeTable(p, s"${prefix}_postings", "append", PostingsLayout)
+    IndexWriter.writeTable(docInfo(newDocs), s"${prefix}_doc_info", "append",
+      IndexWriter.Plain)
     val merged = mergeTermDf(spark.table(s"${prefix}_term_df"), p)
-    stageAndSwap(spark, merged, s"${prefix}_term_df", bucketed = true)
+    stageAndSwap(spark, merged, s"${prefix}_term_df", TermDfLayout)
     p.unpersist()
   }
 
@@ -200,13 +217,11 @@ object Indexer {
     * leaves `target` present.
     */
   private[operators] def stageAndSwap(spark: SparkSession, df: DataFrame,
-                                      target: String, bucketed: Boolean,
-                                      bucketCol: String = "term"): Unit = {
+                                      target: String,
+                                      layout: IndexWriter.Layout): Unit = {
     val staging = s"${target}_staged"
     dropManagedTable(spark, staging)
-    val w = df.write.mode("overwrite").format("parquet")
-    (if (bucketed) w.bucketBy(IndexBuckets, bucketCol).sortBy(bucketCol) else w)
-      .saveAsTable(staging)
+    IndexWriter.writeTable(df, staging, "overwrite", layout)
     Commit.swapTable(spark, staging, target)
   }
 
@@ -268,16 +283,16 @@ object Indexer {
         lit(-1).cast("int").as("df")))
       .groupBy("term").agg(sum(col("df")).cast("int").as("df"))
       .filter(col("df") > 0)
-    stageAndSwap(spark, newTermDf, s"${prefix}_term_df", bucketed = true)
+    stageAndSwap(spark, newTermDf, s"${prefix}_term_df", TermDfLayout)
     GraftSession.scoped(spark, OnePartitionPerBucket) {
       val keptPostings = spark.table(s"${prefix}_postings")
         .join(broadcast(ids), Seq("doc_id"), "left_anti")
         .select("term", "doc_id", "tf", "positions") // USING join reorders
-      stageAndSwap(spark, keptPostings, s"${prefix}_postings", bucketed = true)
+      stageAndSwap(spark, keptPostings, s"${prefix}_postings", PostingsLayout)
     }
     val keptInfo = spark.table(s"${prefix}_doc_info")
       .join(broadcast(ids), Seq("doc_id"), "left_anti")
-    stageAndSwap(spark, keptInfo, s"${prefix}_doc_info", bucketed = false)
+    stageAndSwap(spark, keptInfo, s"${prefix}_doc_info", IndexWriter.Plain)
   }
 
   /** Snapshot the persisted index under a tag — the point-in-time copy a
@@ -294,15 +309,12 @@ object Indexer {
     */
   def snapshotIndex(spark: SparkSession, prefix: String, tag: String): Unit =
     GraftSession.scoped(spark, OnePartitionPerBucket) {
-      Seq(("postings", true), ("term_df", true), ("doc_info", false))
-        .foreach { case (t, bucketed) =>
-          val snap = s"${prefix}_${tag}_$t"
-          dropManagedTable(spark, snap)
-          val w = spark.table(s"${prefix}_$t")
-            .write.mode("overwrite").format("parquet")
-          (if (bucketed) w.bucketBy(IndexBuckets, "term").sortBy("term") else w)
-            .saveAsTable(snap)
-        }
+      Layouts.foreach { case (t, layout) =>
+        val snap = s"${prefix}_${tag}_$t"
+        dropManagedTable(spark, snap)
+        IndexWriter.writeTable(spark.table(s"${prefix}_$t"), snap, "overwrite",
+          layout)
+      }
     }
 
   /** Restore the live index from a snapshot taken by snapshotIndex. The
@@ -318,7 +330,7 @@ object Indexer {
 
   private def rollbackIndexImpl(spark: SparkSession, prefix: String,
                                 tag: String): Unit = {
-    val parts = Seq("postings", "term_df", "doc_info")
+    val parts = Layouts.map(_._1)
     val missing = parts.map(t => s"${prefix}_${tag}_$t")
       .filterNot(spark.catalog.tableExists)
     if (missing.nonEmpty)
@@ -358,8 +370,7 @@ object Indexer {
 
   private def mergeBucketedIndexesImpl(spark: SparkSession, prefixA: String,
                                        prefixB: String, outPrefix: String): Unit = {
-    Seq("postings", "term_df", "doc_info")
-      .foreach(t => dropManagedTable(spark, s"${outPrefix}_$t"))
+    Layouts.foreach { case (t, _) => dropManagedTable(spark, s"${outPrefix}_$t") }
     // Union-of-co-bucketed-children is the ONE shape where Spark 4.1's
     // union partitioning propagation (spark.sql.unionOutputPartitioning)
     // miscompiles a downstream bucketed-table write: the union CLAIMS the
@@ -372,22 +383,17 @@ object Indexer {
     // non-co-partitioned children.
     GraftSession.scoped(spark, "spark.sql.unionOutputPartitioning" -> "false") {
       GraftSession.scoped(spark, OnePartitionPerBucket) {
-        spark.table(s"${prefixA}_postings")
-          .unionByName(spark.table(s"${prefixB}_postings"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(IndexBuckets, "term").sortBy("term")
-          .saveAsTable(s"${outPrefix}_postings")
+        IndexWriter.writeTable(spark.table(s"${prefixA}_postings")
+            .unionByName(spark.table(s"${prefixB}_postings")),
+          s"${outPrefix}_postings", "overwrite", PostingsLayout)
       }
-      spark.table(s"${prefixA}_term_df")
-        .unionByName(spark.table(s"${prefixB}_term_df"))
-        .groupBy("term").agg(sum(col("df")).cast("int").as("df"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(IndexBuckets, "term").sortBy("term")
-        .saveAsTable(s"${outPrefix}_term_df")
-      spark.table(s"${prefixA}_doc_info")
-        .unionByName(spark.table(s"${prefixB}_doc_info"))
-        .write.mode("overwrite").format("parquet")
-        .saveAsTable(s"${outPrefix}_doc_info")
+      IndexWriter.writeTable(spark.table(s"${prefixA}_term_df")
+          .unionByName(spark.table(s"${prefixB}_term_df"))
+          .groupBy("term").agg(sum(col("df")).cast("int").as("df")),
+        s"${outPrefix}_term_df", "overwrite", TermDfLayout)
+      IndexWriter.writeTable(spark.table(s"${prefixA}_doc_info")
+          .unionByName(spark.table(s"${prefixB}_doc_info")),
+        s"${outPrefix}_doc_info", "overwrite", IndexWriter.Plain)
     }
   }
 
@@ -483,7 +489,7 @@ object Indexer {
     val didPostings = counts.values.exists(_ > maxFilesPerBucket)
     if (didPostings)
       GraftSession.scoped(spark, OnePartitionPerBucket) {
-        stageAndSwap(spark, spark.table(name), name, bucketed = true)
+        stageAndSwap(spark, spark.table(name), name, PostingsLayout)
       }
     // doc_info grows one file per append batch too (plain unbucketed
     // appends) — same IndexBuckets-scaled threshold, coalesced rewrite
@@ -492,7 +498,7 @@ object Indexer {
     val didInfo = tableFileCount(spark, info) > maxFilesPerBucket * IndexBuckets
     if (didInfo)
       stageAndSwap(spark,
-        spark.table(info).coalesce(IndexBuckets), info, bucketed = false)
+        spark.table(info).coalesce(IndexBuckets), info, IndexWriter.Plain)
     didPostings || didInfo
   }
 }

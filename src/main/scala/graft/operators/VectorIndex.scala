@@ -26,6 +26,11 @@ import org.apache.spark.sql.functions._
   *    ForwardBuckets partitions, whose ids are the bucket ids); `append`
   *    writes its batch without that exchange.
   *
+  * Every table is written through [[IndexWriter]]: zstd pages, parquet v2
+  * data pages, dictionaries on. Where a dictionary does not pay, the v2
+  * writer falls back to delta codings for ids and codes and to plain
+  * values for the doubles of `v` and `cv`.
+  *
   * Serving reads the same centroid/codebook values the build wrote (both
   * bounded: NList and M*Ks rows), so results are bit-identical to the
   * in-memory ann_ivf_pq plan and share its DuckDB oracle.
@@ -33,6 +38,10 @@ import org.apache.spark.sql.functions._
 object VectorIndex {
 
   private val ForwardBuckets = Indexer.IndexBuckets
+
+  /** The forward store's layout for [[IndexWriter]]: bucketed by id. */
+  private val ForwardLayout = IndexWriter.bucketed(ForwardBuckets, "id")
+  private val ListsLayout = IndexWriter.partitioned("cent_id")
 
   /** Write the index. `cents` (id, v) and `codes` must come from the same
     * deterministic training the serving oracle mirrors.
@@ -44,15 +53,15 @@ object VectorIndex {
             cents: DataFrame, codes: Seq[Pq.Code],
             pqM: Int, pqSubDim: Int, writeForward: Boolean = true): Unit = {
     val base = graft.ScratchDirs.fresh("graft_vecidx", prefix).toString
-    cents.select(col("id").as("cent_id"), col("v").as("cv"))
-      .write.mode("overwrite").parquet(s"$base/centroids")
-    spark.createDataFrame(codes.map(c => (c.m, c.k, c.carr)))
-      .toDF("m", "k", "carr")
-      .write.mode("overwrite").parquet(s"$base/codes")
-    Similarity.ivfAssign(emb, cents)
-      .withColumn("codes", Pq.encodeCol(col("v"), codes, pqM, pqSubDim))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(s"$base/vectors")
+    IndexWriter.writeFiles(
+      cents.select(col("id").as("cent_id"), col("v").as("cv")),
+      s"$base/centroids", "overwrite", IndexWriter.Plain)
+    IndexWriter.writeFiles(
+      spark.createDataFrame(codes.map(c => (c.m, c.k, c.carr))).toDF("m", "k", "carr"),
+      s"$base/codes", "overwrite", IndexWriter.Plain)
+    IndexWriter.writeFiles(Similarity.ivfAssign(emb, cents)
+        .withColumn("codes", Pq.encodeCol(col("v"), codes, pqM, pqSubDim)),
+      s"$base/vectors", "overwrite", ListsLayout)
     Seq("centroids", "codes", "vectors").foreach { t =>
       spark.sql(s"DROP TABLE IF EXISTS ${prefix}_$t")
       spark.catalog.createTable(s"${prefix}_$t", s"$base/$t", "parquet")
@@ -60,11 +69,9 @@ object VectorIndex {
     spark.catalog.recoverPartitions(s"${prefix}_vectors")
     if (writeForward) {
       Commit.dropManagedTable(spark, s"${prefix}_forward")
-      emb.select(col("id"), col("v"))
-        .repartition(ForwardBuckets, col("id"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(ForwardBuckets, "id").sortBy("id")
-        .saveAsTable(s"${prefix}_forward")
+      IndexWriter.writeTable(emb.select(col("id"), col("v"))
+          .repartition(ForwardBuckets, col("id")),
+        s"${prefix}_forward", "overwrite", ForwardLayout)
     }
   }
 
@@ -112,18 +119,16 @@ object VectorIndex {
     val loc = spark.sessionState.catalog
       .getTableMetadata(org.apache.spark.sql.catalyst.TableIdentifier(
         s"${prefix}_vectors")).location
-    Similarity.ivfAssign(batch, cents)
-      .withColumn("codes", Pq.encodeCol(col("v"), codes, pqM, pqSubDim))
-      .write.mode("append").partitionBy("cent_id").parquet(loc.toString)
+    IndexWriter.writeFiles(Similarity.ivfAssign(batch, cents)
+        .withColumn("codes", Pq.encodeCol(col("v"), codes, pqM, pqSubDim)),
+      loc.toString, "append", ListsLayout)
     spark.catalog.recoverPartitions(s"${prefix}_vectors")
     spark.catalog.refreshTable(s"${prefix}_vectors")
     // forward store: one extra file per (batch partition, touched bucket);
     // the writer re-declares the matching bucket spec. No exchange by id as
     // in build: a streamed batch is one partition, so it would buy nothing
-    batch.select(col("id"), col("v"))
-      .write.mode("append").format("parquet")
-      .bucketBy(ForwardBuckets, "id").sortBy("id")
-      .saveAsTable(s"${prefix}_forward")
+    IndexWriter.writeTable(batch.select(col("id"), col("v")),
+      s"${prefix}_forward", "append", ForwardLayout)
   }
 
   /** DELETE vectors from the persisted index — the right-to-be-forgotten
@@ -153,11 +158,10 @@ object VectorIndex {
     val affected = vecs.join(broadcast(del), "id")
       .select(col("cent_id")).distinct().collect().map(_.get(0))
     if (affected.isEmpty) return 0
-    vecs.filter(col("cent_id").isin(affected: _*))
-      .join(broadcast(del), Seq("id"), "left_anti")
-      .repartition(col("cent_id"))
-      .write.mode("overwrite").partitionBy("cent_id")
-      .parquet(lists.staging.toString)
+    IndexWriter.writeFiles(vecs.filter(col("cent_id").isin(affected: _*))
+        .join(broadcast(del), Seq("id"), "left_anti")
+        .repartition(col("cent_id")),
+      lists.staging.toString, "overwrite", ListsLayout)
     swapLists(spark, prefix, lists, affected.toSeq)
     // forward store: bucketed by id, the kept rows can't be rewritten
     // per-list the way _vectors can — a staged-table swap instead
@@ -165,7 +169,7 @@ object VectorIndex {
     Indexer.stageAndSwap(spark, spark.table(fwd)
       .join(broadcast(del), Seq("id"), "left_anti")
       .select(col("id"), col("v")), // USING join reorders
-      fwd, bucketed = true, bucketCol = "id")
+      fwd, ForwardLayout)
     affected.length
   }
 
@@ -266,11 +270,10 @@ object VectorIndex {
       // partition values are numeric by construction (cent_id = centroid
       // ordinal); a raw IN-list literal matches whatever width the
       // partition-column inference chose, so pruning still applies
-      spark.table(s"${prefix}_vectors")
-        .filter(expr(s"cent_id IN (${affected.mkString(", ")})"))
-        .repartition(col("cent_id"))
-        .write.mode("overwrite").partitionBy("cent_id")
-        .parquet(lists.staging.toString)
+      IndexWriter.writeFiles(spark.table(s"${prefix}_vectors")
+          .filter(expr(s"cent_id IN (${affected.mkString(", ")})"))
+          .repartition(col("cent_id")),
+        lists.staging.toString, "overwrite", ListsLayout)
       swapLists(spark, prefix, lists, affected)
     }
     val fwd = s"${prefix}_forward"
@@ -278,8 +281,7 @@ object VectorIndex {
     val didForward = fwdCounts.values.exists(_ > maxFilesPerUnit)
     if (didForward)
       graft.GraftSession.scoped(spark, Indexer.OnePartitionPerBucket) {
-        Indexer.stageAndSwap(spark, spark.table(fwd), fwd,
-          bucketed = true, bucketCol = "id")
+        Indexer.stageAndSwap(spark, spark.table(fwd), fwd, ForwardLayout)
       }
     didVectors || didForward
   }
@@ -327,9 +329,8 @@ object VectorIndex {
     }
     val fwdTo = s"${to}_forward"
     Commit.dropManagedTable(spark, fwdTo)
-    spark.table(s"${from}_forward")
-      .write.mode("overwrite").format("parquet")
-      .bucketBy(ForwardBuckets, "id").sortBy("id").saveAsTable(fwdTo)
+    IndexWriter.writeTable(spark.table(s"${from}_forward"), fwdTo, "overwrite",
+      ForwardLayout)
   }
 
   /** Point-in-time copy of the vector index (the risky-maintenance fence:

@@ -13,7 +13,9 @@ import org.scalatest.funsuite.AnyFunSuite
   * engine every later query runs on. Every rename that moves data into
   * place goes through `graft.operators.Commit`, the one crash protocol.
   * Every build-once fixture goes through [[Memo]]: a memo map behind a lock
-  * on its whole object serializes unrelated multi-second builds.
+  * on its whole object serializes unrelated multi-second builds. Every
+  * index table goes to disk through `graft.operators.IndexWriter`, which
+  * owns its encoding.
   * No SparkSession: a source scan.
   */
 class SessionSiteSpec extends AnyFunSuite {
@@ -55,6 +57,17 @@ class SessionSiteSpec extends AnyFunSuite {
     val sites = sitesMatching("src/main/scala")(rename.findFirstIn(_).isDefined)
     assert(sites == Seq(Paths.get("src/main/scala/graft/operators/Commit.scala")),
       s"renames outside Commit: ${sites.mkString(", ")}")
+  }
+
+  test("Indexer and VectorIndex write index tables only through IndexWriter") {
+    // the writer owns the format and the encoding; a table written beside
+    // it would come out in the session's default encoding
+    val write = """saveAsTable\(|\.bucketBy\(|\.format\("parquet"\)|\.write\s*\.""".r
+    val sites = Seq("Indexer.scala", "VectorIndex.scala")
+      .map(f => Paths.get("src/main/scala/graft/operators", f))
+      .filter(p => write.findFirstIn(Files.readString(p)).isDefined)
+    assert(sites.isEmpty,
+      s"index tables written outside IndexWriter: ${sites.mkString(", ")}")
   }
 
   test("only Memo, CacheRegistry and Search synchronize under src/main") {
