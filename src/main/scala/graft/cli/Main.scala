@@ -52,11 +52,9 @@ object Main {
       |  hsearch <textPrefix> <vecPrefix> <vec_id> "<query>" [k=10]
       |                                           hybrid BM25+vector RRF, both arms served
       |                                           from the persisted indexes
-      |  hbatch <reqs.parquet> <tPfx> <vPfx> [k] [--force-batch]
-      |                                           batch hybrid serving (query_id = probe vector id);
-      |                                           auto-routes to hbulk above the literal-pruning
-      |                                           sweet spot unless --force-batch pins the
-      |                                           literal-pruned plan (driver-scale collect!)
+      |  hbatch <reqs.parquet> <tPfx> <vPfx> [k]  batch hybrid serving (query_id = probe vector id);
+      |                                           routes to hbulk above 4096 requests, the
+      |                                           literal-pruning sweet spot
       |  hbulk  <reqs.parquet> <tPfx> <vPfx> [k]  BULK hybrid serving over an unbounded request
       |                                           table — joins only, nothing request-derived is
       |                                           collected, broadcast, or inlined as a literal
@@ -118,15 +116,14 @@ object Main {
       |                                           --baseline explicitly opts into the fixed form
       |""".stripMargin
 
-  /** Above this many requests, `hbatch` (and the `hserve` stream's
-    * micro-batches) route to the bulk join plan — see
-    * [[graft.operators.Search.BulkRequestThreshold]], the shared constant.
-    */
-  val BulkRequestThreshold: Long = Search.BulkRequestThreshold
-
   /** docs parquet in the testdata shape: (doc_id, text[, ...]). */
   private def readDocs(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(path).select(col("doc_id"), col("text"))
+
+  /** hbatch/hbulk request parquet: (query_id, query_text[, ...]). */
+  private def readRequests(spark: SparkSession, path: String): DataFrame =
+    spark.read.parquet(path).select(col("query_id").cast("long").as("query_id"),
+      col("query_text"))
 
   /** `--name=value` flag lookup (boolean flags stay bare `--name`). */
   private def flagValue(flags: Seq[String], name: String): Option[String] =
@@ -140,17 +137,19 @@ object Main {
   // or `--sink-max-dirs=0` reports what was wrong and exits 2 like any
   // other bad invocation, before any Spark work runs.
 
+  /** An optional integer argument named `what`, bounded below. */
+  private def optInt(v: Option[String], what: String,
+                     min: Int): Either[String, Option[Int]] =
+    v.fold[Either[String, Option[Int]]](Right(None))(v => v.toIntOption match {
+      case Some(n) if n >= min => Right(Some(n))
+      case Some(n) => Left(s"$what must be >= $min (got $n)")
+      case None => Left(s"$what expects an integer (got '$v')")
+    })
+
   /** Optional integer `--name=` flag, bounded below. */
   private def intFlag(flags: Seq[String], name: String,
                       min: Int = 1): Either[String, Option[Int]] =
-    flagValue(flags, name) match {
-      case None => Right(None)
-      case Some(v) => v.toIntOption match {
-        case Some(n) if n >= min => Right(Some(n))
-        case Some(n) => Left(s"--$name must be >= $min (got $n)")
-        case None => Left(s"--$name expects an integer (got '$v')")
-      }
-    }
+    optInt(flagValue(flags, name), s"--$name", min)
 
   /** Optional double `--name=` flag. */
   private def doubleFlag(flags: Seq[String],
@@ -169,26 +168,12 @@ object Main {
     */
   private def posInt(rest: Seq[String], what: String,
                      default: Int, min: Int = 1): Either[String, Int] =
-    rest.headOption match {
-      case None => Right(default)
-      case Some(v) => v.toIntOption match {
-        case Some(n) if n >= min => Right(n)
-        case Some(n) => Left(s"$what must be >= $min (got $n)")
-        case None => Left(s"$what expects an integer (got '$v')")
-      }
-    }
+    optInt(rest.headOption, what, min).map(_.getOrElse(default))
 
   /** First positional as an OPTIONAL integer (absent stays None). */
   private def posIntOpt(rest: Seq[String], what: String,
                         min: Int = 1): Either[String, Option[Int]] =
-    rest.headOption match {
-      case None => Right(None)
-      case Some(v) => v.toIntOption match {
-        case Some(n) if n >= min => Right(Some(n))
-        case Some(n) => Left(s"$what must be >= $min (got $n)")
-        case None => Left(s"$what expects an integer (got '$v')")
-      }
-    }
+    optInt(rest.headOption, what, min)
 
   /** Required long positional (ids on the serving commands — every
     * stored id is non-negative, so a negative one is a usage error, not
@@ -216,7 +201,7 @@ object Main {
   /** The flags that are pure switches — everything else allowed by a
     * command takes `--name=<value>`.
     */
-  private val BareFlags = Set("baseline", "force-batch")
+  private val BareFlags = Set("baseline")
 
   /** Reject flags the command does not define, value-taking flags
     * missing their `=value` (or given an empty one), and switches given
@@ -232,8 +217,8 @@ object Main {
       case (_, f) =>
         val name = f.stripPrefix("--").takeWhile(_ != '=')
         if (!allowed.contains(name))
-          Left(s"unknown flag --$name (expected: " +
-            allowed.map("--" + _).mkString(", ") + ")")
+          Left(s"unknown flag --$name (expected: " + (if (allowed.isEmpty)
+            "none" else allowed.map("--" + _).mkString(", ")) + ")")
         else if (BareFlags.contains(name)) {
           if (f != s"--$name") Left(s"--$name takes no value")
           else Right(())
@@ -344,66 +329,37 @@ object Main {
         }
       // hybrid serving: BM25 arm from the text index, vector arm from the
       // IVF-PQ index (probe = a stored vector by id), RRF fusion — the
-      // whole command reads persisted index tables only, never the corpus
+      // whole command reads persisted index tables only, never the corpus;
+      // a point call is a one-request batch
       case Seq("hsearch", textPrefix, vecPrefix, vecId, query, rest @ _*) =>
         for {
           k <- posInt(rest, "k", 10)
           id <- argLong(vecId, "vec_id")
-        } yield {
-          val probe = spark.table(s"${vecPrefix}_forward")
-            .filter(col("id") === id).select(col("id"), col("v"))
-          Some(Search.hybridSearchPrebuilt(spark, query, textPrefix,
-            vecPrefix, probe, k))
-        }
+        } yield Some(Search.hybridBatchSearchPrebuilt(spark, Seq(id -> query),
+          textPrefix, vecPrefix, k).drop("query_id"))
       // batch hybrid serving: a request TABLE (query_id = stored probe
-      // vector id, query_text) read from parquet; the union of all query
-      // terms becomes one bucket-pruned pass, the probe ids one forward
-      // fetch — the collect is bounded by the request batch, never data
+      // vector id, query_text) read from parquet; a batch within the
+      // threshold serves through one bucket-pruned pass for the union of
+      // its query terms and one forward fetch for its probe ids, a larger
+      // one through the bulk join plan (Search.literalRequests routes)
       case Seq("hbatch", requestsPath, textPrefix, vecPrefix, rest @ _*) =>
         val (hflags, hpos) = rest.partition(_.startsWith("--"))
-        checkFlags(hflags, "force-batch").flatMap(_ =>
-        posInt(hpos, "k", 10)).map { k =>
-        val reqDf = spark.read.parquet(requestsPath)
-          .select(col("query_id").cast("long").as("query_id"),
-            col("query_text"))
-        // the literal-pruned batch plan is the right shape for a serving
-        // micro-batch, but its IN-lists (and this collect) cap it at
-        // driver scale — above the sweet spot the request table routes to
-        // the bulk join plan, the same twin resolution `query` applies.
-        // --force-batch opts out (results are pinned identical by CliSpec;
-        // the flag trades the bulk plan's safety for IN-list pruning at
-        // the caller's own driver-memory risk). The routing probe is a
-        // LIMIT-bounded count, not a full scan: it reads just enough of
-        // the request parquet to know which side of the threshold we are
-        // on, so the small-batch path never pays a second full pass.
-        val over = !hflags.contains("--force-batch") &&
-          reqDf.limit(BulkRequestThreshold.toInt + 1).count() > BulkRequestThreshold
-        if (over) {
-          System.err.println("[graft] request table exceeds the " +
-            s"literal-pruning sweet spot ($BulkRequestThreshold); serving " +
-            "via the bulk join plan (hbulk; pass --force-batch to keep " +
-            "IN-list bucket pruning anyway)")
-          Some(Search.hybridBulkSearchPrebuilt(spark, reqDf,
-            textPrefix, vecPrefix, k))
-        } else {
-          val reqs = reqDf.collect()
-            .map(r => (r.getLong(0), r.getString(1))).toSeq
-          Some(Search.hybridBatchSearchPrebuilt(spark, reqs,
-            textPrefix, vecPrefix, k))
-        }
+        checkFlags(hflags).flatMap(_ => posInt(hpos, "k", 10)).map { k =>
+          val reqDf = readRequests(spark, requestsPath)
+          Some(Search.literalRequests(reqDf).fold(
+            Search.hybridBulkSearchPrebuilt(spark, reqDf, textPrefix,
+              vecPrefix, k))(
+            Search.hybridBatchSearchPrebuilt(spark, _, textPrefix, vecPrefix,
+              k)))
         }
       // bulk hybrid serving over an UNBOUNDED request table: terms prune
       // by join against the bucketed index, probe vectors by join against
       // the forward store — no collect, no broadcast, no literals, so the
       // command survives a 10M-request offline sweep
       case Seq("hbulk", requestsPath, textPrefix, vecPrefix, rest @ _*) =>
-        posInt(rest, "k", 10).map { k =>
-          val reqDf = spark.read.parquet(requestsPath)
-            .select(col("query_id").cast("long").as("query_id"),
-              col("query_text"))
-          Some(Search.hybridBulkSearchPrebuilt(spark, reqDf,
-            textPrefix, vecPrefix, k))
-        }
+        posInt(rest, "k", 10).map(k =>
+          Some(Search.hybridBulkSearchPrebuilt(spark,
+            readRequests(spark, requestsPath), textPrefix, vecPrefix, k)))
       case Seq("vcompact", prefix, rest @ _*) =>
         posInt(rest, "maxFiles", 8, min = 0).map { maxFiles =>
           val did = graft.operators.VectorIndex.compact(spark, prefix, maxFiles)

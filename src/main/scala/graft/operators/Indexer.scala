@@ -119,21 +119,6 @@ object Indexer {
         newPostings.select(col("term"), lit(1).cast("int").as("df")))
       .groupBy("term").agg(sum(col("df")).cast("int").as("df"))
 
-  /** Build and persist all three index tables as parquet (replaces Cassandra).
-    * Partitioned by the shuffle that produced them; for the co-located
-    * query path use buildBucketedIndex instead.
-    */
-  def buildIndex(spark: SparkSession, docs: DataFrame, indexDir: String): Unit = {
-    val p = postings(docs).cache()
-    IndexWriter.writeFiles(p, s"$indexDir/postings", "overwrite",
-      IndexWriter.Layout(dictionary = false))
-    IndexWriter.writeFiles(termDf(p), s"$indexDir/term_df", "overwrite",
-      IndexWriter.Plain)
-    IndexWriter.writeFiles(docInfo(docs), s"$indexDir/doc_info", "overwrite",
-      IndexWriter.Plain)
-    p.unpersist()
-  }
-
   /** Bucket count for the persisted index tables. Sized so one bucket of
     * postings fits an executor comfortably at the target scale (at 100 TB
     * this would be thousands; the co-location property is bucket-count

@@ -30,14 +30,8 @@ import org.apache.spark.sql.functions._
   */
 object Search {
 
-  /** Above this many requests, serving routes to the bulk join plan
-    * ([[hybridBulkSearchPrebuilt]]): the batch form's per-term/per-id
-    * literals are what PRUNE the index scans for a small batch, but the
-    * expression tree and the driver's request collect grow linearly with
-    * the batch — past a few thousand requests one shared pass over the
-    * touched index regions is both safer and faster. Shared by the CLI
-    * `hbatch` auto-route and the serving stream
-    * ([[graft.streaming.DocStreams.hybridServe]]).
+  /** Above this many requests, hybrid serving routes to the bulk join
+    * plan ([[literalRequests]]).
     */
   val BulkRequestThreshold = 4096L
 
@@ -135,9 +129,9 @@ object Search {
     }
   }
 
-  /** The BM25 ranking chain behind `search`, `searchPrebuilt`, both fuzzy
-    * searches and the hybrid text arm; `rm3Search` and `snippets` take
-    * their top k from `search`.
+  /** The BM25 ranking chain behind `search`, `searchPrebuilt` and both
+    * fuzzy searches; `rm3Search` and `snippets` take their top k from
+    * `search`.
     *
     * `termDf` arrives pruned to the query's terms (≤ one row per term) and
     * broadcasts into the postings probe, so postings are filtered at the
@@ -240,117 +234,47 @@ object Search {
                      k: Int = 10): DataFrame =
     rankPrebuilt(spark, queryTokens(query), prefix, k)
 
-  /** Hybrid retrieval served ENTIRELY from persisted stores: the lexical
-    * arm from the term-bucketed BM25 index (searchPrebuilt — IN-list
-    * bucket + row-group pruning), the semantic arm from the persisted
-    * IVF-PQ index (VectorIndex.searchPrebuilt — DPP-pruned `_vectors`
-    * scan), fused with reciprocal rank fusion (Cormack et al. SIGIR'09:
-    * score = Σ_arms 1/(60 + rank)). Fusion reads only the two ≤k-row arm
-    * outputs, and display titles come from the index's own doc_info table
-    * — the whole query touches index tables only, never the corpus
-    * (the reference's serving pattern, app/query.py:97-122). Ranks are
-    * deterministic in both arms (Money-grid score / exact-cosine re-rank,
-    * doc_id tiebreak).
-    * @param probe (id, v) — the query vector, ≤1 row by contract.
-    */
-  def hybridSearchPrebuilt(spark: SparkSession, query: String,
-                           textPrefix: String, vecPrefix: String,
-                           probe: DataFrame, k: Int = 10, nprobe: Int = 8,
-                           shortlist: Int = 40): DataFrame = {
-    // bounded: the window orders the k surviving rows of the arm's top cut
-    val textRank = searchPrebuilt(spark, query, textPrefix, k)
-      .select(col("doc_id").cast("long").as("doc_id"),
-        row_number().over(Window.orderBy(col("score").desc, col("doc_id")))
-          .cast("long").as("text_rank"))
-    val vecRank = VectorIndex
-      .searchPrebuilt(spark, vecPrefix, probe, k, nprobe, shortlist)
-      .select(col("cand_id").as("doc_id"), col("rank").as("vec_rank"))
-    val fused = textRank.join(vecRank, Seq("doc_id"), "full_outer")
-      .withColumn("rrf", rrf)
-      .orderBy(col("rrf").desc, col("doc_id")).limit(k)
-    spark.table(s"${textPrefix}_doc_info")
-      .select(col("doc_id").cast("long").as("doc_id"), col("title"))
-      .join(broadcast(fused), "doc_id")
-      .select(col("doc_id"), col("title"), col("text_rank"), col("vec_rank"),
-        col("rrf").cast("double").as("rrf"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-  }
-
-  /** Batch hybrid retrieval — [[hybridSearchPrebuilt]] generalized from
-    * one (query, probe) pair to a TABLE of pairs, the actual serving
-    * workload shape (a request batch, not a point call). Both arms stay
-    * index-only and probe-derived:
+  /** Batch hybrid retrieval served ENTIRELY from persisted stores, for a
+    * request batch small enough to inline as literals: the lexical arm
+    * from the term-bucketed BM25 index, the semantic arm from the
+    * persisted IVF-PQ index, fused with reciprocal rank fusion (Cormack et
+    * al. SIGIR'09: score = Σ_arms 1/(60 + rank)). Display titles come from
+    * the index's own doc_info table, so the whole call touches index
+    * tables only, never the corpus (the reference's serving pattern,
+    * app/query.py:97-122). A point call is a one-pair batch.
     *  - text arm: the union of all query terms becomes ONE literal
     *    IN-list, so every per-query probe shares one bucket-pruned scan of
-    *    postings/term_df (the batchSearchPrebuilt pattern) — cost is
-    *    |distinct terms| buckets, independent of the corpus;
+    *    postings/term_df — cost is |distinct terms| buckets, independent
+    *    of the corpus;
     *  - vector arm: probe vectors point-fetched from the bucket-pruned
     *    `_forward` store by the literal id list, then one DPP-pruned pass
-    *    over the probed `_vectors` lists — VectorIndex.searchPrebuilt is
-    *    already multi-probe, so the batch costs |probed lists| partitions,
-    *    not |queries| passes;
-    *  - fusion: per-pair RRF over the two ≤k-row-per-query arm outputs, a
-    *    |queries|·k-row window — O(1) per query.
+    *    over the probed `_vectors` lists (VectorIndex.searchPrebuilt is
+    *    multi-probe, so the batch costs |probed lists| partitions, not
+    *    |queries| passes).
     * The pairs are a Scala Seq, not a DataFrame, for the same reason
     * fuzzySearchPrebuilt materializes its expansion: the literal lists ARE
     * what prunes buckets at the scan (query rewrite before index access).
+    * [[literalRequests]] decides when a request table is small enough.
     *
     * @param queries (probe_id, query_text): probe_id keys both the stored
-    *                probe vector and the output rows
+    *                probe vector and the output rows, and must be unique
     */
   def hybridBatchSearchPrebuilt(spark: SparkSession,
                                 queries: Seq[(Long, String)],
                                 textPrefix: String, vecPrefix: String,
                                 k: Int = 10, nprobe: Int = 8,
-                                shortlist: Int = 40): DataFrame = {
-    import spark.implicits._
-    val ids = queries.map(_._1)
-    val allTerms = queries.flatMap(q => queryTokens(q._2)).distinct
-    val postings = spark.table(s"${textPrefix}_postings")
-      .filter(col("term").isin(allTerms: _*))
-    val termDf = spark.table(s"${textPrefix}_term_df")
-      .filter(col("term").isin(allTerms: _*))
-    val docInfo = spark.table(s"${textPrefix}_doc_info")
-    // per-query re-rank of the k survivors on the Money-grid score (the
-    // single-probe hybrid's convention — the window orders ≤k rows/query)
-    val tw = Window.partitionBy(col("query_id"))
-      .orderBy(col("score").desc, col("doc_id"))
-    val textRank = batchTopK(queries.toDF("query_id", "query_text"),
-        postings, termDf, docInfo, k, broadcastRequests = true)
-      .select(col("query_id"), col("doc_id").cast("long").as("doc_id"),
-        col("score"))
-      .withColumn("text_rank", row_number().over(tw).cast("long"))
-      .drop("score")
-    val probes = spark.table(s"${vecPrefix}_forward")
-      .filter(col("id").isin(ids: _*)).select(col("id"), col("v"))
-    val vecRank = VectorIndex
-      .searchPrebuilt(spark, vecPrefix, probes, k, nprobe, shortlist)
-      .select(col("probe_id").as("query_id"), col("cand_id").as("doc_id"),
-        col("rank").as("vec_rank"))
-    val w = Window.partitionBy(col("query_id"))
-      .orderBy(col("rrf").desc, col("doc_id"))
-    val fused = textRank.join(vecRank, Seq("query_id", "doc_id"), "full_outer")
-      .withColumn("rrf", rrf)
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k).drop("rn")
-    spark.table(s"${textPrefix}_doc_info")
-      .select(col("doc_id").cast("long").as("doc_id"), col("title"))
-      .join(broadcast(fused), "doc_id")
-      .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
-        col("vec_rank"), col("rrf").cast("double").as("rrf"))
-      .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
-  }
+                                shortlist: Int = 40): DataFrame =
+    hybridPlan(spark, Left(queries), textPrefix, vecPrefix, k, nprobe,
+      shortlist)
 
   /** BULK hybrid serving over an UNBOUNDED request TABLE — the scale-out
-    * twin of [[hybridBatchSearchPrebuilt]]. The batch form's contract
-    * silently caps batch size: its driver-side `Seq` of (id, query) pairs
-    * becomes literal IN-lists whose pruning is exactly right for a serving
-    * micro-batch but whose expression tree (and the driver's memory) dies
-    * at offline-bulk scale — 10M stored queries for an eval sweep, an
-    * offline rerank, a RAG corpus annotation (the reference's own
-    * limitation: its per-term driver loop, app/query.py:97-122). Here
-    * NOTHING request-derived is collected, broadcast, or inlined as a
-    * literal:
+    * twin of [[hybridBatchSearchPrebuilt]], whose literal IN-lists (and
+    * the driver's collect of the requests) are exactly right for a
+    * serving micro-batch but die at offline-bulk scale: 10M stored
+    * queries for an eval sweep, an offline rerank, a RAG corpus
+    * annotation (the reference's own limitation: its per-term driver
+    * loop, app/query.py:97-122). Here NOTHING request-derived is
+    * collected, broadcast, or inlined as a literal:
     *  - text arm: requests tokenize IN-PLAN and probe postings/term_df by
     *    JOIN on term ([[bulkSearch]]) — against the term-bucketed index
     *    tables the join lands exchange-free on the index side, and the
@@ -363,16 +287,12 @@ object Search {
     *    broadcast;
     *  - the text arm's per-query top-k keeps k rows per query per
     *    partition in partial heaps before its rank window
-    *    ([[graft.plans.TopK.perGroup]]), so no task sorts more than that
-    *    however many requests it holds; fusion is a partitionBy(query_id)
-    *    window, and the display-title attach is a plain join of doc_info
-    *    against the |requests|·k winners.
+    *    ([[graft.plans.TopK.perGroup]]), and the display-title attach is
+    *    a plain join of doc_info against the |requests|·k winners.
     * Cost ∝ |requests| + touched index data; every shuffle key
     * (term, cent_id, doc_id, query_id) partitions across the cluster, so
     * no single task, no broadcast, and no driver structure scales with the
-    * request count. Above a literal-pruning sweet spot (a few thousand
-    * requests) this form replaces the batch one — below it, the literals
-    * ARE the pruning and the batch form wins.
+    * request count.
     *
     * @param requests (query_id: long, query_text: string); query_id keys
     *                 the stored probe vector and the output rows, and must
@@ -384,25 +304,88 @@ object Search {
   def hybridBulkSearchPrebuilt(spark: SparkSession, requests: DataFrame,
                                textPrefix: String, vecPrefix: String,
                                k: Int = 10, nprobe: Int = 8,
-                               shortlist: Int = 40): DataFrame = {
+                               shortlist: Int = 40): DataFrame =
+    hybridPlan(spark, Right(requests), textPrefix, vecPrefix, k, nprobe,
+      shortlist)
+
+  /** The request route of hybrid serving: the rows of `requests`
+    * (query_id, query_text) when there are at most `bulkThreshold` of
+    * them, for [[hybridBatchSearchPrebuilt]], else None, for
+    * [[hybridBulkSearchPrebuilt]]. The batch form's per-term/per-id
+    * literals are what PRUNE the index scans for a small batch, but the
+    * expression tree and this collect grow linearly with the batch; past
+    * the threshold one shared pass over the touched index regions is both
+    * safer and faster. One LIMIT-bounded collect reads just enough of the
+    * table to decide, and a small batch is read only once. The CLI
+    * `hbatch` and the serving stream
+    * ([[graft.streaming.DocStreams.hybridServe]]) both route here.
+    */
+  def literalRequests(requests: DataFrame,
+                      bulkThreshold: Long = BulkRequestThreshold)
+      : Option[Seq[(Long, String)]] = {
+    // a negative threshold would make the probe limit(0) and silently
+    // DROP every request; clamp the probe at Int range for huge values
+    // (AUDIT_r13 #3)
+    require(bulkThreshold >= 0, s"bulkThreshold must be >= 0 ($bulkThreshold)")
+    val rows = requests.select(col("query_id"), col("query_text"))
+      .limit(math.min(bulkThreshold, Int.MaxValue - 1L).toInt + 1).collect()
+    if (rows.length <= bulkThreshold)
+      Some(rows.map(r => (r.getLong(0), r.getString(1))).toSeq)
+    else {
+      System.err.println("[graft] request batch exceeds the literal-pruning " +
+        s"sweet spot ($bulkThreshold requests); serving via the bulk join " +
+        "plan (no driver collect, nothing request-derived inlined as a " +
+        "literal)")
+      None
+    }
+  }
+
+  /** The one hybrid serving plan behind both forms. The two differ only
+    * in how requests reach the index: literal pairs (Left) prune the text
+    * scans by IN-list, fetch probes by an id list and score the probed
+    * lists against a probe broadcast; a request table (Right) does each
+    * by join and broadcasts nothing derived from it. The text-rank
+    * window, the full-outer RRF fusion, the per-query rank window and the
+    * title attach are shared.
+    */
+  private def hybridPlan(spark: SparkSession,
+                         requests: Either[Seq[(Long, String)], DataFrame],
+                         textPrefix: String, vecPrefix: String, k: Int,
+                         nprobe: Int, shortlist: Int): DataFrame = {
+    import spark.implicits._
     val postings = spark.table(s"${textPrefix}_postings")
     val termDf = spark.table(s"${textPrefix}_term_df")
     val docInfo = spark.table(s"${textPrefix}_doc_info")
+    val forward = spark.table(s"${vecPrefix}_forward")
+    val (textTop, vecTop) = requests match {
+      case Left(queries) =>
+        val inTerms = col("term")
+          .isin(queries.flatMap(q => queryTokens(q._2)).distinct: _*)
+        val probes = forward.filter(col("id").isin(queries.map(_._1): _*))
+          .select(col("id"), col("v"))
+        (batchTopK(queries.toDF("query_id", "query_text"),
+            postings.filter(inTerms), termDf.filter(inTerms), docInfo, k,
+            broadcastRequests = true),
+          VectorIndex.searchPrebuilt(spark, vecPrefix, probes, k, nprobe,
+            shortlist))
+      case Right(reqs) =>
+        val probes = forward.join(reqs.select(col("query_id").as("id")), "id")
+          .select(col("id"), col("v"))
+        (batchTopK(reqs, postings, termDf, docInfo, k,
+            broadcastRequests = false),
+          VectorIndex.searchBulk(spark, vecPrefix, probes, k, nprobe,
+            shortlist))
+    }
     // per-query re-rank of the k raw-score survivors on the Money-grid
-    // score — the batch form's convention, unchanged
+    // score (the window orders ≤k rows per query)
     val tw = Window.partitionBy(col("query_id"))
       .orderBy(col("score").desc, col("doc_id"))
-    val textRank = batchTopK(requests, postings, termDf, docInfo, k,
-        broadcastRequests = false)
+    val textRank = textTop
       .select(col("query_id"), col("doc_id").cast("long").as("doc_id"),
         col("score"))
       .withColumn("text_rank", row_number().over(tw).cast("long"))
       .drop("score")
-    val probes = spark.table(s"${vecPrefix}_forward")
-      .join(requests.select(col("query_id").as("id")), "id")
-      .select(col("id"), col("v"))
-    val vecRank = VectorIndex
-      .searchBulk(spark, vecPrefix, probes, k, nprobe, shortlist)
+    val vecRank = vecTop
       .select(col("probe_id").as("query_id"), col("cand_id").as("doc_id"),
         col("rank").as("vec_rank"))
     val w = Window.partitionBy(col("query_id"))
@@ -413,7 +396,7 @@ object Search {
       .filter(col("rn") <= k).drop("rn")
     spark.table(s"${textPrefix}_doc_info")
       .select(col("doc_id").cast("long").as("doc_id"), col("title"))
-      .join(fused, "doc_id")
+      .join(if (requests.isLeft) broadcast(fused) else fused, "doc_id")
       .select(col("query_id"), col("doc_id"), col("title"), col("text_rank"),
         col("vec_rank"), col("rrf").cast("double").as("rrf"))
       .orderBy(col("query_id"), col("rrf").desc, col("doc_id"))
@@ -507,8 +490,8 @@ object Search {
         col("score"))
 
   /** [[batchSearch]]/[[bulkSearch]] without the title attach:
-    * (query_id, rank, doc_id, score). The hybrid forms fuse these winners
-    * and attach titles once, after fusion.
+    * (query_id, rank, doc_id, score). The hybrid plan fuses these winners
+    * and attaches titles once, after fusion.
     */
   private def batchTopK(queries: DataFrame,
                         postings: DataFrame, termDf: DataFrame,

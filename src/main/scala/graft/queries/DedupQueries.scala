@@ -348,7 +348,7 @@ object DedupQueries {
 
   def streamDedupNear(s: SparkSession, dir: String): DataFrame = {
     val src = graft.streaming.DocStreams
-      .docsFileStream(s, stagedNearDir(s, dir), oneFilePerBatch = true)
+      .docsFileStream(s, stagedNearDir(s, dir))
     val sets = src.filter(col("doc_id") % 5 === 0)
       .select(col("doc_id").as("id"),
         array_distinct(transform(Tokenizer.tokenize(col("text")),
@@ -415,7 +415,7 @@ object DedupQueries {
   def streamIngestPipeline(s: SparkSession, dir: String): DataFrame = {
     val d = Tables.documents(s, dir)
     val src = graft.streaming.DocStreams
-      .docsFileStream(s, stagedIngestDir(s, dir), oneFilePerBatch = true)
+      .docsFileStream(s, stagedIngestDir(s, dir))
     // exact: per-digest keyed state emits same-digest candidate pairs as
     // arrivals collide (digest folded to a 120-bit bucket key; Ingest
     // re-verifies true digest equality, so a key collision cannot drop a

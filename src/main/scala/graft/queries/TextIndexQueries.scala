@@ -114,7 +114,8 @@ object TextIndexQueries {
     // postings feed the postings join, the df derivation and (via docInfo's
     // shared scan) the stats; cache so the tokenize+agg pipeline runs once
     // per query instead of three times. (At cluster scale the index is
-    // persisted parquet — Indexer.buildIndex — not recomputed per query.)
+    // the persisted bucketed tables — Indexer.buildBucketedIndex, served
+    // by bm25_search_prebuilt — not recomputed per query.)
     val p = Indexer.postings(d).registeredCache()
     (p, Indexer.termDf(p), Indexer.docInfo(d))
   }
@@ -271,20 +272,17 @@ object TextIndexQueries {
   // serving pattern (app/query.py:97-122 reads the prebuilt store,
   // never the corpus). The vector arm is APPROXIMATE by contract (probed
   // lists only) — the oracle replicates the same probed-list + shortlist
-  // semantics, so its ranks are exact for what the index serves.
+  // semantics, so its ranks are exact for what the index serves. The
+  // query is a one-request batch: the probe vector (id 0) is itself
+  // served from the stored index, point-fetched from the bucket-pruned
+  // forward store (an id lookup can't prune the cent_id-keyed lists).
   def hybridRrfPrebuilt(s: SparkSession, dir: String): DataFrame = {
     val sq = graft.queries.SimilarityQueries
-    val vecPrefix = sq.persistedVectorIndexPrefix(s, dir)
-    // the probe vector is itself served from the stored index, so the
-    // WHOLE query reads index tables only — and the point fetch by id
-    // reads the bucket-pruned forward store, not the cent_id-partitioned
-    // lists (an id lookup can't prune a centroid-keyed layout)
-    val probe = s.table(s"${vecPrefix}_forward")
-      .filter(col("id") === 0L).select(col("id"), col("v"))
-    Search.hybridSearchPrebuilt(s, SearchQuery,
-      textPrefix = ensurePrebuilt(s, dir), vecPrefix = vecPrefix,
-      probe = probe, k = 10, nprobe = sq.ivfNProbe,
-      shortlist = sq.ivfShortlist)
+    Search.hybridBatchSearchPrebuilt(s, Seq(0L -> SearchQuery),
+      textPrefix = ensurePrebuilt(s, dir),
+      vecPrefix = sq.persistedVectorIndexPrefix(s, dir),
+      k = 10, nprobe = sq.ivfNProbe, shortlist = sq.ivfShortlist)
+      .drop("query_id")
   }
 
   // ---- Batch hybrid retrieval over the persisted indexes ---------------------
@@ -459,7 +457,8 @@ object TextIndexQueries {
   // ---- ONLINE hybrid serving: the request stream --------------------------------
   // The batch form's streaming dual: requests arrive one micro-batch per
   // staged file and each batch is served through the SAME pruned path
-  // (hybridBatchSearchPrebuilt) with results appended to a parquet sink.
+  // (Search.literalRequests routes it to hybridBatchSearchPrebuilt) with
+  // results appended to a parquet sink.
   // Per-query results are batching-invariant (each query joins only its
   // own terms/probe), so the accumulated sink hash-matches the one-shot
   // batch oracle — replay invariance on the query side.
@@ -517,9 +516,9 @@ object TextIndexQueries {
 
   // The ROUTED serving stream (VERDICT r12 "what's missing" #1): the same
   // staged requests served with bulkThreshold=0, so every micro-batch
-  // exceeds the literal-pruning sweet spot and serves through the bulk
-  // JOIN plan (Search.hybridBulkSearchPrebuilt — no driver collect,
-  // nothing request-derived inlined as a literal). Shares
+  // exceeds the literal-pruning sweet spot (Search.literalRequests) and
+  // serves through the bulk JOIN plan (Search.hybridBulkSearchPrebuilt —
+  // no driver collect, nothing request-derived inlined as a literal). Shares
   // stream_hybrid_serving's oracle: the route must be results-invisible,
   // and this row makes the DuckDB gate enforce it every round.
   def streamHybridServingBulk(s: SparkSession, dir: String): DataFrame =

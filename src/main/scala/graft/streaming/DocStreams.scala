@@ -27,16 +27,20 @@ object DocStreams {
 
   /** The documents parquet as a STREAMING file source. `dir` may be the
     * testdata dir or a staged directory holding the corpus split into
-    * several files (maxFilesPerTrigger=1 then yields one micro-batch per
-    * file — real cross-batch state instead of a single-batch degenerate
-    * run).
+    * several files (one micro-batch per file — real cross-batch state
+    * instead of a single-batch degenerate run).
     */
-  def docsFileStream(s: SparkSession, dir: String,
-                     oneFilePerBatch: Boolean = false): DataFrame = {
-    val schema = s.read.parquet(s"$dir/documents.parquet").schema
-    val r = s.readStream.schema(schema).option("basePath", dir)
-    (if (oneFilePerBatch) r.option("maxFilesPerTrigger", "1") else r)
-      .parquet(s"$dir/documents.parquet*")
+  def docsFileStream(s: SparkSession, dir: String): DataFrame =
+    stagedFileStream(s, dir, "documents.parquet")
+
+  /** The staged files `dir/file*` as a streaming parquet source, one file
+    * per micro-batch; the schema comes from `dir/file`.
+    */
+  private def stagedFileStream(s: SparkSession, dir: String,
+                               file: String): DataFrame = {
+    val schema = s.read.parquet(s"$dir/$file").schema
+    s.readStream.schema(schema).option("basePath", dir)
+      .option("maxFilesPerTrigger", "1").parquet(s"$dir/$file*")
   }
 
   /** Stage `docs` into a fresh stream-source dir as `nFiles` separate
@@ -127,7 +131,7 @@ object DocStreams {
     */
   def qualityBySourceAvailableNow(s: SparkSession, staged: String): DataFrame = {
     import org.apache.spark.sql.functions._
-    val src = docsFileStream(s, staged, oneFilePerBatch = true)
+    val src = docsFileStream(s, staged)
     val toks = graft.functions.Tokenizer.tokenize(col("text"))
     val agg = src
       .withColumn("qm",
@@ -285,10 +289,7 @@ object DocStreams {
                          checkpointDir: Option[String] = None): IngestReport = {
     val ckpt = checkpointDir.getOrElse(
       graft.ScratchDirs.fresh("graft_stream", "vingest_ckpt").toString)
-    val schema = s.read.parquet(s"$stagedDir/embeddings.parquet").schema
-    val src = s.readStream.schema(schema).option("basePath", stagedDir)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagedDir/embeddings.parquet*")
+    val src = stagedFileStream(s, stagedDir, "embeddings.parquet")
     // foreachBatch runs serially on the driver, so plain vars are safe
     var retrains = 0
     var replaySkips = 0
@@ -385,28 +386,6 @@ object DocStreams {
     writeSplits(reqs, "query_id", nFiles, java.nio.file.Paths.get(dirPath),
       "requests.parquet", startAt)
 
-  /** ONLINE hybrid serving: a micro-batched request stream (query_id =
-    * stored probe vector id, query_text) served from the persisted
-    * text + vector indexes — each micro-batch goes through the SAME
-    * batch serving path a synchronous caller uses
-    * (Search.hybridBatchSearchPrebuilt: IN-list bucket pruning, forward
-    * point fetch, DPP'd lists, per-query RRF top-k), results appended to
-    * a parquet sink. Per-query results are independent of batching (each
-    * query joins only its own terms / probe), so the union over
-    * micro-batches equals one big batch call — the replay-invariance
-    * contract the ingest streams pin, here on the QUERY side. A
-    * micro-batch larger than `bulkThreshold` routes to the bulk JOIN
-    * plan instead (Search.hybridBulkSearchPrebuilt), so the driver-side
-    * collect is bounded by the threshold, never by whatever a producer
-    * staged.
-    *
-    * foreachBatch is at-least-once, so each micro-batch writes to a
-    * batchId-keyed subdirectory in OVERWRITE mode: a retried batch
-    * replaces its own previous (possibly partial) output instead of
-    * double-appending — the sink stays equal to the one-shot batch call
-    * under replay, which is exactly the invariance stream_hybrid_serving
-    * pins.
-    */
   /** Serving-SINK compaction (the last store without a file-count bound):
     * every micro-batch appends one `batch_id=N` subdirectory of small
     * parquet files, so a year of unattended serving is ~9k directories —
@@ -920,7 +899,28 @@ object DocStreams {
     true
   }
 
-  /** @param checkpointDir STABLE checkpoint for a resumable serving
+  /** ONLINE hybrid serving: a micro-batched request stream (query_id =
+    * stored probe vector id, query_text) served from the persisted
+    * text + vector indexes, results appended to a parquet sink. Each
+    * micro-batch takes the route a synchronous `hbatch` call takes,
+    * [[graft.operators.Search.literalRequests]]: a batch of at most
+    * `bulkThreshold` requests serves through the literal-pruned batch
+    * plan (IN-list bucket pruning, forward point fetch, DPP'd lists,
+    * per-query RRF top-k), a larger one through the bulk JOIN plan, so
+    * the driver-side collect is bounded by the threshold, never by
+    * whatever a producer staged. Per-query results are independent of
+    * batching (each query joins only its own terms / probe), so the union
+    * over micro-batches equals one big batch call — the replay-invariance
+    * contract the ingest streams pin, here on the QUERY side.
+    *
+    * foreachBatch is at-least-once, so each micro-batch writes to a
+    * batchId-keyed subdirectory in OVERWRITE mode: a retried batch
+    * replaces its own previous (possibly partial) output instead of
+    * double-appending — the sink stays equal to the one-shot batch call
+    * under replay, which is exactly the invariance stream_hybrid_serving
+    * pins.
+    *
+    * @param checkpointDir STABLE checkpoint for a resumable serving
     *   stream: a restart answers only requests the source has not yet
     *   seen. No applied-marker is needed here — the batch_id-keyed
     *   overwrite sink is already idempotent under replay.
@@ -931,15 +931,11 @@ object DocStreams {
     *   result dirs at or below `batchId - retainBatches` — see
     *   [[retainServingSink]]; None = off, results are kept forever
     * @param bulkThreshold micro-batches above this many requests serve
-    *   through the bulk JOIN plan instead of the literal-pruned batch
-    *   plan (VERDICT r12 "what's missing" #1): a micro-batch is "whatever
-    *   a producer staged", not a bounded constant, so an oversized
-    *   request file must not become a driver-scale collect plus a
-    *   thousands-of-literals IN-list — the same auto-route the CLI
-    *   `hbatch` applies, decided per micro-batch by a LIMIT-bounded
-    *   count probe. Both plans return row-identical results (CliSpec
-    *   pins the twin equality), so routing never changes what a caller
-    *   is served.
+    *   through the bulk JOIN plan (VERDICT r12 "what's missing" #1): a
+    *   micro-batch is "whatever a producer staged", not a bounded
+    *   constant. Both plans return row-identical results (CliSpec pins
+    *   the twin equality), so routing never changes what a caller is
+    *   served.
     */
   def hybridServe(s: SparkSession, stagedDir: String, textPrefix: String,
                   vecPrefix: String, outPath: String, k: Int = 10,
@@ -948,11 +944,8 @@ object DocStreams {
                     graft.operators.Search.BulkRequestThreshold,
                   maxSinkDirs: Option[Int] = None,
                   retainBatches: Option[Int] = None): Unit = {
-    // a negative threshold would make the probe limit(0) and silently
-    // DROP every request; clamp the probe at Int range for huge values
-    // (AUDIT_r13 #3)
+    // fail before the stream starts, not in its first micro-batch
     require(bulkThreshold >= 0, s"bulkThreshold must be >= 0 ($bulkThreshold)")
-    val probeLimit = math.min(bulkThreshold, Int.MaxValue - 1L).toInt + 1
     val ckpt = checkpointDir.getOrElse(
       graft.ScratchDirs.fresh("graft_stream", "hserve_ckpt").toString)
     // a restarted serving stream heals crashed-compaction debris before
@@ -981,10 +974,7 @@ object DocStreams {
           "regressed; forget/retention age premises assume ONE stable " +
           "checkpoint per sink (sstats reports `lineages`)")
     }
-    val schema = s.read.parquet(s"$stagedDir/requests.parquet").schema
-    val src = s.readStream.schema(schema).option("basePath", stagedDir)
-      .option("maxFilesPerTrigger", "1")
-      .parquet(s"$stagedDir/requests.parquet*")
+    val src = stagedFileStream(s, stagedDir, "requests.parquet")
     val callerShuffle = s.conf.get("spark.sql.shuffle.partitions")
     graft.GraftSession.scoped(s, StreamShuffle) {
       val q = src.writeStream
@@ -994,16 +984,14 @@ object DocStreams {
         .foreachBatch { (batch: DataFrame, batchId: Long) =>
           val reqDf = batch.select(
             col("query_id").cast("long").as("query_id"), col("query_text"))
-          // LIMIT-bounded probe, never a full count: reads just enough of
-          // the micro-batch to know which side of the threshold it is on
-          val n = reqDf.limit(probeLimit).count()
-          if (n > 0) {
-            if (n > bulkThreshold) {
-              System.err.println(s"[graft] serving micro-batch $batchId " +
-                s"exceeds the literal-pruning sweet spot " +
-                s"($bulkThreshold requests) — routing to the bulk join " +
-                "plan (no driver collect, nothing request-derived " +
-                "inlined as a literal)")
+          def write(results: DataFrame): Unit =
+            results.write.mode("overwrite")
+              .parquet(s"$outPath/batch_id=$batchId")
+          graft.operators.Search.literalRequests(reqDf, bulkThreshold) match {
+            case Some(reqs) =>
+              if (reqs.nonEmpty) write(graft.operators.Search
+                .hybridBatchSearchPrebuilt(s, reqs, textPrefix, vecPrefix, k))
+            case None =>
               // the stream pins shuffle.partitions low for micro-batch
               // serving; a bulk-routed oversized batch is a full
               // distributed job whose term/cent_id/query_id shuffles
@@ -1014,21 +1002,9 @@ object DocStreams {
               // saturates either way — SCALE_r13 §4.)
               graft.GraftSession.scoped(s,
                   "spark.sql.shuffle.partitions" -> callerShuffle) {
-                graft.operators.Search.hybridBulkSearchPrebuilt(
-                    s, reqDf, textPrefix, vecPrefix, k)
-                  .write.mode("overwrite")
-                  .parquet(s"$outPath/batch_id=$batchId")
+                write(graft.operators.Search.hybridBulkSearchPrebuilt(
+                  s, reqDf, textPrefix, vecPrefix, k))
               }
-            } else {
-              // below the threshold the literal IN-lists ARE the index
-              // pruning, and this collect is bounded by the threshold
-              val reqs = reqDf.collect()
-                .map(r => (r.getLong(0), r.getString(1))).toSeq
-              graft.operators.Search.hybridBatchSearchPrebuilt(
-                  s, reqs, textPrefix, vecPrefix, k)
-                .write.mode("overwrite")
-                .parquet(s"$outPath/batch_id=$batchId")
-            }
           }
           // the sink's maintenance policies, AFTER this batch's results
           // are durable. Retention first (dropping aged dirs shrinks what
@@ -1073,7 +1049,7 @@ object DocStreams {
       graft.ScratchDirs.fresh("graft_stream", "ingest_ckpt").toString)
     var replaySkips = 0
     graft.GraftSession.scoped(s, StreamShuffle) {
-      val q = docsFileStream(s, stagedDir, oneFilePerBatch = true)
+      val q = docsFileStream(s, stagedDir)
         .writeStream
         .outputMode(OutputMode.Append)
         .option("checkpointLocation", ckpt)

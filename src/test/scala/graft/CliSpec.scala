@@ -135,12 +135,31 @@ class CliSpec extends SparkSpec {
     assert(out.forall(r =>
       !r.isNullAt(r.fieldIndex("text_rank")) ||
         !r.isNullAt(r.fieldIndex("vec_rank"))))
-    val probe = spark.table(s"${vPrefix}_vectors")
+    // the expected rows from the two arms' library calls: text ranks are
+    // positions in the BM25 top 10, vector ranks the ANN ranks, and RRF
+    // sums 1/(60 + rank) over the arms that returned the document
+    val textRank = Search.searchPrebuilt(spark, query, tPrefix, 10).collect()
+      .map(_.getAs[Long]("doc_id")).zipWithIndex
+      .map { case (d, i) => d -> (i + 1L) }.toMap
+    val probe = spark.table(s"${vPrefix}_forward")
       .filter(col("id") === 0L).select(col("id"), col("v"))
-    val direct = Search
-      .hybridSearchPrebuilt(spark, query, tPrefix, vPrefix, probe, 10)
-      .collect()
-    assert(out.toSeq == direct.toSeq)
+    val vecRank = graft.operators.VectorIndex
+      .searchPrebuilt(spark, vPrefix, probe, 10, nprobe = 8, shortlist = 40)
+      .collect().map(r => r.getAs[Long]("cand_id") -> r.getAs[Long]("rank"))
+      .toMap
+    def rrfOf(rank: Option[Long]) = rank.fold(0.0)(r => 1.0 / (60.0 + r))
+    val expected = (textRank.keySet ++ vecRank.keySet).toSeq
+      .map(d => (d, textRank.get(d), vecRank.get(d),
+        rrfOf(textRank.get(d)) + rrfOf(vecRank.get(d))))
+      .sortBy { case (d, _, _, rrf) => (-rrf, d) }.take(10)
+    def rank(r: org.apache.spark.sql.Row, c: String) =
+      if (r.isNullAt(r.fieldIndex(c))) None else Some(r.getAs[Long](c))
+    assert(out.map(r => (r.getAs[Long]("doc_id"), rank(r, "text_rank"),
+      rank(r, "vec_rank"), r.getAs[Double]("rrf"))).toSeq == expected)
+    val titles = spark.table(s"${tPrefix}_doc_info").collect()
+      .map(r => r.getAs[Long]("doc_id") -> r.getAs[String]("title")).toMap
+    assert(out.forall(r =>
+      r.getAs[String]("title") == titles(r.getAs[Long]("doc_id"))))
   }
 
   test("hbatch serves a request table and equals the library call") {
@@ -197,7 +216,7 @@ class CliSpec extends SparkSpec {
     // one over the threshold: the command must serve through the bulk
     // join plan (no driver collect of the requests) with the same rows
     // the library's bulk call returns
-    val n = (cli.Main.BulkRequestThreshold + 1).toInt
+    val n = (Search.BulkRequestThreshold + 1).toInt
     val reqs = (0 until n).map(i =>
       (i.toLong, if (i % 2 == 0) "spark filter join" else "customer data"))
     val reqPath = ScratchDirs.fresh("graft_test", "hroute_reqs").toString
@@ -218,29 +237,22 @@ class CliSpec extends SparkSpec {
     assert(routed.nonEmpty)
   }
 
-  test("hbatch --force-batch pins the literal-pruned plan over the threshold") {
+  test("literalRequests: T rows stay literal, T + 1 route to bulk, 0 rows stay literal") {
     import spark.implicits._
-    val tPrefix = "graft_cli_fb_t"
-    val vPrefix = "graft_cli_fb_v"
-    assert(cli.Main.run(spark, Seq("index", docsPath, tPrefix)).isRight)
-    assert(cli.Main.run(spark,
-      Seq("vindex", s"$dir/embeddings.parquet", vPrefix)).isRight)
-    val n = (cli.Main.BulkRequestThreshold + 1).toInt
-    val reqs = (0 until n).map(i =>
-      (i.toLong, if (i % 2 == 0) "spark filter join" else "customer data"))
-    val reqPath = ScratchDirs.fresh("graft_test", "hforce_reqs").toString
-    reqs.toDF("query_id", "query_text").write.mode("overwrite").parquet(reqPath)
-    // over threshold + flag: must serve through the BATCH path (equal to
-    // the library batch call, which the twin test pins equal to bulk)
-    val forced = cli.Main
-      .run(spark, Seq("hbatch", reqPath, tPrefix, vPrefix, "5", "--force-batch"))
-      .toOption.flatten.get.collect().map(_.toSeq).toSeq
-    val direct = graft.operators.Search
-      .hybridBatchSearchPrebuilt(spark, reqs, tPrefix, vPrefix, 5)
-      .collect().map(_.toSeq).toSeq
-    assert(forced == direct,
-      "--force-batch did not serve through the literal-pruned batch plan")
-    assert(forced.nonEmpty)
+    def reqs(n: Int) = (0 until n).map(i => (i.toLong, s"query $i"))
+      .toDF("query_id", "query_text")
+    // the rows come back whole, in the table's order, with no second read
+    assert(Search.literalRequests(reqs(3), bulkThreshold = 3)
+      .contains((0 until 3).map(i => (i.toLong, s"query $i"))))
+    assert(Search.literalRequests(reqs(4), bulkThreshold = 3).isEmpty)
+    assert(Search.literalRequests(reqs(0), bulkThreshold = 3).contains(Seq.empty))
+    // threshold 0: an empty batch is still literal, one request is bulk
+    assert(Search.literalRequests(reqs(0), bulkThreshold = 0).contains(Seq.empty))
+    assert(Search.literalRequests(reqs(1), bulkThreshold = 0).isEmpty)
+    // the default threshold, and a negative one is refused
+    assert(Search.literalRequests(reqs(2)).map(_.size).contains(2))
+    intercept[IllegalArgumentException](
+      Search.literalRequests(reqs(1), bulkThreshold = -1))
   }
 
   test("streaming CLI: singest/vingest/hserve run the resumable stream surface") {
@@ -314,7 +326,7 @@ class CliSpec extends SparkSpec {
     assert(cli.Main.run(spark, Seq("index", docsPath, tPrefix)).isRight)
     assert(cli.Main.run(spark,
       Seq("vindex", s"$dir/embeddings.parquet", vPrefix)).isRight)
-    val n = (cli.Main.BulkRequestThreshold + 1).toInt
+    val n = (Search.BulkRequestThreshold + 1).toInt
     val reqs = (0 until n).map(i =>
       (i.toLong, if (i % 2 == 0) "spark filter join" else "customer data"))
     val staged = DocStreams.stagedRequestSplits(
@@ -641,7 +653,7 @@ class CliSpec extends SparkSpec {
     assert(left("query", "q1_agg", dir, "--baseline=yes")
       .contains("takes no value"))
     assert(left("hbatch", "r", "t", "v", "--force-batch=1")
-      .contains("takes no value"))
+      .contains("unknown flag"))
     // ADVICE r14: negative numerics are as wrong as zero ones — bounded
     // below like the flags
     assert(left("search", "p", "q", "-5").contains(">= 1"))

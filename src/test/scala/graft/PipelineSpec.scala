@@ -8,8 +8,8 @@ import graft.operators.{Indexer, Search}
 import graft.sources.Pipelines
 
 /** End-to-end golden test (SURVEY.md §5.3): prepare -> TSV round-trip ->
-  * index build (parquet) -> load -> BM25 search, checked against an
-  * independent in-test scorer. Plus TSV / per-doc-file format parity.
+  * persisted bucketed index build -> BM25 search over it, checked against
+  * an independent in-test scorer. Plus TSV / per-doc-file format parity.
   */
 class PipelineSpec extends SparkSpec {
   import spark.implicits._
@@ -95,14 +95,12 @@ class PipelineSpec extends SparkSpec {
   }
 
   test("golden end-to-end: index to parquet, load, search matches independent scorer") {
-    val indexDir = Files.createTempDirectory("graft_idx").toString
+    // the path the CLI's `index` and `search` run: the persisted
+    // term-bucketed tables, searched through their pruned scans
+    val prefix = "graft_pipeline_golden"
     val docs = docsDf.select(col("id").as("doc_id"), col("text"))
-    Indexer.buildIndex(spark, docs, indexDir)
-
-    val postings = spark.read.parquet(s"$indexDir/postings")
-    val termDf = spark.read.parquet(s"$indexDir/term_df")
-    val docInfo = spark.read.parquet(s"$indexDir/doc_info")
-    val got = Search.search(spark, "spark data", postings, termDf, docInfo, k = 10)
+    Indexer.buildBucketedIndex(spark, docs, prefix)
+    val got = Search.searchPrebuilt(spark, "spark data", prefix, k = 10)
       .collect().map(r => r.getAs[String]("doc_id") -> r.getAs[Double]("score"))
 
     // independent scorer (reference formula, app/query.py:145,170,186-188)

@@ -577,8 +577,8 @@ class StreamingSpec extends SparkSpec {
         .select(col("band"), col("h.r0").as("h1"), col("h.r1").as("h2"),
           col("id"))
     val streamed = DocStreams.nearDupCandidates(spark,
-        mkBands(mkSets(DocStreams.docsFileStream(spark, staged,
-          oneFilePerBatch = true))), "collisions_spec")
+        mkBands(mkSets(DocStreams.docsFileStream(spark, staged))),
+        "collisions_spec")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val batch = graft.operators.Dedup.lshCandidates(
         mkSets(docs).select(col("id") +: graft.operators.Dedup
