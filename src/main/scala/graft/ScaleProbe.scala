@@ -1,9 +1,9 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Dev tool: 10x scale probe for the hottest non-streaming families.
+/** Dev tool: generator + Probe at two dirs, the 10x scale probe for the
+  * hottest non-streaming families.
   *
   * Builds a synthetic sf1 (10x sf0.1) under /tmp once per machine —
   * documents replicated 10x with per-replica id offsets and a trailing
@@ -11,11 +11,12 @@ import org.apache.spark.sql.functions._
   * duplication factor 10, the hard case for the dedup family), and
   * embeddings replicated 10x with deterministic hash-derived jitter
   * (+-0.01 per component: cluster structure preserved, exact ties
-  * broken). Then times knn_graph and ingest_pipeline at sf0.1 and the
-  * synthetic sf1 (one untimed warmup + 3 timed runs, min reported) and
-  * prints the 10x-data runtime ratio — the number that says whether the
-  * plan survives a scale-up, with superlinear steps named for the next
-  * round. Never touches /root/testdata.
+  * broken). Then runs [[Probe.loop]] on each target at sf0.1 and at the
+  * synthetic sf1 and prints, from the two `min_total_ms`, the 10x-data
+  * runtime ratio — the number that says whether the plan survives a
+  * scale-up. A target is any name [[Probe.query]] resolves, including
+  * `hybrid_rrf_bulk_<n>k`, which holds the request count fixed so the
+  * ratio isolates corpus growth. Never touches /root/testdata.
   */
 object ScaleProbe {
   def main(args: Array[String]): Unit = {
@@ -91,240 +92,24 @@ object ScaleProbe {
       done.createNewFile(): Unit
     }
 
-    // `hybrid_rrf_bulk_<n>k` probes the bulk serving path with a FIXED
-    // request count over the scaled corpus (the registry row's one-request-
-    // per-doc fixture scales both dimensions at once by design)
-    val BulkRe = "hybrid_rrf_bulk_(\\d+)k".r
-    def queryFn(name: String): (SparkSession, String) => DataFrame =
-      name match {
-        case BulkRe(n) => (s, d) =>
-          graft.queries.TextIndexQueries.hybridRrfBulkN(s, d, n.toInt * 1000)
-        case _ => Queries.all(name)
-      }
-
-    def time(name: String, dir: String): (Double, Long) = {
-      def once(): (Double, Long) = {
-        val t0 = System.nanoTime()
-        val df: DataFrame = queryFn(name)(spark, dir)
-        df.write.format("noop").mode("overwrite").save()
-        val dt = (System.nanoTime() - t0) / 1e9
-        (dt, -1L)
-      }
-      once() // warmup: memoized builds + codegen outside the timed runs
-      val runs = (1 to 3).map(_ => once()._1)
-      val rows = queryFn(name)(spark, dir).count()
-      (runs.min, rows)
-    }
-
-    ensureSf1()
-
-    // `ingest_policy`: throughput probe for the in-stream maintenance
-    // policy — the same 11-batch ingest with the compaction check OFF vs
-    // ON at a threshold (3) low enough to trigger several rewrites; the
-    // printed overhead ratio is the policy's whole cost. Runs at sf0.1
-    // and the scaled corpus, text and vector stores. Falls through to any
-    // OTHER targets in the same invocation (an early return here silently
-    // dropped them — ADVICE r11).
-    if (args.contains("ingest_policy")) {
-      Seq(("sf0.1", src), (s"x$factor", sf1)).foreach { case (tag, dir) =>
-        val d = Tables.documents(spark, dir).select(col("doc_id"), col("text"))
-        val staged = graft.streaming.DocStreams
-          .stagedDocSplits(d.filter(col("doc_id") % 12 =!= 0), nFiles = 11)
-        def run(policy: Option[Int], p: String): Double = {
-          val prefix = s"probe_ing_${p}_" + tag.replaceAll("[^A-Za-z0-9]", "_")
-          graft.operators.Indexer.buildBucketedIndex(spark,
-            d.filter(col("doc_id") % 12 === 0), prefix)
-          val t0 = System.nanoTime()
-          graft.streaming.DocStreams.ingestAppend(spark, staged, prefix, policy)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val off = run(None, "off")
-        val on = run(Some(3), "on")
-        println(f"ingest_policy[text] $tag: off=$off%.2f s on=$on%.2f s " +
-          f"overhead=${on / off}%.2f")
-        val e = Tables.embeddings(spark, dir).select(col("vec_id").as("id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val vstaged = graft.streaming.DocStreams
-          .stagedEmbSplits(e.filter(col("id") % 12 =!= 0), nFiles = 11)
-        def vrun(policy: Option[Int], p: String): Double = {
-          val prefix = s"probe_ving_${p}_" + tag.replaceAll("[^A-Za-z0-9]", "_")
-          graft.operators.VectorIndex.trainAndBuild(spark,
-            e.filter(col("id") % 12 === 0), prefix)
-          val t0 = System.nanoTime()
-          graft.streaming.DocStreams.vectorIngestAppend(spark, vstaged,
-            prefix, policy)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val voff = vrun(None, "off")
-        val von = vrun(Some(3), "on")
-        println(f"ingest_policy[vector] $tag: off=$voff%.2f s on=$von%.2f s " +
-          f"overhead=${von / voff}%.2f")
-      }
-    }
-
-    // `retrain_policy`: throughput probe for the drift-triggered retrain
-    // check in the vector ingest stream — the same 11-batch embedding
-    // ingest with the policy OFF vs ON at a cadence/threshold that
-    // TRIGGERS (threshold 0 fires at every check), so the ratio prices
-    // check + snapshot fence + retrain, the policy's whole cost. A real
-    // deployment amortizes further: the skew check alone is a
-    // partition-column-only aggregate, and retrain only fires on drift.
-    if (args.contains("retrain_policy")) {
-      Seq(("sf0.1", src), (s"x$factor", sf1)).foreach { case (tag, dir) =>
-        val e = Tables.embeddings(spark, dir).select(col("vec_id").as("id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        val vstaged = graft.streaming.DocStreams
-          .stagedEmbSplits(e.filter(col("id") % 12 =!= 0), nFiles = 11)
-        def vrun(policy: Option[graft.streaming.DocStreams.RetrainPolicy],
-                 p: String): Double = {
-          val prefix = s"probe_vrt_${p}_" + tag.replaceAll("[^A-Za-z0-9]", "_")
-          graft.operators.VectorIndex.trainAndBuild(spark,
-            e.filter(col("id") % 12 === 0), prefix)
-          val t0 = System.nanoTime()
-          graft.streaming.DocStreams.vectorIngestAppend(spark, vstaged,
-            prefix, maxFilesPerUnit = None, retrainPolicy = policy)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val off = vrun(None, "off")
-        // check-only: the skew signal read at EVERY batch, never firing —
-        // isolates the policy's standing cost from the retrain it gates
-        val chk = vrun(Some(graft.streaming.DocStreams.RetrainPolicy(
-          everyNBatches = 1, skewThreshold = Double.MaxValue)), "chk")
-        val on = vrun(Some(graft.streaming.DocStreams.RetrainPolicy(
-          everyNBatches = 6, skewThreshold = 0.0)), "on")
-        println(f"retrain_policy[vector] $tag: off=$off%.2f s " +
-          f"check-only=$chk%.2f s (${chk / off}%.2f) " +
-          f"always-fire=$on%.2f s (${on / off}%.2f) " +
-          "(check-only: skew read every batch, threshold never met; " +
-          "always-fire: cadence 6, threshold 0 => snapshot fence + full " +
-          "re-Lloyd included)")
-      }
-    }
-
-    // `serve_route`: throughput probe for the serving stream's bulk route
-    // (r13) — one OVERSIZED staged request file (8192 > the 4096
-    // threshold) answered by hybridServe at sf0.1 and the scaled corpus.
-    // Pre-r13 this micro-batch was an unbounded driver collect plus an
-    // 8192-literal IN-list plan; routed, it is one bulk join pass. A
-    // 64-request file rides along as the below-threshold (literal-pruned)
-    // reference point on the same indexes.
-    if (args.contains("serve_route")) {
-      Seq(("sf0.1", src), (s"x$factor", sf1)).foreach { case (tag, dir) =>
-        val slug = tag.replaceAll("[^A-Za-z0-9]", "_")
-        val tPrefix = s"probe_srt_t_$slug"
-        val vPrefix = s"probe_srt_v_$slug"
-        graft.operators.Indexer.buildBucketedIndex(spark,
-          Tables.documents(spark, dir).select(col("doc_id"), col("text")),
-          tPrefix)
-        val e = Tables.embeddings(spark, dir).select(col("vec_id").as("id"),
-          expr("transform(embedding, x -> CAST(x AS DOUBLE))").as("v"))
-        // corpus-derived coarse geometry (the auto-family practice,
-        // SCALE_r7): hold ~312 vectors per list at every scale point so
-        // probed-candidate volume per request stays flat as the corpus
-        // grows — a fixed nlist would scale the vector arm's ADC work
-        // linearly with the corpus and the probe would measure geometry
-        // drift, not the serving path
-        val nlist = math.max(64, (e.count() / 312L).toInt)
-        graft.operators.VectorIndex.trainAndBuild(spark, e, vPrefix,
-          nlist = nlist)
-        def serveN(n: Int): Double = {
-          val reqs = Tables.documents(spark, dir).select(
-            col("doc_id").cast("long").as("query_id"),
-            array_join(slice(
-              graft.functions.Tokenizer.tokenize(col("text")), 1, 5),
-              " ").as("query_text"))
-            .orderBy("query_id").limit(n)
-          val staged = graft.streaming.DocStreams
-            .stagedRequestSplits(reqs, nFiles = 1)
-          // the limit(n) caps, it doesn't guarantee: on a corpus smaller
-          // than n the "bulk route" sample would silently serve through
-          // the literal-pruned batch path and the printed per-request
-          // bulk latency would measure the WRONG plan (ADVICE r13) —
-          // assert the staged count actually exceeds the threshold before
-          // labeling the measurement as the bulk route
-          val stagedN = spark.read.option("basePath", staged)
-            .parquet(s"$staged/requests.parquet*").count()
-          System.err.println(s"[graft] serve_route $tag staged $stagedN " +
-            s"of $n requested")
-          if (n > graft.operators.Search.BulkRequestThreshold)
-            require(stagedN > graft.operators.Search.BulkRequestThreshold,
-              s"serve_route $tag: staged only $stagedN requests (corpus " +
-                s"too small) — the 'bulk route' label would measure the " +
-                "batch path; probe a larger corpus")
-          val out = graft.ScratchDirs
-            .fresh("graft_probe", s"srt_${slug}_$n").toString
-          val t0 = System.nanoTime()
-          graft.streaming.DocStreams.hybridServe(spark, staged, tPrefix,
-            vPrefix, out, k = 10)
-          (System.nanoTime() - t0) / 1e9
-        }
-        val small = serveN(64)
-        val big = serveN(8192)
-        println(f"serve_route $tag: 64-req(batch path)=$small%.2f s " +
-          f"8192-req(bulk route)=$big%.2f s " +
-          f"per-request=${big / 8192 * 1000}%.3f ms")
-      }
-    }
-
-    // `sink_ops`: throughput probe for the serving-sink maintenance ops
-    // (r14) — a synthetic results log (20 batch dirs) at two row scales,
-    // timing one tier-0 compaction cycle and one full forget rewrite.
-    // Both are one read + one write of the touched data, so the x10
-    // ratio should track data volume (linear), not dir count.
-    if (args.contains("sink_ops")) {
-      // untimed warmup point first (discarded): the first compaction/
-      // forget of a session pays JIT + codegen first-touch, which at
-      // these sub-second costs would dominate the x1 reading
-      Seq(("warmup", 10000L), ("x1", 100000L), ("x10", 1000000L))
-        .foreach { case (tag, n) =>
-        val out = graft.ScratchDirs
-          .fresh("graft_probe", s"sinkops_$tag").toString
-        val df = spark.range(n).select(
-          (col("id") % 1000).as("query_id"), col("id").as("doc_id"),
-          concat(lit("title_"), col("id")).as("title"),
-          lit(1L).as("text_rank"), lit(1L).as("vec_rank"),
-          lit(0.03).as("rrf"))
-        (0 until 20).foreach(i => df.filter(col("doc_id") % 20 === i)
-          .coalesce(1).write.parquet(s"$out/batch_id=$i"))
-        val t0 = System.nanoTime()
-        graft.streaming.DocStreams.compactServingSink(spark, out, 10, 19L)
-        val tCompact = (System.nanoTime() - t0) / 1e9
-        // forget 1% of doc_ids across the whole log
-        val ids = spark.range(n).filter(col("id") % 100 === 0)
-          .select(col("id").as("doc_id"))
-        val t1 = System.nanoTime()
-        graft.streaming.DocStreams.forgetFromServingSink(spark, out, ids)
-        val tForget = (System.nanoTime() - t1) / 1e9
-        val left = spark.read.option("recursiveFileLookup", "true")
-          .parquet(out).count()
-        require(left == n - n / 100, s"sink_ops $tag: expected " +
-          s"${n - n / 100} rows after forget, read $left")
-        if (tag != "warmup")
-          println(f"sink_ops $tag: rows=$n compact(19 dirs)=$tCompact%.2f s " +
-            f"forget(1%% of ids, full-log rewrite)=$tForget%.2f s " +
-            f"remaining=$left")
-      }
-    }
-
-    val policyProbes =
-      Set("ingest_policy", "retrain_policy", "serve_route", "sink_ops")
     val targets =
-      if (args.exists(policyProbes)) args.toSeq.filterNot(policyProbes)
-      else if (args.nonEmpty) args.toSeq
+      if (args.nonEmpty) args.toSeq
       else Seq("knn_graph", "knn_graph_auto", "dedup_embedding_auto",
         "semantic_dedup_auto", "ingest_pipeline", "q1_agg", "q3_shipping",
         "q5_star_join", "q7_volume_shipping", "events_sessionize",
         "events_session_window", "scd2_history", "dedup_minhash_lsh",
         "dedup_minhash_shingled", "dedup_substring_spans", "token_pmi",
         "graph_pagerank", "index_postings", "bm25_search")
-    if (targets.nonEmpty) {
-      println(f"${"query"}%-22s ${"sf0.1 s"}%9s ${"sf1 s"}%9s ${"ratio"}%7s rows0.1 rows1")
-      targets.foreach { q =>
-        val (t01, r01) = time(q, src)
-        val (t1, r1) = time(q, sf1)
-        println(f"$q%-22s $t01%9.2f $t1%9.2f ${t1 / t01}%7.2f $r01 $r1")
+    val table = try {
+      ensureSf1()
+      targets.map { q =>
+        val small = Probe.loop(spark, src, q)
+        val big = Probe.loop(spark, sf1, q)
+        val (t01, t1) = (small.totalMs / 1e3, big.totalMs / 1e3)
+        f"$q%-22s $t01%9.2f $t1%9.2f ${t1 / t01}%7.2f ${small.rows} ${big.rows}"
       }
-    }
-    spark.stop()
+    } finally spark.stop()
+    println(f"${"query"}%-22s ${"sf0.1 s"}%9s ${"sf1 s"}%9s ${"ratio"}%7s rows0.1 rows1")
+    table.foreach(println)
   }
 }

@@ -388,7 +388,7 @@ object TextIndexQueries {
       k = 10, nprobe = sq.ivfNProbe, shortlist = sq.ivfShortlist)
   }
 
-  /** Scale-probe hook (graft.ScaleProbe `hybrid_rrf_bulk_<n>k` targets):
+  /** Scale-probe hook (`hybrid_rrf_bulk_<n>k`, resolved by graft.Probe):
     * the bulk serving call with a FIXED request count, so the scaling
     * curve isolates corpus growth — the registry row's requests-per-doc
     * fixture deliberately scales BOTH dimensions at once, which is the

@@ -56,4 +56,24 @@ class ProbeSpec extends SparkSpec {
     assert(org.apache.spark.ListenerBusCount(sc) == sparkListeners)
     assert(spark.streams.listListeners().length == streamListeners)
   }
+
+  test("hybrid_rrf_bulk_1k resolves to the bulk call and returns the registry row's rows") {
+    // 500 documents: one request per document, under the 1,000-request cap
+    val byName = Probe.query("hybrid_rrf_bulk_1k")(spark, dir)
+    val registry = SparkEntry.queries("hybrid_rrf_bulk")(spark, dir)
+    val (a, b) = (byName.collect().toSeq, registry.collect().toSeq)
+    assert(b.nonEmpty)
+    assert(a.map(_.toString).sorted == b.map(_.toString).sorted)
+  }
+
+  test("an unknown name is refused with an error that names it") {
+    val e = intercept[IllegalArgumentException](
+      Probe.measure(spark, dir, "no_such_query"))
+    assert(e.getMessage.contains("no_such_query"), e.getMessage)
+  }
+
+  test("a run's row count is the query's count()") {
+    val r = Probe.measure(spark, dir, "scan_filter")
+    assert(r.rows == SparkEntry.queries("scan_filter")(spark, dir).count(), s"$r")
+  }
 }

@@ -15,7 +15,8 @@ import org.scalatest.funsuite.AnyFunSuite
   * Every build-once fixture goes through [[Memo]]: a memo map behind a lock
   * on its whole object serializes unrelated multi-second builds. Every
   * index table goes to disk through `graft.operators.IndexWriter`, which
-  * owns its encoding.
+  * owns its encoding. Every dev-tool timing goes through [[Probe]]'s loop:
+  * two timers disagree on what a run is.
   * No SparkSession: a source scan.
   */
 class SessionSiteSpec extends AnyFunSuite {
@@ -84,5 +85,13 @@ class SessionSiteSpec extends AnyFunSuite {
       field.findFirstIn(_).isDefined)
     assert(sites.isEmpty,
       s"mutable Map/Set fields in: ${sites.mkString(", ")}")
+  }
+
+  test("only Probe and Bench read System.nanoTime under src/main") {
+    val allowed = Set("Probe.scala", "Bench.scala")
+      .map(f => Paths.get("src/main/scala/graft", f))
+    val sites = sitesMatching("src/main/scala")(_.contains("nanoTime"))
+    assert(sites.toSet.subsetOf(allowed),
+      s"timers outside Probe and Bench: ${sites.filterNot(allowed).mkString(", ")}")
   }
 }
