@@ -38,12 +38,15 @@ object Probe {
 
   /** One run's record. `rows` counts the rows the run produced; `batches`
     * holds one `durationMs` map per micro-batch, in arrival order; it is
-    * empty for a batch query. `qe` is the execution that ran.
+    * empty for a batch query. `plan` is the formatted final plan that ran,
+    * kept as text: Spark deletes a shuffle's files only once nothing
+    * references its plan, so a run that held its QueryExecution would keep
+    * them on disk while the next runs write theirs.
     */
   final case class Run(constructMs: Double, analyzeMs: Double,
                        executeMs: Double, rows: Long, jobs: Long, stages: Long,
                        tasks: Long, shuffleWriteBytes: Long, spillBytes: Long,
-                       batches: Seq[Map[String, Long]])(val qe: QueryExecution) {
+                       batches: Seq[Map[String, Long]])(val plan: String) {
     def totalMs: Double = constructMs + analyzeMs + executeMs
 
     override def toString: String = {
@@ -133,7 +136,7 @@ object Probe {
       org.apache.spark.ListenerBusDrain(sc)
       Run((t1 - t0) / 1e6, (t2 - t1) / 1e6, (t3 - t2) / 1e6, rows, jobs.get,
         stages.get, tasks.get, shuffle.get, spill.get,
-        batches.asScala.toSeq)(qe)
+        batches.asScala.toSeq)(qe.explainString(FormattedMode))
     } finally {
       sc.removeSparkListener(sparkListener)
       spark.streams.removeListener(streamListener)
@@ -147,7 +150,7 @@ object Probe {
   def loop(spark: SparkSession, dir: String, name: String): Run = {
     val warmup = measure(spark, dir, name)
     println(s"$name warmup $warmup")
-    println(warmup.qe.explainString(FormattedMode))
+    println(warmup.plan)
     val runs = (1 to 3).map { i =>
       val r = measure(spark, dir, name)
       println(s"$name run$i $r")
